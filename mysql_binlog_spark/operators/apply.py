@@ -44,6 +44,10 @@ def filter_tables(
     Catalyst filter; the decode source additionally applies the same sets
     *inside* the decoder so excluded tables never pay row-decode cost
     (the reference's pushdown, see sources/binlog.py).
+
+    Never run it on a decode made with ``read_binlog(null_cols=...)``
+    that nulls ``schema_name``/``table_name`` (the replay drivers' decode
+    does): ``isin`` over NULL admits nothing, so every row is dropped.
     """
     key = F.concat_ws(".", F.col("schema_name"), F.col("table_name"))
     if include is not None:

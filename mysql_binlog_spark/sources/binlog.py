@@ -17,9 +17,11 @@ before the start file are pruned from the file listing itself.
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +52,7 @@ from ..wire import (
     decode_chunk,
     table_admitted,
 )
+from .vector import materialize_column
 
 ZERO_DATE = "0000-00-00"  # decoded sentinel → NULL at the DataFrame layer
 
@@ -162,18 +165,18 @@ META_COLS = [
 NULLABLE_META = frozenset({"event_ts", "schema_name", "table_name", "gtid"})
 
 
-def _load_binary(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    if isinstance(paths, str):
-        return spark.read.format("binaryFile").load(paths)
-    return spark.read.format("binaryFile").load(paths)
-
-
 def _local_path(path: str) -> str:
     if path.startswith("file:"):
         path = path[5:]
         if path.startswith("//"):  # file://host/...
             path = path[path.index("/", 2):]
     return path
+
+
+def _chunk_paths(chunk_glob: str | list[str]) -> list[str]:
+    if isinstance(chunk_glob, list):
+        return sorted(chunk_glob)
+    return sorted(glob.glob(_local_path(chunk_glob)))
 
 
 def _paths_df(spark: SparkSession, paths: list[str], n_slices: int) -> DataFrame:
@@ -227,12 +230,7 @@ def discover_tables(
 
     from ..wire import CRC_LEN, HEADER_LEN, TABLE_MAP_EVENT, _parse_table_map
 
-    if isinstance(chunk_glob, list):
-        paths = sorted(chunk_glob)
-    else:
-        import glob as _glob
-
-        paths = sorted(_glob.glob(_local_path(chunk_glob)))
+    paths = _chunk_paths(chunk_glob)
     n_slices = max(1, min(len(paths),
                           spark.sparkContext.defaultParallelism))
     files = _paths_df(spark, paths, n_slices)
@@ -332,11 +330,8 @@ def read_binlog(
     start_lsn: tuple[str, int] | None = None,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
     verify_crc: bool = False,
-    files_df: DataFrame | None = None,
     before_mode: str = "full",
-    task_side_read: bool = True,
     tolerate_truncation: bool = False,
-    vectorize: bool = True,
     on_error: str = "raise",
     null_cols: frozenset[str] | set[str] | None = None,
 ) -> DataFrame:
@@ -353,18 +348,12 @@ def read_binlog(
     ``before_*`` / ``after_*`` image columns.  ``image_cols`` defaults to
     the union discovered from TABLE_MAP frames of the included tables.
 
-    ``task_side_read``: open the chunk inside the Python task instead of
-    shipping its bytes through the JVM scan + Arrow IPC (the content is
-    the whole data volume — reading it task-side halves the decode path's
-    data movement).  Requires chunks readable from every worker (local FS
-    here; NFS/fuse mounts on a cluster — set False to route bytes through
-    Spark's Hadoop FS layer instead).
-
-    ``vectorize``: use the offset-scan kernels + numpy/Arrow column
-    gathers when every included table's stored columns allow it (decided
-    per chunk from a TABLE_MAP pre-scan; chunks with decimal / rendered
-    temporal / ENUM / latin1 / FLOAT columns fall back to the compiled
-    value loops automatically).
+    Each task opens its chunks itself (the JVM scan would add its file
+    listing and ship the whole data volume through Arrow IPC), so chunks
+    must be readable from every worker: local FS here, NFS/fuse mounts
+    on a cluster.  Each chunk is decoded by
+    ``wavefront.decode_chunk_vectorized``, which picks the wavefront or
+    the compiled value loops for it.
 
     ``null_cols``: emit these metadata columns as all-NULL instead of
     their decoded values — the output SCHEMA is unchanged, only the
@@ -399,49 +388,32 @@ def read_binlog(
                     image_cols.append((name, typ))
                     seen.add(name)
     ddl = decoded_schema_ddl(image_cols)
-    ts_cols = {n for n, t in image_cols if t == "timestamp"}
 
-    if files_df is not None:
-        files = files_df
-    elif task_side_read:
-        # path-list fast path: tasks read chunk bytes themselves, so the
-        # JVM binaryFile source would only contribute its (expensive)
-        # Hadoop file listing — ~40% of decode wall time at bench scale.
-        # Driver-side glob + an even repartition replaces it.
-        import glob as _glob
-
-        if isinstance(chunk_glob, list):
-            paths = sorted(chunk_glob)
-        else:
-            local = chunk_glob
-            if local.startswith("file:"):
-                local = local[5:]
-                if local.startswith("//"):
-                    local = local[local.index("/", 2):]
-            paths = sorted(_glob.glob(local))
-        # slice policy: every Python-runner task costs ~15-30ms of
-        # dispatch, so aim for ≥64MB of chunk bytes per task, floored at
-        # one wave (defaultParallelism) and capped at one file per task —
-        # at cluster scale (GB-sized chunks) this degenerates to
-        # one-task-per-file, at bench scale it avoids paying the task
-        # floor 3x over.  (Round 7 note: a 2-wave floor was measured and
-        # REJECTED — interleaved quiet-box A/B put one wave at 1.98s vs
-        # 2.32s for two waves on the 1200-chunk decode; extra waves only
-        # helped under external load, where the freed cores mask noise.)
-        total_bytes = 0
-        for p in paths:
-            try:
-                total_bytes += os.path.getsize(p)
-            except OSError:
-                pass
-        cores = spark.sparkContext.defaultParallelism
-        n_slices = max(1, min(
-            len(paths),
-            max(cores, -(-total_bytes // (64 * 1024 * 1024))),
-        ))
-        files = _paths_df(spark, paths, n_slices)
-    else:
-        files = _load_binary(spark, chunk_glob)
+    # tasks read chunk bytes themselves, so the JVM binaryFile source
+    # would only contribute its (expensive) Hadoop file listing — ~40% of
+    # decode wall time at bench scale; a driver-side glob replaces it.
+    paths = _chunk_paths(chunk_glob)
+    # slice policy: every Python-runner task costs ~15-30ms of dispatch,
+    # so aim for ≥64MB of chunk bytes per task, floored at one wave
+    # (defaultParallelism) and capped at one file per task — at cluster
+    # scale (GB-sized chunks) this degenerates to one-task-per-file, at
+    # bench scale it avoids paying the task floor 3x over.  (Round 7
+    # note: a 2-wave floor was measured and REJECTED — interleaved
+    # quiet-box A/B put one wave at 1.98s vs 2.32s for two waves on the
+    # 1200-chunk decode; extra waves only helped under external load,
+    # where the freed cores mask noise.)
+    total_bytes = 0
+    for p in paths:
+        try:
+            total_bytes += os.path.getsize(p)
+        except OSError:
+            pass
+    cores = spark.sparkContext.defaultParallelism
+    n_slices = max(1, min(
+        len(paths),
+        max(cores, -(-total_bytes // (64 * 1024 * 1024))),
+    ))
+    files = _paths_df(spark, paths, n_slices)
     if start_lsn is not None:
         # file-level pruning before any decode (reference's start-pos skip,
         # EventsIterator.php:207-215, lifted to scan pruning)
@@ -453,63 +425,31 @@ def read_binlog(
         start_file, start_pos = "", 0
 
     col_names = [n for n, _ in image_cols]
-    converters = [_make_converter(t) for _, t in image_cols]
-    pa_types = [_pa_type(t) for _, t in image_cols]
+    type_names = [t for _, t in image_cols]
 
     def decode(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Arrow-native emission: column lists from the compiled decoder go
-        # straight into pa.array() — no pandas object Series in between.
-        import numpy as np
-
-        from .vector import materialize_column
+        # Arrow-native emission: decoded columns go straight into Arrow
+        # arrays — no pandas object Series in between.
         from .wavefront import decode_chunk_vectorized
 
         for rb in it:
-            paths = rb.column(rb.schema.get_field_index("path")).to_pylist()
-            if not task_side_read:
-                contents = rb.column(rb.schema.get_field_index("content"))
-            for row_i, path in enumerate(paths):
+            for path in rb.column(0).to_pylist():
                 name = os.path.basename(path)
                 sp = start_pos if name == start_file else 0
-                if task_side_read:
-                    local = path
-                    if local.startswith("file:"):
-                        local = local[5:]
-                        if local.startswith("//"):  # file://host/...
-                            local = local[local.index("/", 2):]
-                    with open(local, "rb") as fh:
-                        data = fh.read()
-                else:
-                    data = contents[row_i].as_py()
+                with open(_local_path(path), "rb") as fh:
+                    data = fh.read()
                 try:
-                    batch, kinds = (
-                        decode_chunk_vectorized(
-                            data,
-                            image_cols=col_names,
-                            include=include,
-                            exclude=exclude,
-                            start_pos=sp,
-                            verify_crc=verify_crc,
-                            before_mode=before_mode,
-                            tolerate_truncation=tolerate_truncation,
-                            start_after_gtid=start_after_gtid,
-                        )
-                        if vectorize
-                        else (None, None)
+                    batch, kinds = decode_chunk_vectorized(
+                        data,
+                        image_cols=col_names,
+                        include=include,
+                        exclude=exclude,
+                        start_pos=sp,
+                        verify_crc=verify_crc,
+                        before_mode=before_mode,
+                        tolerate_truncation=tolerate_truncation,
+                        start_after_gtid=start_after_gtid,
                     )
-                    if batch is None:
-                        batch = decode_chunk(
-                            data,
-                            include=include,
-                            exclude=exclude,
-                            start_pos=sp,
-                            verify_crc=verify_crc,
-                            image_cols=col_names,
-                            before_mode=before_mode,
-                            text_as_bytes=True,
-                            tolerate_truncation=tolerate_truncation,
-                            start_after_gtid=start_after_gtid,
-                        )
                 except Exception:
                     if on_error == "skip":
                         # quarantine: the chunk is the atomicity unit —
@@ -549,29 +489,37 @@ def read_binlog(
                     pa.array(m["batch_seq"], pa.int32()),
                     nstr("gtid", lambda: take(m["ev_gtid"])),
                 ]
-                names = [n_ for n_, _ in META_COLS]
-                if kinds is not None:
-                    np_buf = np.frombuffer(data, dtype=np.uint8)
-                    for side, cols_ in (("before", batch.before_cols),
-                                        ("after", batch.after_cols)):
-                        for j, c in enumerate(col_names):
-                            arrays.append(
-                                materialize_column(
-                                    np_buf, kinds.get(c), cols_[j], n,
-                                    pa_types[j],
-                                )
-                            )
-                            names.append(f"{side}_{c}")
-                else:
-                    for side, cols_ in (("before", batch.before_cols),
-                                        ("after", batch.after_cols)):
-                        for j, c in enumerate(col_names):
-                            arrays.append(converters[j](cols_[j]))
-                            names.append(f"{side}_{c}")
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
+                arrays += image_arrays(data, batch, kinds, type_names)
+                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    cols_in = ["path"] if task_side_read else ["path", "content"]
-    return files.select(*cols_in).mapInArrow(decode, schema=ddl)
+    out_names = [n for n, _ in META_COLS]
+    out_names += [f"{side}_{c}" for side in ("before", "after")
+                  for c in col_names]
+    return files.select("path").mapInArrow(decode, schema=ddl)
+
+
+def image_arrays(
+    data: bytes, batch, kinds: dict | None, type_names: list[str]
+) -> list[pa.Array]:
+    """The ``before_*`` then ``after_*`` Arrow arrays of one chunk's
+    ``decode_chunk_vectorized(data, ...)`` result, on either path:
+    wavefront descriptors (``kinds`` set) or value-loop values."""
+    if kinds is not None:
+        np_buf = np.frombuffer(data, dtype=np.uint8)
+        pa_types = [_pa_type(t) for t in type_names]
+        return [
+            materialize_column(
+                np_buf, kinds.get(c), col, len(batch), pa_types[j]
+            )
+            for cols_ in (batch.before_cols, batch.after_cols)
+            for j, (c, col) in enumerate(zip(batch.columns, cols_))
+        ]
+    converters = [_make_converter(t) for t in type_names]
+    return [
+        converters[j](col)
+        for cols_ in (batch.before_cols, batch.after_cols)
+        for j, col in enumerate(cols_)
+    ]
 
 
 def image_view(df: DataFrame, image_cols: list[str]) -> DataFrame:

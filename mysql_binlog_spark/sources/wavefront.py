@@ -1,30 +1,33 @@
-"""Wavefront decoder: numpy-vectorized row scanning ACROSS events.
+"""Row decode entry: one frame walk, then one of two row kernels.
 
-The compiled offset loops (wire.py) still interpret ~1.4µs of Python per
-row.  This module removes the per-row Python entirely: since every
-included row event's first row offset is known from a cheap frame walk,
-row ``r`` of EVERY event can be decoded simultaneously — one numpy
-"wavefront" per row index, vector width = number of events.  Each
-iteration advances a cursor vector through one row image per event using
-byte gathers (length prefixes, null bitmaps) and records the same packed
-int64 descriptors the offset-scan path uses ((offset << 32) | length for
-varlen, plain offset for fixed, -1 for NULL); materialization is shared
-(sources/vector.py).
+``decode_chunk_vectorized`` decodes a chunk on one of two paths:
 
-Measured ~6-8x faster than the compiled per-row loops on the bench
-transcripts shape (64-row events).  Wall time scales with
-max-rows-per-event × n_columns numpy calls, so chunks with very FEW, very
-LONG events degrade — the entry point falls back to the offset-scan path
-below ``min_events`` included row events.  (MySQL caps row events at
-binlog-row-event-max-size ≈ 8KB by default, so real streams are
-many-small-events shaped.)
+* **Wavefront.**  ``_fast_scan`` walks the frame size chain once and
+  turns everything else (event types, table resolution, include/exclude,
+  start_pos, GTID attribution and GTID-set resume, FULL-image bitmap
+  checks, per-event metadata) into numpy masks and gathers over the
+  collected frame offsets; CRC is checked per frame inside the walk.
+  ``_finish_wavefront`` then decodes row ``r`` of EVERY included event at
+  once — one numpy "wavefront" per row index, vector width = number of
+  events.  Each iteration advances a cursor vector through one row image
+  per event with byte gathers (length prefixes, null bitmaps) and records
+  packed int64 descriptors ((offset << 32) | length for varlen, plain
+  offset for fixed, -1 for NULL) that sources/vector.py turns into Arrow
+  arrays.  No per-row Python.
+* **Value loops.**  ``wire.decode_chunk``'s exec-compiled per-event row
+  loops, the sequential reference the tests compare against.  They take
+  chunks with fewer than ``WAVEFRONT_MIN_ROW_EVENTS`` row events (numpy
+  call overhead does not amortize over a narrow wavefront), stored
+  columns that need per-value Python (decimals, rendered temporals,
+  ENUM/SET, latin1, FLOAT), and the shapes the walk does not vectorize
+  (table_id remapped mid-chunk, 251+ columns, a row event before its
+  TABLE_MAP, chunks of 2 GiB or more).
 
-Same correctness surface as decode_chunk: include/exclude pushdown before
-row decode, start-position skip, CRC verify, FULL-image validation,
-truncation policy, update before/after pairing with before_mode.
-Malformed streams fail loudly: gathers past the buffer raise IndexError
-and a cursor that does not land exactly on each event's end raises
-ValueError (desync check, stricter than the sequential decoder).
+Both paths give the same rows.  The walk runs first on every chunk, so
+frame errors (size, truncation, CRC) are raised before any row-level
+error.  Malformed streams fail loudly on the wavefront: gathers past the buffer raise IndexError and a cursor
+that does not land exactly on each event's end raises ValueError (desync
+check, stricter than the value loops).
 """
 
 from __future__ import annotations
@@ -53,13 +56,22 @@ from ..wire import (
     _DECODER_CACHE,
     _parse_table_map,
     _varlen_prefix,
+    decode_chunk,
     format_gtid,
     normalize_gtid_resume,
-    read_lenenc,
+    offset_scannable,
     table_admitted,
+    vector_kind,
 )
 
-MIN_WAVEFRONT_EVENTS = 16
+# Row events per chunk from which the wavefront beats the value loops.
+# Measured on one core, decode + Arrow emission, best of 15 runs, on
+# perfbench load-generator chunks (before_mode='delete_only'): the
+# crossover is at ~170-220 row events on the update-heavy tail mix (~2.4
+# rows per event) and ~250-450 on the insert-heavy backfill mix (~1.6),
+# i.e. about 400-600 rows either way.  Below it the wavefront's fixed
+# numpy cost dominates: 3-5x the value loops' cost under 30 row events.
+WAVEFRONT_MIN_ROW_EVENTS = 256
 
 
 # ------------------------------------------------------------- kernel codegen
@@ -210,144 +222,6 @@ def _compile_wavefront(t: TableSchema, columns: list[str], mode: str):
 
 # ------------------------------------------------------------------ decode
 
-def decode_chunk_wavefront(
-    data: bytes,
-    image_cols: list[str],
-    include: set[tuple[str, str]] | None = None,
-    exclude: set[tuple[str, str]] | None = None,
-    start_pos: int = 0,
-    verify_crc: bool = False,
-    before_mode: str = "full",
-    tolerate_truncation: bool = False,
-    start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
-) -> DecodedBatch:
-    """decode_chunk twin returning offsets-mode columns as numpy int64
-    arrays, produced by the wavefront kernels.  Falls back to
-    decode_chunk(value_mode='offsets') for chunks with fewer than
-    MIN_WAVEFRONT_EVENTS included row events (vector width too small to
-    amortize numpy call overhead)."""
-    assert before_mode in ("full", "delete_only", "none")
-    mv = memoryview(data)
-    assert bytes(mv[:4]) == MAGIC, "bad binlog magic"
-    np_buf = np.frombuffer(data, dtype=np.uint8)
-    out = DecodedBatch(image_cols, value_mode="offsets")
-    tables: dict[int, TableSchema] = {}
-    verdicts: dict[int, object] = {}  # table_id → (t, full_bm) | False
-    groups: dict = {}  # (id(t), etype) → [t, etype, ev_idx[], starts[], ends[]]
-    n_included = 0
-    cur_gtid: str | None = None  # set by GTID frame, cleared by XID
-    skip_txn = False  # inside a transaction at/before start_after_gtid
-    resume_map = normalize_gtid_resume(start_after_gtid)
-    off = 4
-    total = len(data)
-    unpack = struct.unpack_from
-    while off + HEADER_LEN <= total:
-        etype = mv[off + 4]
-        size = unpack("<I", mv, off + 9)[0]
-        if size < HEADER_LEN + CRC_LEN:
-            # a frame can never be smaller than header+CRC; size 0 would
-            # stall the walk forever — classify as malformed, not a loop
-            raise ValueError(
-                f"malformed frame at offset {off}: header claims {size} "
-                f"bytes (minimum is {HEADER_LEN + CRC_LEN})"
-            )
-        if off + size > total:
-            if tolerate_truncation:
-                break
-            raise TruncatedFrameError(
-                f"truncated frame at offset {off}: header claims {size} "
-                f"bytes, {total - off} remain "
-                "(pass tolerate_truncation=True to stop at the last "
-                "complete frame)"
-            )
-        body_end = off + size - CRC_LEN
-        if verify_crc:
-            want = unpack("<I", mv, body_end)[0]
-            got = zlib.crc32(mv[off:body_end]) & 0xFFFFFFFF
-            if want != got:
-                raise CrcMismatchError(f"CRC mismatch at offset {off}")
-        out.n_events += 1
-        out.n_bytes += size
-        if etype == TABLE_MAP_EVENT:
-            t = _parse_table_map(mv[off + HEADER_LEN : body_end])
-            tables[t.table_id] = t
-            verdicts.pop(t.table_id, None)
-            out.tables_seen[(t.schema, t.table)] = t
-        elif etype in ACTION_BY_EVENT and off >= start_pos and not skip_txn:
-            table_id = unpack("<Q", mv, off + HEADER_LEN)[0] & 0xFFFFFFFFFFFF
-            v = verdicts.get(table_id)
-            if v is None:
-                t = tables.get(table_id)
-                if t is None:
-                    raise ValueError(
-                        f"row event for unknown table id {table_id}"
-                    )
-                if not table_admitted(t.schema, t.table, include, exclude):
-                    verdicts[table_id] = v = False
-                else:
-                    n_ = len(t.columns)
-                    nbb_ = (n_ + 7) // 8
-                    full = bytes([0xFF] * (nbb_ - 1)) + bytes(
-                        [(1 << (n_ - 8 * (nbb_ - 1))) - 1]
-                    )
-                    verdicts[table_id] = v = (t, nbb_, full)
-            if v is not False:
-                t, nbb_, full = v
-                p = off + HEADER_LEN + 10
-                ccount, p = read_lenenc(mv, p)
-                assert ccount == len(t.columns)
-                n_bm = 2 if etype == UPDATE_ROWS_V2 else 1
-                for _ in range(n_bm):
-                    if bytes(mv[p : p + nbb_]) != full:
-                        raise ValueError(
-                            f"partial row image in {t.schema}.{t.table} "
-                            "(binlog_row_image != FULL is not supported)"
-                        )
-                    p += nbb_
-                g = groups.get((id(t), etype))
-                if g is None:
-                    groups[(id(t), etype)] = g = [t, etype, [], [], []]
-                g[2].append(n_included)
-                g[3].append(p)
-                g[4].append(body_end)
-                out.ev_pos.append(off)
-                out.ev_server.append(unpack("<I", mv, off + 5)[0])
-                out.ev_ts.append(unpack("<I", mv, off)[0])
-                out.ev_schema.append(t.schema)
-                out.ev_table.append(t.table)
-                out.ev_action.append(ACTION_BY_EVENT[etype])
-                out.ev_gtid.append(cur_gtid)
-                n_included += 1
-        elif etype == GTID_EVENT:
-            # txn lineage tag, mirrors decode_chunk exactly (3-kernel
-            # parity): set until the closing XID; NULL on GTID-less logs
-            p0 = off + HEADER_LEN
-            gno = unpack("<q", mv, p0 + 17)[0]
-            cur_gtid = format_gtid(bytes(mv[p0 + 1 : p0 + 17]), gno)
-            if resume_map is not None:
-                # mirrors decode_chunk: per-SID threshold on the fixed
-                # 36-char uuid prefix (GTID-set resume, round 6)
-                thr = resume_map.get(cur_gtid[:36])
-                skip_txn = thr is not None and gno <= thr
-        elif etype == XID_EVENT:
-            cur_gtid = None
-            skip_txn = False
-        off += size
-
-    if n_included < MIN_WAVEFRONT_EVENTS:
-        from ..wire import decode_chunk
-
-        return decode_chunk(
-            data, include=include, exclude=exclude, start_pos=start_pos,
-            verify_crc=verify_crc, image_cols=image_cols,
-            before_mode=before_mode,
-            tolerate_truncation=tolerate_truncation, value_mode="offsets",
-            start_after_gtid=start_after_gtid,
-        )
-
-    return _finish_wavefront(np_buf, out, groups, n_included, before_mode)
-
-
 def _finish_wavefront(
     np_buf: np.ndarray,
     out: DecodedBatch,
@@ -355,8 +229,8 @@ def _finish_wavefront(
     n_included: int,
     before_mode: str,
 ) -> DecodedBatch:
-    """Shared row-decode tail: run the compiled wavefront kernels over the
-    collected (table, etype) groups and scatter the per-iteration
+    """Row decode after the walk: run the compiled wavefront kernels over
+    ``_fast_scan``'s (table, etype) groups and scatter the per-iteration
     descriptor vectors into row-order columns."""
     n_slots = len(out.columns)
     counts = np.zeros(n_included, dtype=np.int64)
@@ -369,10 +243,7 @@ def _finish_wavefront(
         else:
             mode = "single"
         fn = _compile_wavefront(t, out.columns, mode)
-        g_counts, hist, s1, s2 = fn(
-            np_buf, np.asarray(starts, np.int64), np.asarray(ends, np.int64)
-        )
-        ev_idx = np.asarray(ev_idx, np.int64)
+        g_counts, hist, s1, s2 = fn(np_buf, starts, ends)
         counts[ev_idx] = g_counts
         # map stored images to before/after sides
         if etype == UPDATE_ROWS_V2:
@@ -406,7 +277,7 @@ def _finish_wavefront(
     return out
 
 
-# ---------------------------------------------------- single-walk fast path
+# ------------------------------------------------------------- frame walk
 
 def _schema_sig(t: TableSchema) -> tuple:
     return (
@@ -420,15 +291,13 @@ def _schema_sig(t: TableSchema) -> tuple:
 
 
 def _kinds_from_maps(
-    maps: list, include, exclude, col_names: list[str], data_len: int
+    maps: list, include, exclude, col_names: list[str]
 ) -> dict | None:
-    """chunk_vector_kinds over ALREADY-PARSED table maps — the decision
-    logic without its own frame walk (round 7: the kinds pre-scan used to
-    re-walk every frame header, ~20% of kernel wall)."""
-    from ..wire import offset_scannable, vector_kind
-
-    if data_len >= 2**31:
-        return None  # int32 offset materialization limit (vector.py)
+    """Per-column ``vector_kind`` of the stored columns over the chunk's
+    admitted table maps, or None when the chunk needs the value loops:
+    an admitted table is not ``offset_scannable`` for the stored columns,
+    or two tables disagree on a shared column's kind (e.g. int width
+    across schema versions)."""
     kinds: dict[str, tuple] = {}
     stored = set(col_names)
     for t in maps:
@@ -448,38 +317,49 @@ def _kinds_from_maps(
 
 
 _U32 = struct.Struct("<I").unpack_from
+_MIN_FRAME = HEADER_LEN + CRC_LEN
 
 
 def _fast_scan(
     data: bytes,
-    mv: memoryview,
     np_buf: np.ndarray,
     out: DecodedBatch,
     include,
     exclude,
+    start_pos: int,
+    verify_crc: bool,
     tolerate_truncation: bool,
+    resume: dict[str, int] | None,
 ):
-    """Vectorized frame classification (round 7, guide §1.2 per-task
-    work): the sequential walk is reduced to the irreducible size-chain
-    (ONE unpack per frame); event typing, table-id resolution, GTID
-    attribution, bitmap validation and per-event metadata all become
-    numpy gathers over the collected offset vector.  Returns
-    (groups, n_included, maps) with ``out``'s event metadata filled, or
-    None when the chunk needs the general walk (mid-chunk table_id
-    remap with a different schema, ≥251-column tables, a row event
-    preceding its TABLE_MAP)."""
+    """The wavefront's one frame walk.  The sequential part is the
+    size chain alone (one unpack per frame, plus ``zlib.crc32`` per frame
+    under ``verify_crc``, so frame errors surface in stream order); event
+    typing, table-id resolution, include/exclude, start_pos, GTID
+    attribution and GTID-set resume, bitmap validation and per-event
+    metadata are numpy masks and gathers over the collected offsets.
+
+    Returns ``(groups, n_included, kinds)`` with ``out``'s event metadata
+    filled, or None when the chunk belongs on the value loops: fewer than
+    WAVEFRONT_MIN_ROW_EVENTS row events, 2 GiB or more, a stored column
+    without a ``vector_kind``, a table_id remapped mid-chunk, a table of
+    251 or more columns, or a row event before its TABLE_MAP.  None is
+    only returned after the walk, so every complete frame's size (and
+    CRC, if asked) has been checked by then."""
     total = len(data)
+    mv = memoryview(data)
     offs_l: list[int] = []
     append = offs_l.append
     u32 = _U32
+    crc32 = zlib.crc32
     pos = 4
-    min_size = HEADER_LEN + CRC_LEN
-    while pos + HEADER_LEN <= total:
+    last_header = total - HEADER_LEN
+    while pos <= last_header:
         size = u32(data, pos + 9)[0]
-        if size < min_size:
+        if size < _MIN_FRAME:
+            # size 0 would stall the walk forever: malformed, not a loop
             raise ValueError(
                 f"malformed frame at offset {pos}: header claims {size} "
-                f"bytes (minimum is {min_size})"
+                f"bytes (minimum is {_MIN_FRAME})"
             )
         if pos + size > total:
             if tolerate_truncation:
@@ -490,19 +370,30 @@ def _fast_scan(
                 "(pass tolerate_truncation=True to stop at the last "
                 "complete frame)"
             )
+        if verify_crc:
+            body_end = pos + size - CRC_LEN
+            if crc32(mv[pos:body_end]) != u32(data, body_end)[0]:
+                raise CrcMismatchError(f"CRC mismatch at offset {pos}")
         append(pos)
         pos += size
 
     offs = np.asarray(offs_l, np.int64)
+    etypes = np_buf[offs + 4]
+    row_mask = (
+        (etypes == WRITE_ROWS_V2)
+        | (etypes == UPDATE_ROWS_V2)
+        | (etypes == DELETE_ROWS_V2)
+    )
+    if (int(np.count_nonzero(row_mask)) < WAVEFRONT_MIN_ROW_EVENTS
+            or total >= 2**31):
+        # ≥ 2 GiB: materialize_column addresses the chunk with 31-bit
+        # offsets (descriptor high bits, int32 Arrow offsets)
+        return None
     out.n_events = len(offs)
-    if not len(offs):
-        out.n_bytes = 0
-        return {}, 0, []
     sizes = np_buf[offs + 9].astype(np.int64)
     for k in (10, 11, 12):
         sizes |= np_buf[offs + k].astype(np.int64) << (8 * (k - 9))
     out.n_bytes = int(sizes.sum())
-    etypes = np_buf[offs + 4]
 
     # table maps, in order (few per chunk)
     maps: list[TableSchema] = []
@@ -518,32 +409,51 @@ def _fast_scan(
             tm_by_id[t.table_id] = t
             tm_first_off[t.table_id] = o
         elif _schema_sig(prev) != _schema_sig(t):
-            return None  # mid-chunk remap of one table_id → general walk
+            return None  # mid-chunk remap of one table_id
+    kinds = _kinds_from_maps(maps, include, exclude, out.columns)
+    if kinds is None:
+        return None
 
-    row_mask = (
-        (etypes == WRITE_ROWS_V2)
-        | (etypes == UPDATE_ROWS_V2)
-        | (etypes == DELETE_ROWS_V2)
-    )
-    ridx = np.nonzero(row_mask)[0]
-    if not len(ridx):
-        return {}, 0, maps
-    roffs = offs[ridx]
-    rsizes = sizes[ridx]
-    retypes = etypes[ridx]
+    roffs = offs[row_mask]
+    rsizes = sizes[row_mask]
+    retypes = etypes[row_mask]
+    # GTID attribution: a row's txn tag is the last GTID frame before it,
+    # unless an XID frame intervened (clears the tag).  One searchsorted
+    # over the GTID+XID frames; slot 0 stands for "none before the row".
+    gmask = etypes == GTID_EVENT
+    cmask = gmask | (etypes == XID_EVENT)
+    ctl_is_g = np.concatenate(([False], gmask[cmask]))
+    ci = np.searchsorted(offs[cmask], roffs, side="right")
+    has_g = ctl_is_g[ci]
+    gi = (np.cumsum(ctl_is_g) - 1)[ci]  # index into gstr where has_g
+    gstr: list[str] = []
+    gskip: list[bool] = []
+    for o in offs[gmask].tolist():
+        p0 = o + HEADER_LEN
+        gno = struct.unpack_from("<q", data, p0 + 17)[0]
+        g = format_gtid(bytes(mv[p0 + 1 : p0 + 17]), gno)
+        gstr.append(g)
+        if resume is not None:
+            # GTID-set resume: per-SID threshold on the 36-char uuid
+            thr = resume.get(g[:36])
+            gskip.append(thr is not None and gno <= thr)
+
+    # start_pos and resume skip before any table lookup, like the
+    # sequential walk: a skipped event never needs its TABLE_MAP
+    keep = roffs >= start_pos
+    if gskip:
+        keep &= ~(has_g & np.asarray(gskip)[gi])
     tid = np_buf[roffs + HEADER_LEN].astype(np.int64)
     for k in range(1, 6):
         tid |= np_buf[roffs + HEADER_LEN + k].astype(np.int64) << (8 * k)
-
-    keep = np.ones(len(ridx), bool)
     table_of: dict[int, TableSchema] = {}
-    for u in np.unique(tid).tolist():
+    for u in np.unique(tid[keep]).tolist():
         t = tm_by_id.get(u)
         if t is None:
             raise ValueError(f"row event for unknown table id {u}")
-        first_row = int(roffs[tid == u][0])
+        first_row = int(roffs[keep & (tid == u)][0])
         if first_row < tm_first_off[u]:
-            return None  # row before its TABLE_MAP → general walk
+            return None  # row before its TABLE_MAP
         if table_admitted(t.schema, t.table, include, exclude):
             table_of[u] = t
         else:
@@ -551,32 +461,12 @@ def _fast_scan(
     roffs, rsizes, retypes, tid = (
         roffs[keep], rsizes[keep], retypes[keep], tid[keep]
     )
+    gi, has_g = gi[keep], has_g[keep]
     n_included = len(roffs)
-    if not n_included:
-        return {}, 0, maps
 
-    # GTID attribution: a row's txn tag is the last GTID frame before it,
-    # unless an XID frame intervened (clears the tag) — two searchsorteds
-    goffs = offs[etypes == GTID_EVENT]
-    xoffs = offs[etypes == XID_EVENT]
-    if len(goffs):
-        gstr: list[str] = []
-        for o in goffs.tolist():
-            p0 = o + HEADER_LEN
-            gno = struct.unpack_from("<q", data, p0 + 17)[0]
-            gstr.append(format_gtid(bytes(mv[p0 + 1 : p0 + 17]), gno))
-        gi = np.searchsorted(goffs, roffs, side="right") - 1
-        xi = np.searchsorted(xoffs, roffs, side="right") - 1
-        last_g = np.where(gi >= 0, goffs[np.clip(gi, 0, None)], -1)
-        last_x = np.where(xi >= 0, xoffs[np.clip(xi, 0, None)], -2)
-        has_g = (gi >= 0) & (last_g > last_x)
-        gil = gi.tolist()
-        out.ev_gtid = [
-            gstr[g] if h else None for g, h in zip(gil, has_g.tolist())
-        ]
-    else:
-        out.ev_gtid = [None] * n_included
-
+    out.ev_gtid = [
+        gstr[g] if h else None for g, h in zip(gi.tolist(), has_g.tolist())
+    ]
     out.ev_pos = roffs.tolist()
     srv = np_buf[roffs + 5].astype(np.int64)
     for k in (6, 7, 8):
@@ -594,7 +484,7 @@ def _fast_scan(
     for u, t in table_of.items():
         cc = len(t.columns)
         if cc >= 251:
-            return None  # multi-byte lenenc column count → general walk
+            return None  # multi-byte lenenc column count
         nbb = (cc + 7) // 8
         full = bytes([0xFF] * (nbb - 1)) + bytes(
             [(1 << (cc - 8 * (nbb - 1))) - 1]
@@ -602,8 +492,7 @@ def _fast_scan(
         full_np = np.frombuffer(full, np.uint8)
         um = tid == u
         for et in (WRITE_ROWS_V2, UPDATE_ROWS_V2, DELETE_ROWS_V2):
-            m = um & (retypes == et)
-            ev_idx = np.nonzero(m)[0]
+            ev_idx = np.nonzero(um & (retypes == et))[0]
             if not len(ev_idx):
                 continue
             goffs_g = roffs[ev_idx]
@@ -631,7 +520,7 @@ def _fast_scan(
     out.ev_schema = [names[c][0] for c in sc]
     out.ev_table = [names[c][1] for c in sc]
     out.ev_action = [names[c][2] for c in sc]
-    return groups, n_included, maps
+    return groups, n_included, kinds
 
 
 def decode_chunk_vectorized(
@@ -644,65 +533,33 @@ def decode_chunk_vectorized(
     before_mode: str = "full",
     tolerate_truncation: bool = False,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
-) -> tuple[DecodedBatch | None, dict | None]:
-    """ONE-walk decode entry for read_binlog: frame scan, vectorization
-    decision and row decode share a single pass (round 7 — previously
-    ``chunk_vector_kinds`` walked every frame header and the wavefront
-    walk re-walked them all again).  Returns ``(batch, kinds)``;
-    ``(None, None)`` means the chunk's columns need the python-value
-    loops (caller runs ``decode_chunk`` in python mode).
+) -> tuple[DecodedBatch, dict | None]:
+    """Decode one chunk on whichever of the two row-decode paths suits
+    it; returns ``(batch, kinds)``.
 
-    Chunks needing sequential semantics (start_pos skip, GTID resume,
-    CRC verify) take the general wavefront walk — correctness identical,
-    just without the single-pass fusion."""
-    from ..wire import decode_chunk
-    from .vector import chunk_table_maps
-
-    fast = start_pos == 0 and start_after_gtid is None and not verify_crc
-
-    def general():
-        kinds = _kinds_from_maps(
-            chunk_table_maps(data), include, exclude, image_cols,
-            len(data),
-        )
-        if kinds is None:
-            return None, None
-        return (
-            decode_chunk_wavefront(
-                data, image_cols=image_cols, include=include,
-                exclude=exclude, start_pos=start_pos,
-                verify_crc=verify_crc, before_mode=before_mode,
-                tolerate_truncation=tolerate_truncation,
-                start_after_gtid=start_after_gtid,
-            ),
-            kinds,
-        )
-
-    if not fast:
-        return general()
+    Wavefront (``kinds`` maps each stored column to its ``vector_kind``):
+    the batch's image columns are int64 descriptor arrays for
+    ``sources.vector.materialize_column``.  Value loops (``kinds`` is
+    None): the batch is ``wire.decode_chunk(text_as_bytes=True)``'s,
+    value lists for the Arrow converters (``binlog.image_arrays``
+    handles both).  Same rows and metadata either way."""
     assert before_mode in ("full", "delete_only", "none")
-    mv = memoryview(data)
-    assert bytes(mv[:4]) == MAGIC, "bad binlog magic"
+    assert data[:4] == MAGIC, "bad binlog magic"
     np_buf = np.frombuffer(data, dtype=np.uint8)
-    out = DecodedBatch(image_cols, value_mode="offsets")
-    res = _fast_scan(
-        data, mv, np_buf, out, include, exclude, tolerate_truncation
+    out = DecodedBatch(image_cols)
+    scan = _fast_scan(
+        data, np_buf, out, include, exclude, start_pos, verify_crc,
+        tolerate_truncation, normalize_gtid_resume(start_after_gtid),
     )
-    if res is None:
-        return general()
-    groups, n_included, maps = res
-    kinds = _kinds_from_maps(maps, include, exclude, image_cols, len(data))
-    if kinds is None:
-        return None, None
-    if n_included < MIN_WAVEFRONT_EVENTS:
-        return (
-            decode_chunk(
-                data, include=include, exclude=exclude,
-                start_pos=start_pos, verify_crc=verify_crc,
-                image_cols=image_cols, before_mode=before_mode,
-                tolerate_truncation=tolerate_truncation,
-                value_mode="offsets", start_after_gtid=start_after_gtid,
-            ),
-            kinds,
-        )
-    return _finish_wavefront(np_buf, out, groups, n_included, before_mode), kinds
+    if scan is None:
+        return decode_chunk(
+            data, include=include, exclude=exclude, start_pos=start_pos,
+            # the walk above already checked every complete frame's CRC
+            verify_crc=False, image_cols=image_cols,
+            before_mode=before_mode,
+            tolerate_truncation=tolerate_truncation, text_as_bytes=True,
+            start_after_gtid=start_after_gtid,
+        ), None
+    groups, n_included, kinds = scan
+    return _finish_wavefront(np_buf, out, groups, n_included,
+                             before_mode), kinds

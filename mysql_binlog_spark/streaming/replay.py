@@ -24,14 +24,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.apply import last_writer
-from ..sources.binlog import image_view, read_binlog
+from ..sources.binlog import NULLABLE_META, image_view, read_binlog
 from ..table import LakeTable
 
-# Meta columns the apply path provably never reads (winners carry only
-# key + payload + LSN + action; lineage reads log_file/log_pos):
-# read_binlog emits them as all-NULL — same schema, ~300 MB less Arrow
-# IPC + JVM row conversion per 5.8 M events (guide §4).
-_PRUNED_META = frozenset({"event_ts", "schema_name", "table_name", "gtid"})
+# The apply path never reads these meta columns (winners carry only key +
+# payload + LSN + action; lineage reads log_file/log_pos), so it has
+# read_binlog emit them all-NULL: same schema, ~300 MB less Arrow IPC +
+# JVM row conversion per 5.8 M events (guide §4).
+_PRUNED_META = NULLABLE_META
 
 
 @dataclass
@@ -43,19 +43,11 @@ class ReplayStats:
         return sum(1 for e in self.epochs if not e.get("skipped"))
 
 
-def _epoch_winners(
-    table: LakeTable,
-    decoded,
-    include: list | None,
-    image_cols: list[str],
-    exclude: list | None = None,
-):
+def _epoch_winners(table: LakeTable, decoded, image_cols: list[str]):
     """The table-state-INDEPENDENT half of an epoch: decode (which
-    already applied the include/exclude filter IN-KERNEL — both replay
-    drivers build ``decoded`` with the same sets, so a second
-    ``filter_tables`` here would only re-test schema_name/table_name on
-    rows the kernel already admitted; round 7 removes it, which also
-    lets the decode null those columns, see ``read_binlog(null_cols)``)
+    already applied the include/exclude filter IN-KERNEL, so no
+    ``filter_tables`` here — it would drop every row of the decode, whose
+    schema_name/table_name are nulled, see ``read_binlog(null_cols)``)
     → image → per-key winners.  Safe to run ahead of the previous
     epoch's merge/commit (see replay_batch's one-deep pipeline)."""
     df = decoded
@@ -75,12 +67,10 @@ def _apply_epoch(
     table: LakeTable,
     decoded,
     epoch_id: str,
-    include: list | None,
     image_cols: list[str],
-    exclude: list | None = None,
     merge_mode: str = "cow",
 ) -> dict:
-    winners = _epoch_winners(table, decoded, include, image_cols, exclude)
+    winners = _epoch_winners(table, decoded, image_cols)
     return table.merge_into(spark, winners, epoch_id, mode=merge_mode)
 
 
@@ -188,7 +178,7 @@ def replay_batch(
             else [f.name[len("after_"):] for f in decoded.schema.fields
                   if f.name.startswith("after_")]
         )
-        w = _epoch_winners(table, decoded, include, cols, exclude)
+        w = _epoch_winners(table, decoded, cols)
         if materialize:
             w = w.persist()
             w.count()
@@ -308,8 +298,8 @@ def replay_stream(
                   if f.name.startswith("after_")]
         )
         stats.epochs.append(
-            _apply_epoch(spark, table, decoded, epoch_id, include, cols,
-                         exclude, merge_mode=merge_mode)
+            _apply_epoch(spark, table, decoded, epoch_id, cols,
+                         merge_mode=merge_mode)
         )
         if maintain_every and stats.applied % maintain_every == 0:
             table.maintain(spark)

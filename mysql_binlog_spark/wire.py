@@ -22,12 +22,11 @@ HEARTBEAT, WRITE/UPDATE/DELETE_ROWS v2; CRC32 trailers; optional
 metadata SIGNEDNESS / DEFAULT_CHARSET / COLUMN_NAME / ENUM_STR_VALUE /
 SET_STR_VALUE / SIMPLE_PRIMARY_KEY.
 
-Decode kernels (round 3): three interchangeable shapes — per-row value
-loops (any schema), offset-scan loops (packed int64 descriptors, no
-per-value objects), and the numpy wavefront decoder in
-sources/wavefront.py (zero per-row Python) — all exec-compiled per
-(table schema, union layout) and proven byte-identical by
-tests/test_wavefront.py.
+Row decode has two paths, both exec-compiled per (table schema, union
+layout): ``decode_chunk``'s per-event value loops here (any schema; the
+reference the tests compare against) and the numpy wavefront decoder in
+sources/wavefront.py (zero per-row Python), which picks between them per
+chunk; tests/test_wavefront.py proves them identical.
 """
 
 from __future__ import annotations
@@ -701,11 +700,10 @@ class DecodedBatch:
     __slots__ = (
         "ev_pos", "ev_server", "ev_ts", "ev_schema", "ev_table", "ev_action",
         "ev_gtid", "ev_cnt", "n_rows", "columns", "before_cols", "after_cols",
-        "n_events", "n_bytes", "tables_seen", "value_mode",
+        "n_events", "n_bytes", "tables_seen",
     )
 
-    def __init__(self, columns: list[str] | None = None,
-                 value_mode: str = "python"):
+    def __init__(self, columns: list[str] | None = None):
         self.ev_pos: list[int] = []
         self.ev_server: list[int] = []
         self.ev_ts: list[int] = []  # epoch seconds of header
@@ -716,23 +714,16 @@ class DecodedBatch:
         self.ev_cnt: list[int] = []
         self.n_rows = 0
         self.columns: list[str] = list(columns or [])
-        # python mode: lists of decoded values.  offsets mode: array('q')
-        # of per-value descriptors into the chunk buffer — fixed-width
-        # columns store the absolute byte offset, varlen columns pack
-        # (value_offset << 32) | byte_length, NULL is -1; numpy reads them
-        # zero-copy (sources/vector.py materializes the Arrow arrays).
-        if value_mode == "offsets":
-            from array import array
-
-            self.before_cols: list = [array("q") for _ in self.columns]
-            self.after_cols: list = [array("q") for _ in self.columns]
-        else:
-            self.before_cols = [[] for _ in self.columns]
-            self.after_cols = [[] for _ in self.columns]
+        # lists of decoded values; the wavefront (sources/wavefront.py)
+        # replaces them with int64 arrays of per-value descriptors into
+        # the chunk buffer — fixed-width columns store the absolute byte
+        # offset, varlen columns pack (value_offset << 32) | byte_length,
+        # NULL is -1 (sources/vector.py materializes the Arrow arrays).
+        self.before_cols: list = [[] for _ in self.columns]
+        self.after_cols: list = [[] for _ in self.columns]
         self.n_events = 0
         self.n_bytes = 0
         self.tables_seen: dict = {}
-        self.value_mode = value_mode
 
     def __len__(self) -> int:
         return self.n_rows
@@ -826,16 +817,16 @@ class DecodedBatch:
 
 # ---------------------------------------------------- vectorizable kinds
 #
-# The offset-scan decode path (sources/vector.py) records per-value BYTE
-# OFFSETS into the chunk buffer instead of decoding values in Python; a
-# numpy gather + Arrow from_buffers materializes each column in C.  Only
-# types whose wire bytes map to an Arrow buffer without per-value Python
-# qualify; the rest (string-rendered temporals, decimals, enums, latin1
-# conversion, FLOAT's reference rounding quirk, unsigned BIGINT→decimal)
-# fall back to the compiled value loops below.
+# The wavefront (sources/wavefront.py) records per-value BYTE OFFSETS into
+# the chunk buffer instead of decoding values in Python; a numpy gather +
+# Arrow from_buffers materializes each column in C (sources/vector.py).
+# Only types whose wire bytes map to an Arrow buffer without per-value
+# Python qualify; the rest (string-rendered temporals, decimals, enums,
+# latin1 conversion, FLOAT's reference rounding quirk, unsigned
+# BIGINT→decimal) take the compiled value loops below.
 
 def vector_kind(c: WireColumn) -> tuple | None:
-    """Materialization descriptor for the offset-scan path, or None if the
+    """Materialization descriptor for the wavefront, or None if the
     column requires per-value Python decode."""
     t = c.ctype
     if t in INT_TYPES:
@@ -1125,15 +1116,11 @@ def _compile_event_loop(
     return fn
 
 
-# ----------------------------------------------- compiled offset-scan loops
+# ------------------------------------------------ wavefront advance rules
 #
-# The offsets twin of the value loops: identical row walk, but instead of
-# decoding values it appends each value's absolute byte offset (and length
-# for varlen columns) into the CHUNK buffer — no per-value Python objects,
-# no per-event payload copy.  Columns are materialized afterwards with one
-# numpy gather + Arrow from_buffers per column (sources/vector.py).  Only
-# compiled when every *stored* column has a vector_kind; other columns in
-# the table advance by width only (cheaper than the value-skip path).
+# The wavefront (sources/wavefront.py) walks rows without decoding values:
+# stored columns record byte offsets into the chunk, every other column
+# only advances the cursor by its wire width.
 
 def _advance_width(c: WireColumn) -> int | None:
     """Constant byte width of column c's wire value, or None if varlen."""
@@ -1166,7 +1153,7 @@ def _advance_width(c: WireColumn) -> int | None:
 
 
 def offset_scannable(t: TableSchema, stored: set[str]) -> bool:
-    """True iff table t can run the offset-scan path for output columns
+    """True iff table t can run the wavefront for output columns
     ``stored``: stored columns need a vector_kind; every OTHER column —
     skipped, but still advanced over — needs a known advance rule (a
     fixed width or a supported varlen prefix).  An unknown type anywhere
@@ -1179,138 +1166,6 @@ def offset_scannable(t: TableSchema, stored: set[str]) -> bool:
         ):
             return False
     return True
-
-
-def _offset_image_lines(
-    t: TableSchema, slot: dict, prefix: str, store: bool, ind: str
-) -> list[str]:
-    n = len(t.columns)
-    nbb = (n + 7) // 8
-    L: list[str] = []
-    if nbb == 1:
-        L.append(f"{ind}nb = buf[off]; off += 1")
-    else:
-        L.append(
-            f"{ind}nb = int.from_bytes(buf[off:off+{nbb}], 'little'); "
-            f"off += {nbb}"
-        )
-    for i, c in enumerate(t.columns):
-        s = slot.get(c.name) if store else None
-        varlen = _advance_width(c) is None
-        # non-nullable columns never set their null-bitmap bit (the image
-        # bitmap covers every column but bits can only be 1 for nullable
-        # ones) — skip the per-row branch entirely
-        branch = c.nullable
-        if branch:
-            L.append(f"{ind}if nb & {1 << i}:")
-            L.append(f"{ind}    {prefix}{s}(-1)" if s is not None
-                     else f"{ind}    pass")
-            L.append(f"{ind}else:")
-            bi = ind + "    "
-        else:
-            bi = ind
-        if varlen:
-            lw = _varlen_prefix(c)
-            if lw == 1:
-                ln_expr = "buf[off]"
-            elif lw == 2:
-                ln_expr = "buf[off] | (buf[off+1] << 8)"
-            else:
-                ln_expr = f"int.from_bytes(buf[off:off+{lw}], 'little')"
-            if s is not None:
-                # one packed descriptor: (value offset << 32) | length
-                L.append(f"{bi}ln = {ln_expr}")
-                L.append(
-                    f"{bi}{prefix}{s}(((off + {lw}) << 32) | ln); "
-                    f"off += {lw} + ln"
-                )
-            else:
-                L.append(f"{bi}off += {lw} + ({ln_expr})")
-        else:
-            w = _advance_width(c)
-            if s is not None:
-                L.append(f"{bi}{prefix}{s}(off); off += {w}")
-            else:
-                L.append(f"{bi}off += {w}")
-    return L
-
-
-def _compile_offset_loop(t: TableSchema, columns: list[str], kind: str):
-    """Whole-event offset-scan loop.  Same signatures and output-list
-    protocol as the value loops (``_compile_event_loop``), but appends
-    int64 descriptors (see DecodedBatch) into array('q') columns instead
-    of decoded values; ``buf`` is the WHOLE chunk buffer and recorded
-    offsets are absolute into it.  Parse-skip images advance by width
-    only — no value work at all."""
-    sig = (
-        tuple(
-            (c.name, c.ctype, c.meta, c.nullable, c.signed, c.values, c.charset)
-            for c in t.columns
-        ),
-        tuple(columns),
-        kind,
-        "offsets",
-    )
-    fn = _DECODER_CACHE.get(sig)
-    if fn is not None:
-        return fn
-    from array import array
-
-    slot = {name: i for i, name in enumerate(columns)}
-    covered = {c.name for c in t.columns}
-    missing = [name for name in columns if name not in covered]
-    ns: dict = {"_T": array("q", [-1])}
-    args = {
-        "single": "outs", "pair": "bouts, aouts", "skip_then": "aouts",
-        "skip": "",
-    }[kind]
-    L = [f"def _loop(buf, off, end{', ' + args if args else ''}):"]
-
-    def bind(prefix: str, src: str) -> None:
-        for name in columns:
-            if name in covered:
-                L.append(f"    {prefix}{slot[name]} = {src}[{slot[name]}].append")
-
-    if kind == "single":
-        bind("a", "outs")
-    elif kind == "pair":
-        bind("b", "bouts")
-        bind("a", "aouts")
-    elif kind == "skip_then":
-        bind("a", "aouts")
-    L.append("    cnt = 0")
-    L.append("    while off < end:")
-    if kind == "single":
-        L += _offset_image_lines(t, slot, "a", True, "        ")
-    elif kind == "pair":
-        L += _offset_image_lines(t, slot, "b", True, "        ")
-        L += _offset_image_lines(t, slot, "a", True, "        ")
-    elif kind == "skip_then":
-        L += _offset_image_lines(t, slot, "s", False, "        ")
-        L += _offset_image_lines(t, slot, "a", True, "        ")
-    else:
-        L += _offset_image_lines(t, slot, "s", False, "        ")
-    L.append("        cnt += 1")
-    # a correct scan lands exactly on the event end; overshoot means a
-    # bad length prefix / width desynced the walk — fail loudly (same
-    # contract as the wavefront kernel's desync ValueError)
-    L.append("    if off != end:")
-    L.append("        raise ValueError('offset-scan row decode desync')")
-    if kind != "skip" and missing:
-        L.append("    _none = _T * cnt")  # array('q') repeat: one memcpy
-        for name in missing:
-            if kind == "pair":
-                L.append(f"    bouts[{slot[name]}].extend(_none)")
-                L.append(f"    aouts[{slot[name]}].extend(_none)")
-            elif kind == "single":
-                L.append(f"    outs[{slot[name]}].extend(_none)")
-            else:
-                L.append(f"    aouts[{slot[name]}].extend(_none)")
-    L.append("    return off, cnt")
-    exec("\n".join(L), ns)  # noqa: S102 - codegen from trusted schema
-    fn = ns["_loop"]
-    _DECODER_CACHE[sig] = fn
-    return fn
 
 
 def _parse_table_map(payload: memoryview) -> TableSchema:
@@ -1561,10 +1416,16 @@ def decode_chunk(
     before_mode: str = "full",
     tolerate_truncation: bool = False,
     text_as_bytes: bool = False,
-    value_mode: str = "python",
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
 ) -> DecodedBatch:
-    """Decode one binlog chunk file into a column-major batch.
+    """Decode one binlog chunk file into a column-major batch of values.
+
+    This is the sequential path: one walk over the frames, each included
+    row event decoded by its table's compiled value loop.  It is the
+    reference the wavefront (sources/wavefront.py) is tested against,
+    and the path that wavefront hands small chunks and non-vectorizable
+    schemas to.  ``text_as_bytes`` keeps utf-8 VARCHAR/BLOB values as
+    raw bytes for the Arrow sink (``_field_lines``).
 
     ``start_after_gtid`` = (sid uuid text, gno) or a GTID-SET dict
     ``{sid: gno, ...}`` (round 6 — the multi-source-replication resume
@@ -1588,32 +1449,17 @@ def decode_chunk(
     reads them — delete rows keep theirs, it IS the row image); 'none'
     parse-skips all before-images.  Skipping avoids the list appends and
     Arrow conversion for half the output columns.
-
-    ``value_mode='offsets'`` runs the offset-scan kernels: the output
-    column lists hold absolute byte offsets (+ lengths) into ``data``
-    instead of values — no per-value Python objects, no per-event payload
-    copy; sources/vector.py turns them into Arrow arrays with numpy
-    gathers.  Requires every stored column of every included table to
-    have a ``vector_kind`` (checked per table; ValueError otherwise —
-    callers pre-check with ``offset_scannable``).
     """
     assert before_mode in ("full", "delete_only", "none")
-    assert value_mode in ("python", "offsets")
     inc_parts = _filter_parts(include)
     exc_parts = _filter_parts(exclude)
-    offsets_mode = value_mode == "offsets"
-    if offsets_mode:
-        from array import array
-
-        mk_null = array("q", [-1]).__mul__  # NULL-image backfill template
-    else:
-        mk_null = [None].__mul__
+    mk_null = [None].__mul__
     mv = memoryview(data)
     assert bytes(mv[:4]) == MAGIC, "bad binlog magic"
     off = 4
     tables: dict[int, TableSchema] = {}
     decoders: dict[int, object] = {}
-    out = DecodedBatch(image_cols, value_mode=value_mode)
+    out = DecodedBatch(image_cols)
     fixed_union = image_cols is not None
     total = len(data)
     unpack = struct.unpack_from
@@ -1699,49 +1545,26 @@ def decode_chunk(
                     full = bytes([0xFF] * (nbb_ - 1)) + bytes(
                         [(1 << (n_ - 8 * (nbb_ - 1))) - 1]
                     )
-                    if offsets_mode:
-                        if not offset_scannable(t, set(out.columns)):
-                            raise ValueError(
-                                f"table {t.schema}.{t.table} has columns "
-                                "without a vector_kind; use "
-                                "value_mode='python'"
-                            )
-                        compile_ = (
-                            lambda k: _compile_offset_loop(t, out.columns, k)
-                        )
-                    else:
-                        compile_ = (
-                            lambda k: _compile_event_loop(
-                                t, out.columns, k, text_as_bytes
-                            )
-                            if k != "skip"
-                            else _compile_event_loop(t, out.columns, "skip")
-                        )
+                    cols = out.columns
                     decoders[table_id] = decs = (
                         t,
-                        compile_("single"),
-                        compile_("pair"),
-                        compile_("skip_then"),
-                        compile_("skip"),
+                        _compile_event_loop(t, cols, "single", text_as_bytes),
+                        _compile_event_loop(t, cols, "pair", text_as_bytes),
+                        _compile_event_loop(
+                            t, cols, "skip_then", text_as_bytes
+                        ),
+                        _compile_event_loop(t, cols, "skip"),
                         n_, nbb_, full,
                     )
             if decs is not False:
                 t, single, pair, skip_then, skip_all, n, nbb_, full = decs
                 ts = unpack("<I", mv, off)[0]
                 server_id = unpack("<I", mv, off + 5)[0]
-                if offsets_mode:
-                    # offsets are absolute → scan the chunk buffer in
-                    # place, no per-event payload copy at all
-                    payload = data
-                    p = off + HEADER_LEN + 10  # header + id/flags/extra
-                    plen = body_end
-                else:
-                    # bytes slice (one memcpy per included event), NOT a
-                    # memoryview: the row loop's string fields use
-                    # bytes.decode
-                    payload = data[off + HEADER_LEN : body_end]
-                    p = 6 + 2 + 2  # table_id + flags + extra-data len
-                    plen = len(payload)
+                # bytes slice (one memcpy per included event), NOT a
+                # memoryview: the row loop's string fields use bytes.decode
+                payload = data[off + HEADER_LEN : body_end]
+                p = 6 + 2 + 2  # table_id + flags + extra-data len
+                plen = len(payload)
                 ccount, p = read_lenenc(payload, p)
                 assert ccount == n
                 # columns-present bitmap(s): the decoder assumes FULL row

@@ -77,14 +77,13 @@ import tempfile  # noqa: E402
 
 lake = tempfile.mkdtemp(prefix="mbs_plan_lake_")
 t = LakeTable.create(lake, IMAGE_COLS[:6], ["conv_id", "turn_idx"], n_buckets=64)
-from mysql_binlog_spark.streaming.replay import _PRUNED_META  # noqa: E402
+from mysql_binlog_spark.sources.binlog import NULLABLE_META  # noqa: E402
 
 dec3 = read_binlog(spark, glob, image_cols=IMAGE_COLS,
                    include={("app", "transcripts")},
                    before_mode="delete_only",
-                   null_cols=_PRUNED_META)  # mirrors replay prepare()
-w = _epoch_winners(t, dec3, [("app", "transcripts")],
-                   [n for n, _ in IMAGE_COLS])
+                   null_cols=NULLABLE_META)  # mirrors replay prepare()
+w = _epoch_winners(t, dec3, [n for n, _ in IMAGE_COLS])
 save("apply_winners", w)
 
 # the fused single-pass epoch write input (round 7): winners normalized to

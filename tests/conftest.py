@@ -65,3 +65,18 @@ def assert_frames_match(spark_df, duck_df, name: str = "") -> None:
             f"{name}: value mismatch\nspark:\n{na[diff].head()}\n"
             f"oracle:\n{nb[diff].head()}"
         )
+
+
+def wavefront(data: bytes, image_cols: list[str], **kw):
+    """The wavefront decode path at any width, tiny test chunks included:
+    ``decode_chunk_vectorized`` with its row-event threshold lifted.
+    Returns ``(batch, kinds)``; asserts the chunk stayed on the wavefront
+    (``kinds`` is None only on the value-loop path)."""
+    from unittest import mock
+
+    from mysql_binlog_spark.sources import wavefront as wf
+
+    with mock.patch.object(wf, "WAVEFRONT_MIN_ROW_EVENTS", 0):
+        batch, kinds = wf.decode_chunk_vectorized(data, image_cols, **kw)
+    assert kinds is not None, "chunk left the wavefront"
+    return batch, kinds

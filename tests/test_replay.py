@@ -325,11 +325,17 @@ def test_null_cols_emission_contract(spark, chunks):
     full = read_binlog(spark, glob, include=inc)
     pruned = read_binlog(spark, glob, include=inc, null_cols=NULLABLE_META)
     assert full.schema == pruned.schema
-    counts = pruned.select(
-        [F.count(F.col(c)).alias(c) for c in sorted(NULLABLE_META)]
-    ).collect()[0]
+    counts, full_counts = (
+        df.select(
+            [F.count(F.col(c)).alias(c) for c in sorted(NULLABLE_META)]
+        ).collect()[0]
+        for df in (pruned, full)
+    )
     for c in NULLABLE_META:
         assert counts[c] == 0, f"{c} not nulled"
+        # non-vacuous: the un-pruned read carries values to drop (the
+        # fixture writes GTID frames, so gtid included)
+        assert full_counts[c] > 0, f"{c} is NULL even un-pruned"
     keep = [c for c in full.columns if c not in NULLABLE_META]
     a, b = full.select(keep), pruned.select(keep)
     assert a.count() == b.count()

@@ -1,21 +1,18 @@
-"""Wavefront decoder parity: the numpy-vectorized scan must produce
-byte-identical columns to the sequential python decoder on every event
-type, before_mode, null pattern, multi-table interleave, filter, and
-start-position — plus the small-chunk fallback."""
+"""Two row-decode paths, one result: the wavefront (one frame walk +
+numpy row kernels) must produce Arrow output identical to the sequential
+value loops (``decode_chunk``) on every event type, before_mode, null
+pattern, multi-table interleave, filter, start position, GTID resume,
+CRC check and truncation policy — and ``decode_chunk_vectorized`` must
+hand small chunks to the value loops without changing the output."""
 
 from __future__ import annotations
 
-import datetime as dt
-
-import numpy as np
 import pytest
+from conftest import wavefront
 
-from mysql_binlog_spark.sources.binlog import _pa_type, spark_type_of
-from mysql_binlog_spark.sources.vector import (
-    chunk_vector_kinds,
-    materialize_column,
-)
-from mysql_binlog_spark.sources.wavefront import decode_chunk_wavefront
+from mysql_binlog_spark.sources import wavefront as wf
+from mysql_binlog_spark.sources.binlog import image_arrays, spark_type_of
+from mysql_binlog_spark.sources.wavefront import decode_chunk_vectorized
 from mysql_binlog_spark.wire import (
     CHARSET_BINARY,
     TYPE_BLOB,
@@ -27,9 +24,12 @@ from mysql_binlog_spark.wire import (
     TYPE_TINY,
     TYPE_VARCHAR,
     BinlogWriter,
+    CrcMismatchError,
     TableSchema,
+    TruncatedFrameError,
     WireColumn,
     decode_chunk,
+    vector_kind,
 )
 
 T1 = TableSchema(
@@ -115,45 +115,41 @@ def build_chunk(n_events: int = 40, rows_per_event: int = 9) -> bytes:
     return w.getvalue()
 
 
-def assert_parity(data, union, include=None, exclude=None, start_pos=0,
-                  before_mode="full"):
-    kinds = chunk_vector_kinds(data, include, exclude, union)
-    assert kinds is not None
-    bp = decode_chunk(data, include=include, exclude=exclude,
-                      start_pos=start_pos, image_cols=union,
-                      before_mode=before_mode, verify_crc=True)
-    bw = decode_chunk_wavefront(data, image_cols=union, include=include,
-                                exclude=exclude, start_pos=start_pos,
-                                before_mode=before_mode, verify_crc=True)
-    assert len(bp) == len(bw)
-    assert list(bp.ev_cnt) == list(bw.ev_cnt)
-    assert bp.ev_pos == bw.ev_pos and bp.ev_action == bw.ev_action
-    assert bp.ev_ts == bw.ev_ts and bp.ev_server == bw.ev_server
-    np_buf = np.frombuffer(data, np.uint8)
-    all_cols = {c.name: c for t in (T1, T2) for c in t.columns}
-    for side, pcols, wcols in (("before", bp.before_cols, bw.before_cols),
-                               ("after", bp.after_cols, bw.after_cols)):
-        for j, name in enumerate(union):
-            pt = _pa_type(spark_type_of(all_cols[name]))
-            got = materialize_column(
-                np_buf, kinds.get(name), wcols[j], len(bw), pt
-            ).to_pylist()
-            want = pcols[j]
-            if kinds.get(name) == ("ts", all_cols[name].meta) or (
-                kinds.get(name) and kinds[name][0] == "ts"
-            ):
-                want = [
-                    None if v is None
-                    else dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=v)
-                    for v in want
-                ]
-            if kinds.get(name) and kinds[name][0] == "b":
-                want = [None if v is None else bytes(v) for v in want]
-            assert got == want, (side, name, got[:6], want[:6])
+def value_loops(data, union, **kw):
+    """The sequential reference, as read_binlog emits it."""
+    return decode_chunk(data, image_cols=union, text_as_bytes=True, **kw)
+
+
+def _types(union, tables=None):
+    cols = {c.name: c for t in (tables or (T1, T2)) for c in t.columns}
+    return [spark_type_of(cols[n]) for n in union]
+
+
+def assert_same_output(data, a, a_kinds, b, b_kinds, union, tables=None):
+    """Event metadata and every Arrow image column equal."""
+    assert a.n_rows == b.n_rows and a.n_events == b.n_events
+    assert a.n_bytes == b.n_bytes
+    for f in ("ev_pos", "ev_server", "ev_ts", "ev_schema", "ev_table",
+              "ev_action", "ev_gtid", "ev_cnt"):
+        assert list(getattr(a, f)) == list(getattr(b, f)), f
+    types = _types(union, tables)
+    got = image_arrays(data, a, a_kinds, types)
+    want = image_arrays(data, b, b_kinds, types)
+    names = [f"{s}_{c}" for s in ("before", "after") for c in union]
+    for name, x, y in zip(names, got, want):
+        assert x.type == y.type and x.equals(y), (
+            name, x.to_pylist()[:4], y.to_pylist()[:4])
+
+
+def assert_parity(data, union, tables=None, **kw):
+    bw, kinds = wavefront(data, union, **kw)
+    bp = value_loops(data, union, **kw)
+    assert_same_output(data, bw, kinds, bp, None, union, tables)
+    return bw
 
 
 def test_wavefront_parity_full():
-    assert_parity(build_chunk(), UNION, before_mode="full")
+    assert_parity(build_chunk(), UNION, before_mode="full", verify_crc=True)
 
 
 def test_wavefront_parity_delete_only_and_none():
@@ -169,21 +165,40 @@ def test_wavefront_parity_with_filters_and_start_pos():
     # start mid-chunk: pick an offset between events
     bp = decode_chunk(data, image_cols=UNION)
     mid = bp.ev_pos[len(bp.ev_pos) // 2]
-    assert_parity(data, UNION, start_pos=mid)
+    assert len(assert_parity(data, UNION, start_pos=mid)) < len(bp)
+
+
+def test_wavefront_parity_at_tiny_widths():
+    for n_events in (0, 1, 2, 4):
+        assert_parity(build_chunk(n_events=n_events), UNION)
 
 
 def test_wavefront_small_chunk_falls_back():
-    data = build_chunk(n_events=4)  # < MIN_WAVEFRONT_EVENTS
-    bw = decode_chunk_wavefront(data, image_cols=UNION)
-    bp = decode_chunk(data, image_cols=UNION, value_mode="offsets")
-    assert len(bw) == len(bp)
-    for j in range(len(UNION)):
-        assert np.array_equal(
-            np.frombuffer(bw.after_cols[j], np.int64)
-            if not isinstance(bw.after_cols[j], np.ndarray)
-            else bw.after_cols[j],
-            np.frombuffer(bp.after_cols[j], np.int64),
-        )
+    data = build_chunk(n_events=4)
+    batch, kinds = decode_chunk_vectorized(data, UNION)
+    assert kinds is None
+    assert_same_output(data, batch, None, value_loops(data, UNION), None,
+                       UNION)
+
+
+def test_output_identical_across_the_threshold():
+    """Chunks of one row event below and at WAVEFRONT_MIN_ROW_EVENTS
+    take different paths; the longer one's output is the shorter one's
+    plus one event, and both match the value loops."""
+    n = wf.WAVEFRONT_MIN_ROW_EVENTS
+    below = build_chunk(n_events=n - 1, rows_per_event=1)
+    at = build_chunk(n_events=n, rows_per_event=1)
+    b_below, k_below = decode_chunk_vectorized(below, UNION)
+    b_at, k_at = decode_chunk_vectorized(at, UNION)
+    assert k_below is None and k_at is not None
+    types = _types(UNION)
+    arr_below = image_arrays(below, b_below, k_below, types)
+    arr_at = image_arrays(at, b_at, k_at, types)
+    assert len(b_at) == len(b_below) + 1
+    for x, y in zip(arr_below, arr_at):
+        assert x.equals(y.slice(0, len(x)))
+    assert b_at.ev_pos[:-1] == b_below.ev_pos
+    assert_same_output(at, b_at, k_at, value_loops(at, UNION), None, UNION)
 
 
 def test_wavefront_desync_raises():
@@ -193,9 +208,7 @@ def test_wavefront_desync_raises():
     first = bp.ev_pos[0]
     data[first + 30 : first + 40] = bytes([250] * 10)
     with pytest.raises((ValueError, IndexError, AssertionError)):
-        decode_chunk_wavefront(
-            bytes(data), image_cols=UNION, before_mode="full"
-        )
+        wavefront(bytes(data), UNION, before_mode="full")
 
 
 # ------------------------------------------------- property-based parity
@@ -271,7 +284,7 @@ def test_wavefront_random_schema_parity(col_spec, seed):
     union = [c.name for c in cols]
     w = BinlogWriter()
     w.write_table_map(0, t)
-    for e in range(18):  # ≥ MIN_WAVEFRONT_EVENTS
+    for e in range(18):
         rows = [
             {c.name: _value_for(c, rnd) for c in cols}
             for _ in range(rnd.randrange(1, 5))
@@ -285,29 +298,7 @@ def test_wavefront_random_schema_parity(col_spec, seed):
         else:
             w.write_rows(e, t, action, rows)
     data = w.getvalue()
-    kinds = chunk_vector_kinds(data, None, None, union)
-    assert kinds is not None
-    bp = decode_chunk(data, image_cols=union, verify_crc=True)
-    bw = decode_chunk_wavefront(data, image_cols=union, verify_crc=True)
-    assert len(bp) == len(bw) and list(bp.ev_cnt) == list(bw.ev_cnt)
-    np_buf = np.frombuffer(data, np.uint8)
-    for side, pcols, wcols in (("before", bp.before_cols, bw.before_cols),
-                               ("after", bp.after_cols, bw.after_cols)):
-        for j, c in enumerate(cols):
-            pt = _pa_type(spark_type_of(c))
-            got = materialize_column(
-                np_buf, kinds.get(c.name), wcols[j], len(bw), pt
-            ).to_pylist()
-            want = bp.before_cols[j] if side == "before" else bp.after_cols[j]
-            if kinds.get(c.name, ("",))[0] == "ts":
-                want = [
-                    None if v is None
-                    else dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=v)
-                    for v in want
-                ]
-            if c.charset == CHARSET_BINARY:
-                want = [None if v is None else bytes(v) for v in want]
-            assert got == want, (side, c.name, got[:4], want[:4])
+    assert_parity(data, union, tables=(t,), verify_crc=True)
 
 
 # ------------------------------------------------ single-walk fast path (r7)
@@ -341,73 +332,83 @@ def build_gtid_chunk(n_txns: int = 8, rows_per_event: int = 6) -> bytes:
     return w.getvalue()
 
 
-def _assert_batches_equal(a, b):
-    assert a.n_rows == b.n_rows and a.n_events == b.n_events
-    assert a.n_bytes == b.n_bytes
-    assert list(a.ev_pos) == list(b.ev_pos)
-    assert list(a.ev_server) == list(b.ev_server)
-    assert list(a.ev_ts) == list(b.ev_ts)
-    assert list(a.ev_schema) == list(b.ev_schema)
-    assert list(a.ev_table) == list(b.ev_table)
-    assert list(a.ev_action) == list(b.ev_action)
-    assert list(a.ev_gtid) == list(b.ev_gtid)
-    assert list(a.ev_cnt) == list(b.ev_cnt)
-    for side in ("before_cols", "after_cols"):
-        for x, y in zip(getattr(a, side), getattr(b, side)):
-            assert (np.asarray(x) == np.asarray(y)).all()
+SID_A = "00010203-0405-0607-0809-0a0b0c0d0e0f"
+SID_B = "10111213-1415-1617-1819-1a1b1c1d1e1f"
 
 
-def test_fast_scan_parity_with_general_walk():
-    """decode_chunk_vectorized's single-walk fast path must be
-    batch-identical to the general wavefront walk on a GTID/XID-framed
-    multi-table chunk, for every before_mode and filter shape —
-    including the pre-GTID row event (gtid=None) and the kinds map."""
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_vectorized
-
+def test_wavefront_gtid_chunk_parity():
+    """A GTID/XID-framed multi-table chunk, for every before_mode and
+    filter shape — including the pre-GTID row event (gtid=None) — and
+    the kinds map covers exactly the admitted tables' stored columns."""
     data = build_gtid_chunk()
     for before_mode in ("full", "delete_only", "none"):
         for include in (None, {("app", "transcripts")}, {("app", "wide")}):
-            fast, kinds = decode_chunk_vectorized(
-                data, UNION, include=include, before_mode=before_mode
-            )
-            assert kinds == chunk_vector_kinds(data, include, None, UNION)
-            ref = decode_chunk_wavefront(
-                data, image_cols=UNION, include=include,
-                before_mode=before_mode
-            )
-            _assert_batches_equal(fast, ref)
-    # some rows precede any GTID frame; the rest carry their txn's tag
-    fast, _ = decode_chunk_vectorized(data, UNION)
-    assert fast.ev_gtid[0] is None and any(g for g in fast.ev_gtid)
+            assert_parity(data, UNION, include=include,
+                          before_mode=before_mode)
+            _, kinds = wavefront(data, UNION, include=include)
+            tables = [t for t in (T1, T2)
+                      if include is None or (t.schema, t.table) in include]
+            assert kinds == {c.name: vector_kind(c)
+                             for t in tables for c in t.columns}
+    bw, _ = wavefront(data, UNION)
+    assert bw.ev_gtid[0] is None and any(g for g in bw.ev_gtid)
 
 
-def test_fast_scan_delegates_sequential_semantics():
-    """start_pos / CRC verify / GTID resume take the general walk — same
-    batch either way, so the fast path's eligibility gate loses nothing."""
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_vectorized
-
+def test_wavefront_sequential_semantics():
+    """start_pos, GTID-set resume (tuple and dict forms) and CRC checks
+    are masks and checks over the one walk's vectors — same output as
+    the sequential walk."""
     data = build_gtid_chunk()
-    mid = len(data) // 2
+    full = len(decode_chunk(data))
+    mid = decode_chunk(data).ev_pos[7]
     for kw in (
         {"start_pos": mid},
-        {"verify_crc": True},
-        {"start_after_gtid": ("00010203-0405-0607-0809-0a0b0c0d0e0f", 103)},
+        {"start_after_gtid": (SID_A, 103)},
+        {"start_after_gtid": {SID_A: 102, SID_B.upper(): 105}},
+        {"start_after_gtid": {SID_B: 10**6}, "start_pos": mid},
     ):
-        fast, kinds = decode_chunk_vectorized(data, UNION, **kw)
-        ref = decode_chunk_wavefront(data, image_cols=UNION, **kw)
-        assert kinds is not None
-        _assert_batches_equal(fast, ref)
+        assert 0 < len(assert_parity(data, UNION, **kw)) < full, kw
+    assert len(assert_parity(data, UNION, verify_crc=True)) == full
+
+
+def test_gtid_without_xid_in_chunk():
+    """A transaction still open at the chunk's end (GTID frames, no XID
+    anywhere in the chunk) tags every row after its GTID."""
+    w = BinlogWriter()
+    w.write_table_map(0, T1)
+    w.write_rows(0, T1, "insert", [_t1_row(0)])
+    w.write_gtid(0, bytes(range(16)), 5)
+    for e in range(6):
+        w.write_rows(e, T1, "insert", [_t1_row(e + 1)])
+    data = w.getvalue()
+    bw = assert_parity(data, UNION)
+    assert bw.ev_gtid[0] is None and bw.ev_gtid[1].endswith(":5")
+    assert_parity(data, UNION, start_after_gtid=(SID_A, 5))
+
+
+def test_corrupt_trailer_raises_crc_mismatch_on_both_paths():
+    data = bytearray(build_gtid_chunk())
+    data[-1] ^= 0xFF  # last frame's CRC trailer
+    data = bytes(data)
+    with pytest.raises(CrcMismatchError):
+        wavefront(data, UNION, verify_crc=True)
+    with pytest.raises(CrcMismatchError):
+        value_loops(data, UNION, verify_crc=True)
+    with pytest.raises(CrcMismatchError):  # small chunk, value-loop path
+        decode_chunk_vectorized(data, UNION, verify_crc=True)
+    assert_parity(data, UNION)  # unchecked: the body is intact
 
 
 def test_fast_scan_truncation_and_malformed():
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_vectorized
-    from mysql_binlog_spark.wire import TruncatedFrameError
-
     data = build_gtid_chunk()
     cut = data[: len(data) - 5]
-    with pytest.raises(TruncatedFrameError):
-        decode_chunk_vectorized(cut, UNION)
-    fast, _ = decode_chunk_vectorized(cut, UNION, tolerate_truncation=True)
-    ref = decode_chunk_wavefront(cut, image_cols=UNION,
-                                 tolerate_truncation=True)
-    _assert_batches_equal(fast, ref)
+    for decode in (wavefront, value_loops):
+        with pytest.raises(TruncatedFrameError):
+            decode(cut, UNION)
+    bw = assert_parity(cut, UNION, tolerate_truncation=True)
+    assert bw.n_events == decode_chunk(data).n_events - 1
+    bad = bytearray(data)
+    bad[4 + 9 : 4 + 13] = bytes(4)  # first frame claims size 0
+    for decode in (wavefront, value_loops):
+        with pytest.raises(ValueError, match="malformed frame"):
+            decode(bytes(bad), UNION)

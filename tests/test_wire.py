@@ -6,6 +6,7 @@ import struct
 import zlib
 
 import pytest
+from conftest import wavefront
 
 from mysql_binlog_spark.wire import (
     CRC_LEN,
@@ -163,9 +164,9 @@ def test_database_level_filter_semantics():
 def test_database_exclude_skips_row_decode():
     """Pushdown proof: a row event of an excluded database is skipped
     whole — corrupt its first varlen length prefix so any attempt to
-    walk the row desyncs.  The filtered decode must succeed; the
-    unfiltered offset-scan decode must fail loudly (the offset loop's
-    off==end desync assert)."""
+    walk the row desyncs.  The filtered decode must succeed on both
+    paths; the unfiltered wavefront decode must fail loudly (its
+    cursor==event-end desync check)."""
     w = BinlogWriter()
     t1 = sample_schema(table_id=100)
     t2 = TableSchema("other_db", "t", sample_schema().columns, (0, 1), 101)
@@ -179,14 +180,17 @@ def test_database_exclude_skips_row_decode():
     # byte of conv_id's length prefix
     data[pos2 + HEADER_LEN + 13] = 0xFF
     data = bytes(data)
-    for mode in ("python", "offsets"):
-        got = decode_chunk(data, exclude={"other_db"}, value_mode=mode)
-        assert set(got.schema_name) == {"app"}
+    cols = [c.name for c in t1.columns]
+    assert set(decode_chunk(data, exclude={"other_db"}).schema_name) == {
+        "app"
+    }
+    got, _ = wavefront(data, cols, exclude={"other_db"})
+    assert set(got.schema_name) == {"app"}
     # loud failure either way: desync ValueError when the walk lands
     # inside the buffer but off the event end, IndexError when the bad
     # length runs past the buffer entirely
     with pytest.raises((ValueError, IndexError)):
-        decode_chunk(data, value_mode="offsets")
+        wavefront(data, cols)
 
 
 def test_schema_evolution_two_table_maps():
@@ -252,9 +256,8 @@ def test_position_bookkeeping():
 
 def test_gtid_lineage_roundtrip_and_reset():
     """GTID_LOG_EVENT tags every row event until the closing XID; logs
-    without GTID frames leave the column NULL; the wavefront kernel's
-    small-chunk fallback path decodes identically (parity)."""
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_wavefront
+    without GTID frames leave the column NULL; the wavefront decodes
+    identically (parity)."""
     from mysql_binlog_spark.wire import format_gtid
 
     sid = bytes.fromhex("00000000000040008000000000000666")
@@ -285,7 +288,7 @@ def test_gtid_lineage_roundtrip_and_reset():
     batch = decode_chunk(data, verify_crc=True)
     assert batch.gtid == want
     cols = [c.name for c in t.columns]
-    wf = decode_chunk_wavefront(data, image_cols=cols, verify_crc=True)
+    wf, _ = wavefront(data, cols, verify_crc=True)
     assert wf.gtid == want  # kernel parity
 
     # GTID-less log → all NULL
@@ -298,8 +301,7 @@ def test_gtid_lineage_roundtrip_and_reset():
 def test_gtid_resume_skips_transactions_at_or_before():
     """start_after_gtid skips whole transactions with GNO <= the resume
     point, leaves later transactions and foreign-SID/untagged events,
-    and both decode kernels agree."""
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_wavefront
+    and both decode paths agree."""
 
     sid = bytes.fromhex("00000000000040008000000000000666")
     other = bytes.fromhex("11111111111141118111111111111111")
@@ -322,9 +324,7 @@ def test_gtid_resume_skips_transactions_at_or_before():
     turns = [r["turn_idx"] for r in batch.after]
     assert turns == [3, 99]
     cols = [c.name for c in t.columns]
-    wf = decode_chunk_wavefront(
-        data, image_cols=cols, start_after_gtid=(uuid, 2)
-    )
+    wf, _ = wavefront(data, cols, start_after_gtid=(uuid, 2))
     assert len(wf) == 2 and wf.gtid[0].endswith(":3")
     # no resume point → everything decodes
     assert len(decode_chunk(data)) == 4
@@ -334,10 +334,7 @@ def test_gtid_set_resume_per_sid_thresholds():
     """Round-6 GTID-SET resume: a per-SID threshold dict skips each
     source's transactions independently (multi-source replication), an
     UPPERCASE SID is case-folded (ADVICE round-5), a malformed SID is
-    rejected, and both kernels agree."""
-    import pytest
-
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_wavefront
+    rejected, and both decode paths agree."""
     from mysql_binlog_spark.wire import normalize_gtid_resume, parse_gtid_set
 
     sid_a = bytes.fromhex("00000000000040008000000000000666")
@@ -363,8 +360,7 @@ def test_gtid_set_resume_per_sid_thresholds():
     batch = decode_chunk(data, start_after_gtid=resume)
     assert [r["turn_idx"] for r in batch.after] == [12, 3, 13]
     cols = [c.name for c in t.columns]
-    wf = decode_chunk_wavefront(data, image_cols=cols,
-                                start_after_gtid=resume)
+    wf, _ = wavefront(data, cols, start_after_gtid=resume)
     assert len(wf) == 3 and wf.gtid == batch.gtid
     # CLI set rendering round-trips through parse_gtid_set
     assert parse_gtid_set(f"{uuid_a.upper()}:2,{uuid_b}:1") == {

@@ -156,8 +156,9 @@ def test_frame_walk_terminates_under_byte_corruption():
     guard so a regression fails fast instead of stalling the suite."""
     import signal
 
+    from conftest import wavefront
+
     from mysql_binlog_spark.wire import decode_chunk
-    from mysql_binlog_spark.sources.wavefront import decode_chunk_wavefront
 
     data = bytearray(_tiny_chunk())
     # deterministic probe positions: spread over the whole chunk,
@@ -175,9 +176,7 @@ def test_frame_walk_terminates_under_byte_corruption():
         for pos in positions:
             for fn in (
                 lambda d: decode_chunk(d, verify_crc=True),
-                lambda d: decode_chunk_wavefront(
-                    d, image_cols=["pk", "v"], verify_crc=True
-                ),
+                lambda d: wavefront(d, ["pk", "v"], verify_crc=True),
             ):
                 bad = bytes(data[:pos]) + bytes([data[pos] ^ 0xFF]) \
                     + bytes(data[pos + 1:])
