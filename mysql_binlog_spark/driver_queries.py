@@ -3365,7 +3365,7 @@ def q_cdc_compaction(spark, sf_dir):
         spark, chunks, table, include=[("app", "transcripts")],
         files_per_epoch=2,
     )
-    stats = table.compact(spark, purge_tombstones=True, vacuum_after=True)
+    stats = table.compact(spark, purge_tombstones=True)
     assert not stats.get("skipped"), stats
     per_bucket = table.last_commit()["buckets"]
     assert max((len(fs) for fs in per_bucket.values()), default=0) <= 1, (

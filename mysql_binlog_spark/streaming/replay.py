@@ -43,35 +43,45 @@ class ReplayStats:
         return sum(1 for e in self.epochs if not e.get("skipped"))
 
 
-def _epoch_winners(table: LakeTable, decoded, image_cols: list[str]):
-    """The table-state-INDEPENDENT half of an epoch: decode (which
-    already applied the include/exclude filter IN-KERNEL, so no
-    ``filter_tables`` here — it would drop every row of the decode, whose
+def _epoch_winners(
+    spark: SparkSession,
+    table: LakeTable,
+    paths: list[str],
+    image_cols: list[tuple[str, str]] | None,
+    include: list | None,
+    exclude: list | None,
+    **decode,
+):
+    """The table-state-INDEPENDENT half of an epoch: decode ``paths``
+    (the include/exclude filter runs IN-KERNEL, so no ``filter_tables``
+    here — it would drop every row of the decode, whose
     schema_name/table_name are nulled, see ``read_binlog(null_cols)``)
-    → image → per-key winners.  Safe to run ahead of the previous
-    epoch's merge/commit (see replay_batch's one-deep pipeline)."""
-    df = decoded
+    → image → per-key winners.  ``decode`` passes the position, GTID,
+    error and CRC options through to ``read_binlog``.  Safe to run ahead
+    of the previous epoch's merge/commit (see replay_batch's one-deep
+    pipeline)."""
+    decoded = read_binlog(
+        spark, paths, image_cols=image_cols,
+        include=set(include) if include is not None else None,
+        exclude=set(exclude) if exclude is not None else None,
+        before_mode="delete_only",  # apply never reads update befores
+        null_cols=_PRUNED_META,  # apply never reads these either
+        **decode,
+    )
+    cols = (
+        [n for n, _ in image_cols]
+        if image_cols
+        else [f.name[len("after_"):] for f in decoded.schema.fields
+              if f.name.startswith("after_")]
+    )
     # NB: no dedup_lsn stage here — exact re-deliveries share both LSN and
     # payload, so max_by in last_writer picks an identical row either way;
     # an explicit dropDuplicates would only add a second full-width shuffle.
     # (dedup_lsn remains a standalone operator for stats/count paths.)
-    df = image_view(df, image_cols)
     return last_writer(
-        df, key_cols=table.key_cols,
-        payload_cols=[c for c in image_cols if c not in table.key_cols],
+        image_view(decoded, cols), key_cols=table.key_cols,
+        payload_cols=[c for c in cols if c not in table.key_cols],
     )
-
-
-def _apply_epoch(
-    spark: SparkSession,
-    table: LakeTable,
-    decoded,
-    epoch_id: str,
-    image_cols: list[str],
-    merge_mode: str = "cow",
-) -> dict:
-    winners = _epoch_winners(table, decoded, image_cols)
-    return table.merge_into(spark, winners, epoch_id, mode=merge_mode)
 
 
 def replay_batch(
@@ -134,8 +144,6 @@ def replay_batch(
     )
     if start_lsn is not None:
         chunks = [f for f in chunks if f >= start_lsn[0]]
-    include_set = set(include) if include is not None else None
-    exclude_set = set(exclude) if exclude is not None else None
     stats = ReplayStats()
     done = table.committed_epochs()
     groups = [
@@ -163,22 +171,12 @@ def replay_batch(
         single-pass path (MOR / initial load) then runs decode → winners
         → write as ONE job instead of paying a full cache
         materialization first."""
-        paths = [os.path.join(chunk_dir, f) for f in group]
-        decoded = read_binlog(
-            spark, paths, image_cols=image_cols, include=include_set,
-            exclude=exclude_set, start_lsn=start_lsn,
-            start_after_gtid=start_after_gtid,
-            before_mode="delete_only",  # apply never reads update befores
-            on_error=on_error, verify_crc=verify_crc,
-            null_cols=_PRUNED_META,  # apply never reads these either
+        w = _epoch_winners(
+            spark, table, [os.path.join(chunk_dir, f) for f in group],
+            image_cols, include, exclude, start_lsn=start_lsn,
+            start_after_gtid=start_after_gtid, on_error=on_error,
+            verify_crc=verify_crc,
         )
-        cols = (
-            [n for n, _ in image_cols]
-            if image_cols
-            else [f.name[len("after_"):] for f in decoded.schema.fields
-                  if f.name.startswith("after_")]
-        )
-        w = _epoch_winners(table, decoded, cols)
         if materialize:
             w = w.persist()
             w.count()
@@ -261,8 +259,6 @@ def replay_stream(
     bucket rewrite); ``maintain_every`` bounds the read fan-in.
     """
     stats = ReplayStats()
-    include_set = set(include) if include is not None else None
-    exclude_set = set(exclude) if exclude is not None else None
 
     # file-reference stream: one row per chunk file
     refs = (
@@ -283,23 +279,13 @@ def replay_stream(
         if not paths:
             return
         epoch_id = f"stream-{batch_id}-{os.path.basename(sorted(paths)[0])}"
-        decoded = read_binlog(
-            spark, paths, image_cols=image_cols, include=include_set,
-            exclude=exclude_set, start_lsn=start_lsn,
-            start_after_gtid=start_after_gtid,
-            before_mode="delete_only",  # apply never reads update befores
+        w = _epoch_winners(
+            spark, table, paths, image_cols, include, exclude,
+            start_lsn=start_lsn, start_after_gtid=start_after_gtid,
             on_error=on_error, verify_crc=verify_crc,
-            null_cols=_PRUNED_META,  # apply never reads these either
-        )
-        cols = (
-            [n for n, _ in image_cols]
-            if image_cols
-            else [f.name[len("after_"):] for f in decoded.schema.fields
-                  if f.name.startswith("after_")]
         )
         stats.epochs.append(
-            _apply_epoch(spark, table, decoded, epoch_id, cols,
-                         merge_mode=merge_mode)
+            table.merge_into(spark, w, epoch_id, mode=merge_mode)
         )
         if maintain_every and stats.applied % maintain_every == 0:
             table.maintain(spark)

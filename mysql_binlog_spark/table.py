@@ -1,35 +1,50 @@
 """LakeTable — an Iceberg-shaped lake-table layer (offline substitute).
 
-No Iceberg runtime jar is obtainable in this sandbox (no network), so the
-MERGE sink (north-rule A3-A6) is implemented as a miniature
-manifest-committed table whose surface mirrors Iceberg's:
+No Iceberg runtime jar is obtainable offline, so the MERGE sink
+(north-rule A3-A6) is a miniature manifest-committed table whose surface
+mirrors Iceberg's:
 
 * ``merge_into(updates, epoch_id)``  ≈ ``MERGE INTO t USING s ON key
   WHEN MATCHED AND s.action='delete' THEN DELETE
   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``
 * ``add_columns``                    ≈ ``ALTER TABLE … ADD COLUMN``
-* ``snapshot_df``                    ≈ snapshot read
+* ``snapshot_df``                    ≈ snapshot read (``at_commit`` ≈
+  ``VERSION AS OF``)
 * idempotent epoch commits           ≈ WAP / exactly-once sink
 
 Layout::
 
     table/
       _schema/v0001.json       # schema versions (ADD COLUMN only)
-      _commits/c0000001.json   # manifest: bucket -> live data files,
-                               # epoch_id, lineage; atomic tmp+rename
+      _commits/c0000001.json   # manifest: bucket -> base files, bucket ->
+                               # merge-on-read delta files, epoch_id,
+                               # lineage
+      _commits/epochs.log      # applied epoch ids, one per line
       data/ep=<epoch>/bucket=K/part-*.parquet
+
+Manifest entries are paths relative to the table root, so a lake can be
+moved or copied as a directory; an absolute entry (older manifests) still
+resolves, because ``os.path.join(root, entry)`` keeps it as it is.
 
 Data files are hash-bucketed on the leading key column, so one merge epoch
 rewrites only buckets containing touched keys (bucket pruning at the FILE
 level — the manifest maps buckets to files, no directory listing on read).
-A commit whose ``epoch_id`` already exists is a no-op: re-delivered epochs
-cannot double-apply (north-rule A6).  Crash after data write but before the
-manifest rename leaves unreferenced orphans only.
+Every row stores its applied LSN and a ``_deleted`` tombstone flag; the
+winner per key is ``max_by(row, lsn)`` over base ∪ deltas ∪ updates
+(``_resolve``), so a late epoch replaying *older* events can never regress
+a newer row or resurrect a deleted one (last-writer-wins is global, not
+per-batch).
 
-Cross-epoch correctness: every row stores its applied LSN; the merge winner
-per key is ``max_by(payload, lsn)`` over {current row} ∪ {updates}, so a
-late epoch replaying *older* events can never regress a newer row
-(last-writer-wins is global, not per-batch).
+Commits: an epoch writes its data files, then publishes manifest
+``c{seq}.json`` with a fail-if-exists hard link — a second writer that
+raced for the same sequence number gets ``FileExistsError`` instead of
+silently replacing a commit — and then appends its id to ``epochs.log``.
+An epoch whose id is already committed is a no-op, so re-delivered
+epochs cannot double-apply (north-rule A6).  A crash after the data write leaves unreferenced orphans only (``vacuum``
+collects them).  A crash between the publish and the log append leaves
+the newest manifest's epoch out of the log; the next ``merge_into`` (or
+commit) sees that from the manifest it reads anyway and appends the
+missing id, so the re-delivered epoch is skipped, not applied twice.
 
 If a real Iceberg catalog is available, this class is the only swap point.
 """
@@ -41,6 +56,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,13 +78,13 @@ class LakeTable:
         # committed-epoch ids are cached on the instance and persisted to an
         # append-only log, so idempotence checks cost O(1) driver file reads
         # per epoch instead of re-parsing every commit manifest (O(epochs²)
-        # over a long replay — VERDICT round-1 "what's wrong" #3)
+        # over a long replay)
         self._epochs_cache: set[str] | None = None
         # commit sequencing + manifest reads are O(1) per epoch too: the
         # commit dir is globbed at most once per process, after which the
         # next sequence number and the latest manifest live in memory
-        # (VERDICT round-2 "what's wrong" #3: per-epoch directory listings
-        # are O(N²) over a thousands-of-epochs replay)
+        # (per-epoch directory listings are O(N²) over a
+        # thousands-of-epochs replay)
         self._next_seq: int | None = None
         self._last_commit_cache: dict | None | object = _UNSET
 
@@ -200,57 +216,149 @@ class LakeTable:
         self._epochs_cache = out
         return out
 
-    def live_files(self, buckets: set[int] | None = None) -> list[str]:
+    def _healed_epochs(self) -> set[str]:
+        """``committed_epochs()``, plus the newest manifest's epoch when a
+        crash between its publish and the log append left it out of the
+        log — the log is appended to, so the gap closes once."""
+        done = self.committed_epochs()
         last = self.last_commit()
-        if not last:
-            return []
-        files: list[str] = []
-        for b, fs in last["buckets"].items():
-            if buckets is None or int(b) in buckets:
-                files.extend(fs)
-        return files
+        if last is not None and last["epoch_id"] not in done:
+            self._log_epoch(last["epoch_id"])
+        return done
 
-    def delta_files(self, buckets: set[int] | None = None) -> list[str]:
-        """Merge-on-read delta files (``merge_into(mode='mor')``) not yet
-        folded into the base by compaction."""
-        last = self.last_commit()
-        if not last:
-            return []
-        files: list[str] = []
-        for b, fs in last.get("delta_buckets", {}).items():
-            if buckets is None or int(b) in buckets:
-                files.extend(fs)
-        return files
-
-    def _commit(self, doc: dict) -> None:
-        if self._next_seq is None:
-            self._next_seq = len(self.commits()) + 1  # one glob per process
-        seq = self._next_seq
-        p = os.path.join(self.path, "_commits", f"c{seq:07d}.json")
-        tmp = p + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.rename(tmp, p)  # atomic publish
-        self._next_seq = seq + 1
-        self._last_commit_cache = doc
-        epoch_id = doc["epoch_id"]
+    def _log_epoch(self, epoch_id: str) -> None:
         assert "\n" not in epoch_id
         with open(self._epochs_log, "a") as f:
             f.write(epoch_id + "\n")
         if self._epochs_cache is not None:
             self._epochs_cache.add(epoch_id)
 
+    def _files(
+        self, doc: dict | None, kind: str, buckets: set[int] | None = None
+    ) -> list[str]:
+        """Data files of manifest ``doc`` under ``kind`` ('buckets' for
+        base files, 'delta_buckets' for merge-on-read deltas), restricted
+        to ``buckets`` when given, resolved against the table root."""
+        return [
+            os.path.join(self.path, f)
+            for b, fs in (doc or {}).get(kind, {}).items()
+            if buckets is None or int(b) in buckets
+            for f in fs
+        ]
+
+    def live_files(self, buckets: set[int] | None = None) -> list[str]:
+        return self._files(self.last_commit(), "buckets", buckets)
+
+    def delta_files(self, buckets: set[int] | None = None) -> list[str]:
+        """Merge-on-read delta files (``merge_into(mode='mor')``) not yet
+        folded into the base by compaction."""
+        return self._files(self.last_commit(), "delta_buckets", buckets)
+
+    def _commit(self, doc: dict) -> None:
+        self._healed_epochs()  # also primes _next_seq (one glob per process)
+        seq = self._next_seq
+        p = os.path.join(self.path, "_commits", f"c{seq:07d}.json")
+        tmp = f"{p}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(doc, f)
+        try:
+            os.link(tmp, p)  # atomic, fail-if-exists publish
+        except FileExistsError:
+            # another writer published this sequence number first: drop
+            # this handle's caches so a retry plans against its commit
+            self._next_seq = None
+            self._last_commit_cache = _UNSET
+            self._epochs_cache = None
+            raise FileExistsError(
+                f"commit conflict: {p} was published by another writer"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        self._next_seq = seq + 1
+        self._last_commit_cache = doc
+        self._log_epoch(doc["epoch_id"])
+
+    def _publish(
+        self,
+        epoch_id: str,
+        mode: str,
+        written: dict[int, list[str]],
+        touched: set[int],
+        lineage: dict,
+        **extra,
+    ) -> None:
+        """Build and commit the manifest that follows the current one.
+        ``mode='mor'`` appends ``written`` to the delta files; otherwise
+        every ``touched`` bucket's base becomes its ``written`` files and
+        its outstanding deltas are dropped (folded into that base)."""
+        last = self.last_commit() or {}
+        buckets = dict(last.get("buckets", {}))
+        deltas = dict(last.get("delta_buckets", {}))
+        if mode == "mor":
+            for b, fs in written.items():
+                deltas[str(b)] = deltas.get(str(b), []) + fs
+        else:
+            for b in sorted(touched):
+                buckets[str(b)] = written.get(b, [])
+                deltas.pop(str(b), None)
+        self._commit(
+            {
+                "epoch_id": epoch_id,
+                "schema_version": self.schema_doc()["version"],
+                "buckets": buckets,
+                "delta_buckets": deltas,
+                "lineage": lineage,
+                "touched_buckets": sorted(touched),
+                "mode": mode,
+                "wall_time": time.time(),
+                **extra,
+            }
+        )
+
     # ---------------------------------------------------------------- reads
 
-    @staticmethod
-    def _doc_files(
-        doc: dict, kind: str, buckets: set[int] | None = None
-    ) -> list[str]:
-        files: list[str] = []
-        for b, fs in doc.get(kind, {}).items():
-            if buckets is None or int(b) in buckets:
-                files.extend(fs)
-        return files
+    def _read(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        return spark.read.schema(
+            self.ddl(with_lsn=True, with_tombstone=True)
+        ).parquet(*files)
+
+    def _resolve(self, df: DataFrame) -> DataFrame:
+        """Per-key winner: ``max_by(row, lsn)`` — the one reduce behind
+        the copy-on-write merge, merge-on-read reads and compaction.  A
+        tombstone (``_deleted``) wins like any other row, so an older
+        re-insert replayed after a delete cannot resurrect the key."""
+        names = [n for n, _ in self.columns()] + LSN_COLS + ["_deleted"]
+        lsn = F.struct(*LSN_COLS)
+        return (
+            df.groupBy(*self.key_cols)
+            .agg(F.max_by(F.struct(*names), lsn).alias("_w"))
+            .select("_w.*")
+        )
+
+    def _scan(
+        self, spark: SparkSession, doc: dict, buckets: set[int] | None = None
+    ) -> DataFrame | None:
+        """Rows of ``buckets`` (all when None) as of manifest ``doc``, ≤1
+        per key, tombstones included; None when there are no files.  Only
+        buckets with outstanding deltas are resolved: keys never cross
+        buckets, so the others are already ≤1 row/key and scan merge-free
+        — the resolve shuffle costs O(delta-touched data)."""
+        sel = {int(b) for b in doc["buckets"]} | {
+            int(b) for b in doc.get("delta_buckets", {})
+        }
+        if buckets is not None:
+            sel &= {int(b) for b in buckets}
+        hot = {int(b) for b in doc.get("delta_buckets", {})} & sel
+        hot_files = self._files(doc, "buckets", hot) + self._files(
+            doc, "delta_buckets", hot
+        )
+        cold_files = self._files(doc, "buckets", sel - hot)
+        parts = [self._resolve(self._read(spark, hot_files))] if hot_files else []
+        if cold_files:
+            parts.append(self._read(spark, cold_files))
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def snapshot_df(
         self,
@@ -263,28 +371,26 @@ class LakeTable:
 
         With merge-on-read deltas outstanding (``merge_into(mode='mor')``
         since the last compaction), the read resolves per-key winners
-        across base + delta rows with the SAME max_by-over-LSN reduce the
-        copy-on-write merge uses — read-side merge work traded for the
-        write-side amplification MOR avoids (BENCH/MERGE.md two-regime
-        analysis).
+        across base + delta rows with the SAME reduce the copy-on-write
+        merge uses — read-side merge work traded for the write-side
+        amplification MOR avoids (BENCH/MERGE.md two-regime analysis).
 
         ``at_commit``: serve the table AS OF commit seq (1-based) —
         manifest-level time travel: every commit is a complete snapshot
         description (buckets + outstanding deltas), so reading an older
         manifest reads the older table, valid until ``vacuum`` collects
         its superseded files (the Iceberg/Delta retention contract)."""
-        last = (
+        doc = (
             self.commit_at(at_commit)
             if at_commit is not None
             else self.last_commit()
         )
-        if at_commit is not None and last is not None:
-            # retention guard (ADVICE r6): a vacuum after commit k may
-            # have collected files only version k references — fail with
-            # the retention story, not an opaque parquet path error
+        if at_commit is not None:
+            # retention guard: a vacuum after commit k may have collected
+            # files only version k references — fail with the retention
+            # story, not an opaque parquet path error
             for f in (
-                self._doc_files(last, "buckets")
-                + self._doc_files(last, "delta_buckets")
+                self._files(doc, "buckets") + self._files(doc, "delta_buckets")
             ):
                 if not os.path.exists(f):
                     raise ValueError(
@@ -295,49 +401,11 @@ class LakeTable:
                         "readable only until maintenance collects their "
                         "superseded files)"
                     )
-        deltas = self._doc_files(last, "delta_buckets") if last else []
-        schema = self.ddl(with_lsn=True, with_tombstone=True)
-        if last is None:
+        df = self._scan(spark, doc) if doc is not None else None
+        if df is None:
             return spark.createDataFrame([], self.ddl(with_lsn=with_lsn))
-        if deltas:
-            # resolve ONLY the delta-touched buckets (keys never cross
-            # buckets, so untouched buckets are already ≤1 row/key and
-            # scan merge-free) — the resolve shuffle costs O(touched
-            # data), mirroring selective compaction's discipline
-            touched = {int(b) for b in last.get("delta_buckets", {})}
-            tfiles = self._doc_files(last, "buckets", touched) + deltas
-            cols = [n for n, _ in self.columns()]
-            payload = F.struct(
-                F.col("_deleted").alias("_deleted"),
-                *[F.col(n).alias(n) for n in cols],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            df = (
-                spark.read.schema(schema).parquet(*tfiles)
-                .groupBy(*self.key_cols)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["_deleted"] + cols],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-            )
-            n_buckets = self.schema_doc()["n_buckets"]
-            ufiles = self._doc_files(
-                last, "buckets", set(range(n_buckets)) - touched
-            )
-            if ufiles:
-                df = df.unionByName(
-                    spark.read.schema(schema).parquet(*ufiles)
-                )
-        else:
-            files = self._doc_files(last, "buckets")
-            if not files:
-                return spark.createDataFrame([], self.ddl(with_lsn=with_lsn))
-            df = spark.read.schema(schema).parquet(*files)
         df = df.filter(~F.col("_deleted")).drop("_deleted")
-        if not with_lsn:
-            df = df.drop(*LSN_COLS)
-        return df
+        return df if with_lsn else df.drop(*LSN_COLS)
 
     # ---------------------------------------------------------------- merge
 
@@ -351,17 +419,38 @@ class LakeTable:
             return F.pmod(md5_bigint(key.cast("string")), F.lit(n)).cast("int")
         return F.pmod(F.xxhash64(key), F.lit(n)).cast("int")
 
+    @staticmethod
+    def _lineage(df: DataFrame) -> tuple[dict, set[int]]:
+        """Per-chunk applied-LSN ranges of an epoch's rows (``log_file``,
+        ``log_pos``, ``_deleted``) in ONE driver collect (A7), plus the
+        buckets they touch when ``df`` carries ``bucket``."""
+        fields = ["min_pos", "max_pos", "rows", "deletes"]
+        aggs = [
+            F.min("log_pos").alias("min_pos"),
+            F.max("log_pos").alias("max_pos"),
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deletes"),
+        ]
+        with_buckets = "bucket" in df.columns
+        if with_buckets:
+            aggs.append(F.collect_set("bucket").alias("buckets"))
+        rows = df.groupBy("log_file").agg(*aggs).collect()
+        lineage = {r["log_file"]: {k: r[k] for k in fields} for r in rows}
+        touched = {b for r in rows if with_buckets for b in r["buckets"]}
+        return lineage, touched
+
     def merge_into(
         self,
         spark: SparkSession,
         updates: DataFrame,
         epoch_id: str,
-        evolve_schema: bool = True,
         mode: str = "cow",
     ) -> dict:
         """Apply one epoch of per-key winner rows (columns: key + payload +
         ``action`` + LSN columns; ≤1 row per key — run ``last_writer``
         upstream).  Returns commit stats; re-delivered epochs are no-ops.
+        Payload columns the table does not have yet are added first
+        (ADD COLUMN); table columns the updates lack are written NULL.
 
         ``mode='cow'`` (default): copy-on-write — rewrite every touched
         bucket to ≤1 row/key.  Reads stay merge-free; writes amplify by
@@ -370,239 +459,64 @@ class LakeTable:
         bucket-partitioned DELTA files without reading the base; write
         cost is O(epoch changes) regardless of table size, and
         ``snapshot_df``/``compact`` resolve per-key winners across
-        base + deltas with the same max_by-over-LSN reduce.  The
-        write-optimized regime for uniformly-hot change patterns
-        (BENCH/MERGE.md); compact on a cadence to bound read fan-in.
-        Modes may be mixed — a CoW epoch folds the touched buckets'
-        outstanding deltas into the base it rewrites."""
-        if epoch_id in self.committed_epochs():
+        base + deltas with the same reduce.  The write-optimized regime
+        for uniformly-hot change patterns (BENCH/MERGE.md); compact on a
+        cadence to bound read fan-in.  Modes may be mixed — a CoW epoch
+        folds the touched buckets' outstanding deltas into the base it
+        rewrites."""
+        if epoch_id in self._healed_epochs():
             return {"epoch_id": epoch_id, "skipped": True}
 
-        if evolve_schema:
-            known = {c[0] for c in self.columns()} | set(LSN_COLS) | {"action"}
-            new = [
-                (f.name, f.dataType.simpleString())
-                for f in updates.schema.fields
-                if f.name not in known
-            ]
-            if new:
-                self.add_columns(new)
-
-        cols = self.columns()
-        col_names = [n for n, _ in cols]
-        key = self.key_cols
-
-        # normalize update projection to the (possibly evolved) table schema
-        upd = updates
-        for n, t in cols:
-            if n not in upd.columns:
-                upd = upd.withColumn(n, F.lit(None).cast(t))
-        upd = upd.select(
-            *[F.col(n).cast(t).alias(n) for n, t in cols],
+        self.add_columns([
+            (f.name, f.dataType.simpleString())
+            for f in updates.schema.fields
+            if f.name not in set(LSN_COLS) | {"action"}
+        ])
+        upd = updates.select(
+            *[
+                (F.col(n) if n in updates.columns else F.lit(None))
+                .cast(t).alias(n)
+                for n, t in self.columns()
+            ],
             *[F.col(n).cast(t).alias(n) for n, t in LSN_FIELDS],
-            F.col("action"),
+            (F.col("action") == "delete").alias("_deleted"),
         ).withColumn("bucket", self._bucket_expr())
-        n_buckets = self.schema_doc()["n_buckets"]
 
-        # FUSED single-pass path (round 7, guide §1.2 "remove passes"):
-        # MOR epochs and initial loads never read the base, so the epoch
-        # needs ONE job — decode → winners → bucketed write — and both
-        # lineage and the touched-bucket set are aggregated from the
-        # WRITTEN parquet afterwards (a 1-epoch scan, ~10x smaller than
-        # re-running the update plan).  This removes the upd persist (a
-        # full extra materialization of the winners) and the separate
-        # lineage job over the update plan.  The CoW-with-base path
-        # below still needs `touched` BEFORE it can plan the rewrite, so
-        # it keeps the persist + upfront lineage collect.
-        has_base = bool(self.live_files() or self.delta_files())
-        if mode == "mor" or not has_base:
-            merged = (
-                upd.withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
+        if mode == "mor" or not (self.live_files() or self.delta_files()):
+            # FUSED single pass: MOR epochs and initial loads never read
+            # the base, so the epoch is ONE job — decode → winners →
+            # bucketed write — and lineage is aggregated from the WRITTEN
+            # leaf files afterwards (a 3-column scan of one epoch, ~10x
+            # cheaper than re-running or persisting the update plan)
+            written = self._write_epoch(
+                upd, epoch_id, self.schema_doc()["n_buckets"]
             )
-            epoch_dir = self._write_epoch(
-                merged, epoch_id, max(1, min(n_buckets, 200))
-            )
-            # touched buckets = the partition dirs the write produced; the
-            # lineage scan reads the LEAF files directly (no partition
-            # discovery) and only the 3 columns it aggregates — the
-            # narrowest possible read-back of the written epoch
-            bucket_dirs = globmod.glob(os.path.join(epoch_dir, "bucket=*"))
-            touched = {int(d.rsplit("=", 1)[1]) for d in bucket_dirs}
-            epoch_files = [
-                f for d in bucket_dirs
-                for f in globmod.glob(os.path.join(d, "*.parquet"))
+            touched = set(written)
+            files = [
+                os.path.join(self.path, f) for fs in written.values() for f in fs
             ]
-            if epoch_files:
-                lineage_rows = (
+            lineage = {}
+            if files:  # an empty epoch writes no files
+                lineage, _ = self._lineage(
                     spark.read.schema(
                         "log_file string, log_pos bigint, _deleted boolean"
-                    )
-                    .parquet(*epoch_files)
-                    .groupBy("log_file")
-                    .agg(
-                        F.min("log_pos").alias("min_pos"),
-                        F.max("log_pos").alias("max_pos"),
-                        F.count(F.lit(1)).alias("rows"),
-                        F.sum(
-                            F.when(F.col("_deleted"), 1).otherwise(0)
-                        ).alias("deletes"),
-                    )
-                    .collect()
+                    ).parquet(*files)
                 )
-            else:  # empty epoch: nothing written, nothing touched
-                lineage_rows = []
-            lineage = {
-                r["log_file"]: {
-                    "min_pos": r["min_pos"],
-                    "max_pos": r["max_pos"],
-                    "rows": r["rows"],
-                    "deletes": r["deletes"],
-                }
-                for r in lineage_rows
-            }
-            return self._finish_commit(
-                epoch_dir, epoch_id, mode, touched, lineage, n_buckets
-            )
-
-        # the updates plan (decode → dedup → winners) is consumed three
-        # times below (touched buckets, lineage, merge write) — persist it
-        # or the whole upstream recomputes each time
-        upd = upd.persist()
-
-        # ONE driver collect serves both bucket pruning and lineage (A7):
-        # per-chunk applied-LSN ranges + the set of touched buckets
-        lineage_rows = (
-            upd.groupBy("log_file")
-            .agg(
-                F.min("log_pos").alias("min_pos"),
-                F.max("log_pos").alias("max_pos"),
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(
-                    F.when(F.col("action") == "delete", 1).otherwise(0)
-                ).alias("deletes"),
-                F.collect_set("bucket").alias("buckets"),
-            )
-            .collect()
-        )
-        lineage = {
-            r["log_file"]: {
-                "min_pos": r["min_pos"],
-                "max_pos": r["max_pos"],
-                "rows": r["rows"],
-                "deletes": r["deletes"],
-            }
-            for r in lineage_rows
-        }
-        touched: set[int] = set()
-        for r in lineage_rows:
-            touched.update(r["buckets"])
-
-        # a CoW epoch folds any outstanding deltas of its touched
-        # buckets into the base it rewrites
-        cur_files = self.live_files(touched) + self.delta_files(touched)
-        if cur_files:
-            cur = (
-                spark.read.schema(self.ddl(with_lsn=True, with_tombstone=True))
-                .parquet(*cur_files)
-                .withColumn(
-                    "action",
-                    F.when(F.col("_deleted"), F.lit("delete")).otherwise(
-                        F.lit("keep")
-                    ),
-                )
-                .drop("_deleted")
-                .withColumn("bucket", self._bucket_expr())
-            )
-            combined = cur.unionByName(upd)
-            payload = F.struct(
-                F.col("action").alias("action"),
-                *[F.col(n).alias(n) for n in col_names],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            merged = (
-                combined.groupBy(*key)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["action"] + col_names],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-                .withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
-                .withColumn("bucket", self._bucket_expr())
-            )
         else:
-            # empty target (initial load): updates are already ≤1 row/key
-            # (last_writer upstream) — skip the merge shuffle entirely;
-            # deletes still land as tombstones for late-epoch safety
-            merged = (
-                upd.withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
-            )
-
-        epoch_dir = self._write_epoch(
-            merged, epoch_id, max(1, min(len(touched), 200))
-        )
-        upd.unpersist(blocking=False)
-        return self._finish_commit(
-            epoch_dir, epoch_id, mode, touched, lineage, n_buckets
-        )
-
-    def _write_epoch(self, merged, epoch_id: str, n_parts: int) -> str:
-        """Write one epoch's merged rows bucket-partitioned; returns the
-        epoch directory."""
-        safe_epoch = "".join(
-            ch if ch.isalnum() or ch in "-_." else "_" for ch in epoch_id
-        )
-        epoch_dir = os.path.join(self.path, "data", f"ep={safe_epoch}")
-        (
-            merged.repartition(n_parts, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(epoch_dir)
-        )
-        return epoch_dir
-
-    def _finish_commit(
-        self,
-        epoch_dir: str,
-        epoch_id: str,
-        mode: str,
-        touched: set[int],
-        lineage: dict,
-        n_buckets: int,
-    ) -> dict:
-        """Fold the written epoch files into the manifest and commit."""
-        new_bucket_files: dict[str, list[str]] = {}
-        for bdir in globmod.glob(os.path.join(epoch_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_bucket_files[b] = sorted(
-                globmod.glob(os.path.join(bdir, "*.parquet"))
-            )
-
-        last = self.last_commit()
-        buckets = dict(last["buckets"]) if last else {}
-        delta_buckets = dict(last.get("delta_buckets", {})) if last else {}
-        if mode == "mor":
-            for sb, fs in new_bucket_files.items():
-                delta_buckets[sb] = delta_buckets.get(sb, []) + fs
-        else:
-            for b in range(n_buckets):
-                sb = str(b)
-                if b in touched:
-                    buckets[sb] = new_bucket_files.get(sb, [])
-                    delta_buckets.pop(sb, None)  # folded into the base
-        doc = {
-            "epoch_id": epoch_id,
-            "schema_version": self.schema_doc()["version"],
-            "buckets": buckets,
-            "delta_buckets": delta_buckets,
-            "lineage": lineage,
-            "touched_buckets": sorted(touched),
-            "mode": mode,
-            "wall_time": time.time(),
-        }
-        self._commit(doc)
+            # copy-on-write over a base: `touched` must be known before
+            # the rewrite can be planned, so the updates plan (decode →
+            # winners) is persisted — it feeds the lineage collect and
+            # the merge write
+            upd = upd.persist()
+            lineage, touched = self._lineage(upd)
+            # the touched buckets' outstanding deltas fold into the base
+            base = self.live_files(touched) + self.delta_files(touched)
+            merged = self._resolve(
+                self._read(spark, base).unionByName(upd.drop("bucket"))
+            ).withColumn("bucket", self._bucket_expr())
+            written = self._write_epoch(merged, epoch_id, len(touched))
+            upd.unpersist(blocking=False)
+        self._publish(epoch_id, mode, written, touched, lineage)
         return {
             "epoch_id": epoch_id,
             "skipped": False,
@@ -610,14 +524,38 @@ class LakeTable:
             "lineage": lineage,
         }
 
+    def _write_epoch(
+        self, df: DataFrame, epoch_id: str, n_parts: int
+    ) -> dict[int, list[str]]:
+        """Write one epoch's rows bucket-partitioned under
+        ``data/ep=<epoch_id>``; returns ``{bucket: [files]}``, the files
+        relative to the table root (manifest entries)."""
+        safe_epoch = "".join(
+            ch if ch.isalnum() or ch in "-_." else "_" for ch in epoch_id
+        )
+        epoch_dir = os.path.join(self.path, "data", f"ep={safe_epoch}")
+        (
+            df.repartition(max(1, min(n_parts, 200)), "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(epoch_dir)
+        )
+        written: dict[int, list[str]] = {}
+        files = globmod.glob(os.path.join(epoch_dir, "bucket=*", "*.parquet"))
+        for f in sorted(files):
+            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            written.setdefault(b, []).append(os.path.relpath(f, self.path))
+        return written
+
     # ---------------------------------------------------------- maintenance
 
     def vacuum(self) -> dict:
         """Delete data files no longer referenced by the current manifest
         (epochs fully superseded by later merges) — the disk-leak fix for
         long replays.  Always safe: only unreferenced files are touched;
-        crash-orphans (data written, manifest never renamed) are collected
-        too.  Returns {files_removed, bytes_reclaimed, dirs_removed}."""
+        crash-orphans (data written, manifest never published) are
+        collected too.  Returns {files_removed, bytes_reclaimed,
+        dirs_removed}."""
         live = {
             os.path.realpath(f)
             for f in self.live_files() + self.delta_files()
@@ -649,12 +587,11 @@ class LakeTable:
         self,
         spark: SparkSession,
         purge_tombstones: bool = False,
-        vacuum_after: bool = True,
         buckets: set[int] | None = None,
     ) -> dict:
         """Rewrite live buckets into one epoch (coalesces the
         many-small-files accumulation of incremental merges and folds
-        outstanding MOR deltas).
+        outstanding MOR deltas), then ``vacuum`` the superseded files.
 
         ``buckets``: restrict the rewrite to these bucket ids —
         SELECTIVE compaction, the 100 TB shape: ``maintain`` passes only
@@ -669,77 +606,26 @@ class LakeTable:
         caller asserts that, typically after a full replay has drained
         its source.
         """
-        files = self.live_files(buckets)
-        deltas = self.delta_files(buckets)
-        if not files and not deltas:
+        last = self.last_commit()
+        df = self._scan(spark, last, buckets) if last is not None else None
+        if df is None:
             return {"skipped": True}
-        df = spark.read.schema(
-            self.ddl(with_lsn=True, with_tombstone=True)
-        ).parquet(*(files + deltas))
-        if deltas:
-            # fold outstanding MOR deltas: resolve per-key winners with
-            # the same reduce snapshot_df uses before rewriting the base
-            cols = [n for n, _ in self.columns()]
-            payload = F.struct(
-                F.col("_deleted").alias("_deleted"),
-                *[F.col(n).alias(n) for n in cols],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            df = (
-                df.groupBy(*self.key_cols)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["_deleted"] + cols],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-            )
         if purge_tombstones:
             df = df.filter(~F.col("_deleted"))
-        df = df.withColumn("bucket", self._bucket_expr())
-        n_buckets = self.schema_doc()["n_buckets"]
-        if self._next_seq is None:
-            self._next_seq = len(self.commits()) + 1
         sel = (
-            set(range(n_buckets)) if buckets is None else {int(b) for b in buckets}
+            set(range(self.schema_doc()["n_buckets"]))
+            if buckets is None
+            else {int(b) for b in buckets}
         )
         epoch_id = f"compact-{self._next_seq:07d}"
-        epoch_dir = os.path.join(self.path, "data", f"ep={epoch_id}")
-        (
-            df.repartition(max(1, min(len(sel), 200)), "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(epoch_dir)
+        written = self._write_epoch(
+            df.withColumn("bucket", self._bucket_expr()), epoch_id, len(sel)
         )
-        new_bucket_files: dict[str, list[str]] = {}
-        for bdir in globmod.glob(os.path.join(epoch_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_bucket_files[b] = sorted(
-                globmod.glob(os.path.join(bdir, "*.parquet"))
-            )
-        last = self.last_commit()
-        bmap = dict(last["buckets"]) if last else {}
-        dmap = dict(last.get("delta_buckets", {})) if last else {}
-        for b in sel:
-            sb = str(b)
-            bmap[sb] = new_bucket_files.get(sb, [])
-            dmap.pop(sb, None)  # selected buckets' deltas are folded
-        self._commit(
-            {
-                "epoch_id": epoch_id,
-                "schema_version": self.schema_doc()["version"],
-                "buckets": bmap,
-                "delta_buckets": dmap,
-                "lineage": (last or {}).get("lineage", {}),
-                "touched_buckets": sorted(sel),
-                "compaction": True,
-                "purged_tombstones": purge_tombstones,
-                "wall_time": time.time(),
-            }
+        self._publish(
+            epoch_id, "cow", written, sel, last.get("lineage", {}),
+            compaction=True, purged_tombstones=purge_tombstones,
         )
-        stats = {"epoch_id": epoch_id, "skipped": False}
-        if vacuum_after:
-            stats["vacuum"] = self.vacuum()
-        return stats
+        return {"epoch_id": epoch_id, "skipped": False, "vacuum": self.vacuum()}
 
     def maintain(
         self, spark: SparkSession, max_files_per_bucket: int = 8
@@ -766,8 +652,6 @@ class LakeTable:
             return {
                 "compacted": True,
                 "compacted_buckets": sorted(frag_buckets),
-                **self.compact(
-                    spark, vacuum_after=True, buckets=frag_buckets
-                ),
+                **self.compact(spark, buckets=frag_buckets),
             }
         return {"compacted": False, "vacuum": self.vacuum()}

@@ -77,31 +77,21 @@ import tempfile  # noqa: E402
 
 lake = tempfile.mkdtemp(prefix="mbs_plan_lake_")
 t = LakeTable.create(lake, IMAGE_COLS[:6], ["conv_id", "turn_idx"], n_buckets=64)
-from mysql_binlog_spark.sources.binlog import NULLABLE_META  # noqa: E402
-
-dec3 = read_binlog(spark, glob, image_cols=IMAGE_COLS,
-                   include={("app", "transcripts")},
-                   before_mode="delete_only",
-                   null_cols=NULLABLE_META)  # mirrors replay prepare()
-w = _epoch_winners(t, dec3, [n for n, _ in IMAGE_COLS])
+w = _epoch_winners(spark, t, glob, IMAGE_COLS, [("app", "transcripts")],
+                   None)  # replay prepare()'s decode → winners
 save("apply_winners", w)
 
 # the fused single-pass epoch write input (round 7): winners normalized to
-# the table schema + bucket + tombstone flag — the exact DataFrame
+# the table schema + tombstone flag + bucket — the exact DataFrame
 # merge_into's fused path writes (partitionBy bucket) in ONE job
-cols6 = t.columns()
-upd = w
-for nm, ty in cols6:
-    if nm not in upd.columns:
-        upd = upd.withColumn(nm, F.lit(None).cast(ty))
 from mysql_binlog_spark.table import LSN_FIELDS  # noqa: E402
 
-upd = upd.select(
-    *[F.col(nm).cast(ty).alias(nm) for nm, ty in cols6],
+merged = w.select(
+    *[(F.col(nm) if nm in w.columns else F.lit(None)).cast(ty).alias(nm)
+      for nm, ty in t.columns()],
     *[F.col(nm).cast(ty).alias(nm) for nm, ty in LSN_FIELDS],
-    F.col("action"),
+    (F.col("action") == "delete").alias("_deleted"),
 ).withColumn("bucket", t._bucket_expr())
-merged = upd.withColumn("_deleted", F.col("action") == "delete").drop("action")
 save("apply_fused_write", merged.repartition(64, "bucket"))
 
 # q4 salted_last_writer

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -348,3 +349,193 @@ def test_manifest_time_travel_reads_every_version(spark):
     assert snap(at_commit=2) == [("a", 1), ("b", 2), ("c", 2)]
     assert snap(at_commit=3) == [("b", 2), ("c", 2)]  # MOR delta resolved
     assert snap() == snap(at_commit=3)
+
+
+def _snap(spark, t, **kw):
+    return sorted((r.k, r.v) for r in t.snapshot_df(spark, **kw).collect())
+
+
+def test_moved_lake_reads_every_version_and_vacuums_nothing_live(spark):
+    """Manifest entries are relative to the table root: a lake moved as a
+    directory serves its current snapshot and every historical version
+    at the new path, and vacuum there keeps every live file (with
+    absolute entries it would read, and protect, the old path)."""
+    root = tempfile.mkdtemp(prefix="mbs_move_")
+    t = LakeTable.create(
+        os.path.join(root, "lake"),
+        columns=[("k", "string"), ("v", "int")],
+        key_cols=["k"],
+        n_buckets=4,
+    )
+    t.merge_into(spark, _updates(spark, 1, ["a", "b", "c"]), "e1")
+    t.merge_into(spark, _updates(spark, 2, ["b"]), "e2")
+    t.merge_into(spark, _updates(spark, 3, ["a"], "delete"), "e3", mode="mor")
+    t.merge_into(spark, _updates(spark, 4, ["c", "d"]), "e4", mode="mor")
+    versions = {k: _snap(spark, t, at_commit=k) for k in range(1, 5)}
+    now = _snap(spark, t)
+    assert now == [("b", 2), ("c", 4), ("d", 4)]
+
+    dst = os.path.join(root, "moved", "lake")
+    shutil.move(t.path, dst)
+    moved = LakeTable(dst)
+    assert _snap(spark, moved) == now
+    for k, rows in versions.items():
+        assert _snap(spark, moved, at_commit=k) == rows
+    live = moved.live_files() + moved.delta_files()
+    assert live and all(f.startswith(dst + os.sep) for f in live)
+    moved.vacuum()
+    assert all(os.path.exists(f) for f in live)
+    assert _snap(spark, moved) == now
+
+
+def test_legacy_absolute_manifest_entries_still_resolve(spark, table):
+    """Manifests written with absolute data-file paths (the older
+    layout) read, vacuum and accept new commits unchanged."""
+    table.merge_into(spark, _updates(spark, 1, ["a", "b"]), "e1")
+    table.merge_into(spark, _updates(spark, 2, ["c"]), "e2", mode="mor")
+    for c in table.commits():
+        with open(c) as f:
+            doc = json.load(f)
+        for kind in ("buckets", "delta_buckets"):
+            doc[kind] = {
+                b: [os.path.join(table.path, e) for e in fs]
+                for b, fs in doc[kind].items()
+            }
+        with open(c, "w") as f:
+            json.dump(doc, f)
+    legacy = LakeTable(table.path)
+    assert os.path.isabs(legacy.last_commit()["buckets"][
+        next(iter(legacy.last_commit()["buckets"]))
+    ][0])
+    assert _snap(spark, legacy) == [("a", 1), ("b", 1), ("c", 2)]
+    assert _snap(spark, legacy, at_commit=1) == [("a", 1), ("b", 1)]
+    assert legacy.vacuum()["files_removed"] == 0
+    # a new commit mixes relative entries with the legacy absolute ones
+    legacy.merge_into(spark, _updates(spark, 3, ["a", "c"]), "e3")
+    assert _snap(spark, legacy) == [("a", 3), ("b", 1), ("c", 3)]
+    legacy.vacuum()
+    assert _snap(spark, legacy) == [("a", 3), ("b", 1), ("c", 3)]
+
+
+def test_two_writers_conflict_instead_of_losing_a_commit(spark, table):
+    """Two handles that both planned commit 1: the second publish raises
+    instead of replacing the first manifest, and the losing handle's
+    retry commits on top of the winner's."""
+    a, b = LakeTable(table.path), LakeTable(table.path)
+    for t in (a, b):
+        t.committed_epochs()
+        t.last_commit()  # both now plan to publish c0000001.json
+    a.merge_into(spark, _updates(spark, 1, ["a"]), "writer-a")
+    with pytest.raises(FileExistsError, match="commit conflict"):
+        b.merge_into(spark, _updates(spark, 2, ["b"]), "writer-b")
+    fresh = LakeTable(table.path)
+    assert len(fresh.commits()) == 1
+    assert fresh.commit_at(1)["epoch_id"] == "writer-a"
+    assert _snap(spark, fresh) == [("a", 1)]
+    assert not glob.glob(os.path.join(table.path, "_commits", "*.tmp*"))
+
+    b.merge_into(spark, _updates(spark, 2, ["b"]), "writer-b")
+    fresh = LakeTable(table.path)
+    assert [fresh.commit_at(s)["epoch_id"] for s in (1, 2)] == [
+        "writer-a", "writer-b"
+    ]
+    assert _snap(spark, fresh) == [("a", 1), ("b", 2)]
+
+
+@pytest.mark.parametrize("first_after_crash", ["redeliver", "compact"])
+def test_crash_between_publish_and_epoch_log_is_healed(
+    spark, table, monkeypatch, first_after_crash
+):
+    """A crash after the manifest publish but before the epochs.log
+    append: on reopen, the re-delivered epoch is skipped (not applied a
+    second time), its id lands in the log exactly once, and its lineage
+    is committed once — whether the next call is the re-delivery itself
+    or a compaction that commits first."""
+    import builtins
+
+    import mysql_binlog_spark.table as tmod
+
+    table.merge_into(spark, _updates(spark, 1, ["a", "b"]), "ep-1")
+
+    def crashing_open(path, mode="r", *a, **k):
+        if str(path).endswith("epochs.log") and "a" in mode:
+            raise OSError("simulated crash before the epoch-log append")
+        return builtins.open(path, mode, *a, **k)
+
+    monkeypatch.setattr(tmod, "open", crashing_open, raising=False)
+    with pytest.raises(OSError, match="simulated crash"):
+        table.merge_into(spark, _updates(spark, 2, ["b", "c"]), "ep-2")
+    monkeypatch.undo()
+
+    reopened = LakeTable(table.path)
+    assert "ep-2" not in reopened.committed_epochs()  # the log missed it
+    if first_after_crash == "compact":
+        reopened.compact(spark)
+    r = reopened.merge_into(spark, _updates(spark, 2, ["b", "c"]), "ep-2")
+    assert r["skipped"] is True
+    with open(os.path.join(table.path, "_commits", "epochs.log")) as f:
+        logged = f.read().split()
+    assert logged.count("ep-1") == 1 and logged.count("ep-2") == 1
+    docs = [reopened.commit_at(s) for s in range(1, len(reopened.commits()) + 1)]
+    ep2 = [d for d in docs if d["epoch_id"] == "ep-2"]
+    assert len(ep2) == 1
+    assert sum(v["rows"] for v in ep2[0]["lineage"].values()) == 2
+    assert _snap(spark, reopened) == [("a", 1), ("b", 2), ("c", 2)]
+    assert "ep-2" in LakeTable(table.path).committed_epochs()
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_mixed_mode_sequences_match_last_writer_oracle(spark, seed):
+    """Seeded sequences of copy-on-write and merge-on-read epochs with
+    out-of-order LSNs, deletes and re-inserts, interleaved with
+    ``maintain(max_files_per_bucket=2)`` and (selective) ``compact``:
+    after every step the snapshot equals a pandas last-writer-by-LSN
+    oracle over every event applied so far."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(seed)
+    t = LakeTable.create(
+        tempfile.mkdtemp(prefix=f"mbs_mixed_{seed}_"),
+        columns=[("k", "string"), ("v", "int")],
+        key_cols=["k"],
+        n_buckets=4,
+    )
+    positions = rng.sample(range(1, 10_000), 64)  # unique, out of order
+    events = []
+    ops = ["cow", "mor", "mor"] + rng.sample(
+        ["cow", "mor", "mor", "maintain", "compact"], 5
+    )
+    for step, op in enumerate(ops):
+        if op in ("cow", "mor"):
+            rows = [
+                (k, rng.randrange(100),
+                 "delete" if rng.random() < 0.3 else "insert",
+                 "binlog.000001", positions.pop(), 0, 1)
+                for k in rng.sample("abcdefgh", rng.randint(1, 5))
+            ]
+            events += rows
+            t.merge_into(
+                spark,
+                spark.createDataFrame(
+                    rows,
+                    "k string, v int, action string, log_file string,"
+                    " log_pos bigint, batch_seq int, server_id bigint",
+                ),
+                f"s{seed}-{step}",
+                mode=op,
+            )
+        elif op == "maintain":
+            t.maintain(spark, max_files_per_bucket=2)
+        else:
+            t.compact(spark, buckets=rng.choice([None, {0, 1}, {2}]))
+        ev = pd.DataFrame(
+            events,
+            columns=["k", "v", "action", "log_file", "log_pos", "bs", "sid"],
+        )
+        win = ev.sort_values("log_pos").groupby("k").tail(1)
+        want = sorted(
+            (r.k, r.v) for r in win.itertuples() if r.action != "delete"
+        )
+        assert _snap(spark, t) == want, (seed, step, op)
