@@ -79,11 +79,6 @@ def transcripts_schema(
                        primary_key=(0, 1), table_id=table_id)
 
 
-def _ts_pair(val) -> tuple[int, int]:
-    ns = pd.Timestamp(val).value
-    return ns // 1_000_000_000, (ns % 1_000_000_000) // 1_000
-
-
 def _image(row, cols, ts_key: str = "_ts") -> dict:
     """Build a wire image dict; ``ts`` comes pre-vectorized as a
     (sec, micro) tuple under ``ts_key`` (per-row pd.Timestamp conversion

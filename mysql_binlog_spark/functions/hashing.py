@@ -99,15 +99,6 @@ def minhash_signature_sql(shingles_expr: str, k: int = 12) -> list[str]:
     ]
 
 
-def python_minhash_signature(shingles: list[str], k: int = 12) -> list[int]:
-    """Pure-Python twin for pytest oracles."""
-    bases = [python_md5_bigint(s) for s in shingles]
-    return [
-        min(((h * a + b) & _MH_MASK) for h in bases)
-        for a, b in _mh_params(k)
-    ]
-
-
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic ±1 random hyperplanes for sign-LSH over embeddings.
     Derived from md5 of (plane, dim) — no RNG, reproducible everywhere;

@@ -53,7 +53,3 @@ def to_json_events(
         F.to_json(doc, {"ignoreNullFields": "true"}).alias("json")
     )
 
-
-def write_json_sink(decoded: DataFrame, image_cols: list[str], path: str) -> None:
-    """Batch JSON emission (debug sink)."""
-    to_json_events(decoded, image_cols).write.mode("overwrite").text(path)

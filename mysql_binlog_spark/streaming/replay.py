@@ -4,15 +4,17 @@ Two paths, same apply logic (SURVEY.md §3.3 lifecycle):
 
 * ``replay_batch`` — groups chunk files into epochs in natural-sort order
   (the reference's binlog-file ordering, Connection.php:120), decodes each
-  group, reduces to per-key winners and merges.  Resumable: committed
-  epoch ids are skipped, so re-running after a crash continues where the
-  commit log stopped (north-rule A5/A6 — the commit log *is* the
-  checkpoint).
+  group and merges it.  Resumable: committed epoch ids are skipped, so
+  re-running after a crash continues where the commit log stopped
+  (north-rule A5/A6 — the commit log *is* the checkpoint).
 * ``replay_stream`` — Structured Streaming over the chunk directory
   (file source, ``maxFilesPerTrigger``), ``foreachBatch`` applying the same
   batch logic with the streaming epoch id; Spark's checkpointLocation
   provides offset tracking, our idempotent commits make retried batches
   exactly-once.
+
+Neither reduces to per-key winners itself: ``LakeTable`` does, once per
+epoch, in its write's bucket exchange (or in ``stage`` when prefetched).
 """
 
 from __future__ import annotations
@@ -23,11 +25,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.apply import last_writer
 from ..sources.binlog import NULLABLE_META, image_view, read_binlog
-from ..table import LakeTable
+from ..table import LSN_COLS, LakeTable
 
-# The apply path never reads these meta columns (winners carry only key +
+# The apply path never reads these meta columns (it keeps only key +
 # payload + LSN + action; lineage reads log_file/log_pos), so it has
 # read_binlog emit them all-NULL: same schema, ~300 MB less Arrow IPC +
 # JVM row conversion per 5.8 M events (guide §4).
@@ -45,21 +46,20 @@ class ReplayStats:
 
 def _epoch_winners(
     spark: SparkSession,
-    table: LakeTable,
     paths: list[str],
     image_cols: list[tuple[str, str]] | None,
     include: list | None,
     exclude: list | None,
     **decode,
 ):
-    """The table-state-INDEPENDENT half of an epoch: decode ``paths``
+    """The rows an epoch applies, any number per key: decode ``paths``
     (the include/exclude filter runs IN-KERNEL, so no ``filter_tables``
     here — it would drop every row of the decode, whose
     schema_name/table_name are nulled, see ``read_binlog(null_cols)``)
-    → image → per-key winners.  ``decode`` passes the position, GTID,
-    error and CRC options through to ``read_binlog``.  Safe to run ahead
-    of the previous epoch's merge/commit (see replay_batch's one-deep
-    pipeline)."""
+    → image → key + payload + ``action`` + LSN columns.  ``decode``
+    passes the position, GTID, error and CRC options through to
+    ``read_binlog``.  Table-state independent (see replay_batch's
+    one-deep pipeline)."""
     decoded = read_binlog(
         spark, paths, image_cols=image_cols,
         include=set(include) if include is not None else None,
@@ -74,14 +74,9 @@ def _epoch_winners(
         else [f.name[len("after_"):] for f in decoded.schema.fields
               if f.name.startswith("after_")]
     )
-    # NB: no dedup_lsn stage here — exact re-deliveries share both LSN and
-    # payload, so max_by in last_writer picks an identical row either way;
-    # an explicit dropDuplicates would only add a second full-width shuffle.
-    # (dedup_lsn remains a standalone operator for stats/count paths.)
-    return last_writer(
-        image_view(decoded, cols), key_cols=table.key_cols,
-        payload_cols=[c for c in cols if c not in table.key_cols],
-    )
+    # NB: no dedup_lsn stage — exact re-deliveries share LSN and payload,
+    # so the table's per-key max_by picks an identical row either way.
+    return image_view(decoded, cols).select(*cols, "action", *LSN_COLS)
 
 
 def replay_batch(
@@ -145,7 +140,7 @@ def replay_batch(
     if start_lsn is not None:
         chunks = [f for f in chunks if f >= start_lsn[0]]
     stats = ReplayStats()
-    done = table.committed_epochs()
+    done = table._healed_epochs()  # a crash may have skipped a log append
     groups = [
         chunks[i : i + files_per_epoch]
         for i in range(0, len(chunks), files_per_epoch)
@@ -161,31 +156,24 @@ def replay_batch(
     todo = [(eid, g) for eid, g, skipped in plan if not skipped]
 
     def prepare(group, materialize: bool = True):
-        """Build the epoch's winners plan (decode → filter → image →
-        last_writer) — every bit of it independent of table state.
-
-        ``materialize=True`` (the PREFETCHED epoch) persists + counts so
-        the work runs while the PREVIOUS epoch merges/commits.
-        ``materialize=False`` (round 7): an epoch consumed inline with
-        nothing to overlap returns the LAZY plan — merge_into's fused
-        single-pass path (MOR / initial load) then runs decode → winners
-        → write as ONE job instead of paying a full cache
-        materialization first."""
-        w = _epoch_winners(
-            spark, table, [os.path.join(chunk_dir, f) for f in group],
+        """The epoch's rows.  ``materialize=True`` (the PREFETCHED epoch)
+        stages them (``table.stage``) so the work runs while the PREVIOUS
+        epoch merges/commits.  ``materialize=False``: an epoch consumed
+        inline with nothing to overlap stays LAZY — merge_into's fused
+        path (MOR / initial load) then runs decode → reduce → write as
+        ONE job instead of paying a full cache materialization first."""
+        rows = _epoch_winners(
+            spark, [os.path.join(chunk_dir, f) for f in group],
             image_cols, include, exclude, start_lsn=start_lsn,
             start_after_gtid=start_after_gtid, on_error=on_error,
             verify_crc=verify_crc,
         )
-        if materialize:
-            w = w.persist()
-            w.count()
-        return w
+        return table.stage(rows) if materialize else rows
 
     # One-deep epoch pipeline (round-5 width fix): while epoch N's merge
-    # shuffles/writes and its manifest commits (serial driver JSON I/O +
-    # a driver-side lineage collect), epoch N+1's decode jobs run from a
-    # second submitter thread and fill the idle cores of N's stage tails.
+    # shuffles/writes and its manifest commits (serial driver JSON I/O),
+    # epoch N+1's decode + staging job runs from a second submitter
+    # thread and fills the idle cores of N's stage tails.
     # FIFO scheduling gives N's tasks priority; N+1 only uses slack.
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = None
@@ -199,7 +187,7 @@ def replay_batch(
                     continue
                 # an inline-prepared epoch (nothing running concurrently
                 # to overlap with) stays lazy so merge_into can fuse
-                # decode → winners → write into one job
+                # decode → reduce → write into one job
                 w = (
                     fut.result()
                     if fut is not None
@@ -279,13 +267,13 @@ def replay_stream(
         if not paths:
             return
         epoch_id = f"stream-{batch_id}-{os.path.basename(sorted(paths)[0])}"
-        w = _epoch_winners(
-            spark, table, paths, image_cols, include, exclude,
+        rows = _epoch_winners(
+            spark, paths, image_cols, include, exclude,
             start_lsn=start_lsn, start_after_gtid=start_after_gtid,
             on_error=on_error, verify_crc=verify_crc,
         )
         stats.epochs.append(
-            table.merge_into(spark, w, epoch_id, mode=merge_mode)
+            table.merge_into(spark, rows, epoch_id, mode=merge_mode)
         )
         if maintain_every and stats.applied % maintain_every == 0:
             table.maintain(spark)

@@ -33,18 +33,24 @@ Every row stores its applied LSN and a ``_deleted`` tombstone flag; the
 winner per key is ``max_by(row, lsn)`` over base ∪ deltas ∪ updates
 (``_resolve``), so a late epoch replaying *older* events can never regress
 a newer row or resurrect a deleted one (last-writer-wins is global, not
-per-batch).
+per-batch).  ``merge_into`` takes any number of rows per key: every write
+(``_write_epoch``) resolves the winners in the bucket exchange the
+partitioned write needs anyway — hash partitioning on ``bucket``
+satisfies the (bucket, key) grouping — so an epoch's reduce and its
+bucketed write are one shuffle.
 
 Commits: an epoch writes its data files, then publishes manifest
 ``c{seq}.json`` with a fail-if-exists hard link — a second writer that
 raced for the same sequence number gets ``FileExistsError`` instead of
 silently replacing a commit — and then appends its id to ``epochs.log``.
 An epoch whose id is already committed is a no-op, so re-delivered
-epochs cannot double-apply (north-rule A6).  A crash after the data write leaves unreferenced orphans only (``vacuum``
-collects them).  A crash between the publish and the log append leaves
-the newest manifest's epoch out of the log; the next ``merge_into`` (or
-commit) sees that from the manifest it reads anyway and appends the
-missing id, so the re-delivered epoch is skipped, not applied twice.
+epochs cannot double-apply (north-rule A6).  A crash after the data
+write leaves unreferenced orphans only (``vacuum`` collects them).  A
+crash between the publish and the log append leaves the newest
+manifest's epoch out of the log; the next ``merge_into`` (or commit, or
+``replay_batch``'s plan) sees that from the manifest it reads anyway and
+appends the missing id, so the re-delivered epoch is skipped, not applied
+(or decoded) twice.
 
 If a real Iceberg catalog is available, this class is the only swap point.
 """
@@ -55,8 +61,10 @@ import glob as globmod
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +78,19 @@ LSN_FIELDS = [
     ("server_id", "bigint"),
 ]
 LSN_COLS = [n for n, _ in LSN_FIELDS]
+_NOT_PAYLOAD = {*LSN_COLS, "action", "_deleted", "bucket"}
+
+
+@dataclass
+class StagedEpoch:
+    """``LakeTable.stage``'s result: an epoch's persisted per-key winners,
+    their per-chunk lineage and the buckets they touch."""
+    rows: DataFrame
+    lineage: dict
+    touched: set[int]
+
+    def unpersist(self, blocking: bool = False) -> None:
+        self.rows.unpersist(blocking=blocking)
 
 
 class LakeTable:
@@ -87,6 +108,11 @@ class LakeTable:
         # thousands-of-epochs replay)
         self._next_seq: int | None = None
         self._last_commit_cache: dict | None | object = _UNSET
+        # the newest schema version; merge_into and compact drop it so
+        # each reads the schema once, and sees another handle's ADD COLUMN.
+        # Locked: a prefetched ``stage`` may load it while a merge writes
+        self._schema: dict | None = None
+        self._schema_lock = threading.Lock()
 
     @property
     def _epochs_log(self) -> str:
@@ -129,13 +155,17 @@ class LakeTable:
         with open(tmp, "w") as f:
             json.dump(doc, f)
         os.rename(tmp, p)
+        self._schema = doc
 
     def schema_versions(self) -> list[str]:
         return sorted(globmod.glob(os.path.join(self.path, "_schema", "v*.json")))
 
     def schema_doc(self) -> dict:
-        with open(self.schema_versions()[-1]) as f:
-            return json.load(f)
+        with self._schema_lock:
+            if self._schema is None:
+                with open(self.schema_versions()[-1]) as f:
+                    self._schema = json.load(f)
+            return self._schema
 
     @property
     def key_cols(self) -> list[str]:
@@ -144,12 +174,9 @@ class LakeTable:
     def columns(self) -> list[tuple[str, str]]:
         return [tuple(c) for c in self.schema_doc()["columns"]]
 
-    def ddl(self, with_lsn: bool = True, with_tombstone: bool = False) -> str:
-        cols = self.columns()
-        if with_lsn:
-            cols = cols + LSN_FIELDS
-        if with_tombstone:
-            cols = cols + [("_deleted", "boolean")]
+    def ddl(self) -> str:
+        """Schema of the data files: the columns, LSN and ``_deleted``."""
+        cols = self.columns() + LSN_FIELDS + [("_deleted", "boolean")]
         return ", ".join(f"{n} {t}" for n, t in cols)
 
     def add_columns(self, new_cols: list[tuple[str, str]]) -> None:
@@ -160,9 +187,10 @@ class LakeTable:
         added = [c for c in new_cols if c[0] not in have]
         if not added:
             return
-        doc["version"] += 1
-        doc["columns"] = doc["columns"] + [list(c) for c in added]
-        self._write_schema(doc)
+        self._write_schema(dict(
+            doc, version=doc["version"] + 1,
+            columns=doc["columns"] + [list(c) for c in added],
+        ))
 
     # -------------------------------------------------------------- commits
 
@@ -269,6 +297,7 @@ class LakeTable:
             self._next_seq = None
             self._last_commit_cache = _UNSET
             self._epochs_cache = None
+            self._schema = None
             raise FileExistsError(
                 f"commit conflict: {p} was published by another writer"
             ) from None
@@ -318,47 +347,38 @@ class LakeTable:
     # ---------------------------------------------------------------- reads
 
     def _read(self, spark: SparkSession, files: list[str]) -> DataFrame:
-        return spark.read.schema(
-            self.ddl(with_lsn=True, with_tombstone=True)
-        ).parquet(*files)
+        return spark.read.schema(self.ddl()).parquet(*files)
 
     def _resolve(self, df: DataFrame) -> DataFrame:
         """Per-key winner: ``max_by(row, lsn)`` — the one reduce behind
-        the copy-on-write merge, merge-on-read reads and compaction.  A
-        tombstone (``_deleted``) wins like any other row, so an older
-        re-insert replayed after a delete cannot resurrect the key."""
-        names = [n for n, _ in self.columns()] + LSN_COLS + ["_deleted"]
-        lsn = F.struct(*LSN_COLS)
+        every write and the merge-on-read snapshot.  A tombstone
+        (``_deleted``) wins like any other row, so an older re-insert
+        replayed after a delete cannot resurrect the key.  ``bucket``, a
+        function of the key, joins the grouping when ``df`` has it, so
+        input hash-partitioned on it needs no second exchange."""
+        group = (["bucket"] if "bucket" in df.columns else []) + self.key_cols
+        rest = [c for c in df.columns if c not in group]
         return (
-            df.groupBy(*self.key_cols)
-            .agg(F.max_by(F.struct(*names), lsn).alias("_w"))
-            .select("_w.*")
+            df.groupBy(*group)
+            .agg(F.max_by(F.struct(*rest), F.struct(*LSN_COLS)).alias("_w"))
+            .select(*[c if c in group else f"_w.{c}" for c in df.columns])
         )
 
-    def _scan(
-        self, spark: SparkSession, doc: dict, buckets: set[int] | None = None
-    ) -> DataFrame | None:
-        """Rows of ``buckets`` (all when None) as of manifest ``doc``, ≤1
-        per key, tombstones included; None when there are no files.  Only
-        buckets with outstanding deltas are resolved: keys never cross
-        buckets, so the others are already ≤1 row/key and scan merge-free
-        — the resolve shuffle costs O(delta-touched data)."""
-        sel = {int(b) for b in doc["buckets"]} | {
-            int(b) for b in doc.get("delta_buckets", {})
-        }
-        if buckets is not None:
-            sel &= {int(b) for b in buckets}
-        hot = {int(b) for b in doc.get("delta_buckets", {})} & sel
-        hot_files = self._files(doc, "buckets", hot) + self._files(
-            doc, "delta_buckets", hot
-        )
-        cold_files = self._files(doc, "buckets", sel - hot)
-        parts = [self._resolve(self._read(spark, hot_files))] if hot_files else []
-        if cold_files:
-            parts.append(self._read(spark, cold_files))
-        if not parts:
-            return None
-        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    def _scan(self, spark: SparkSession, doc: dict) -> DataFrame:
+        """Rows as of manifest ``doc``, ≤1 per key, tombstones included.
+        Only buckets with outstanding deltas are resolved: keys never
+        cross buckets, so the others are already ≤1 row/key and scan
+        merge-free — the resolve shuffle costs O(delta-touched data)."""
+        hot = {int(b) for b in doc.get("delta_buckets", {})}
+        cold = self._read(spark, self._files(
+            doc, "buckets", {int(b) for b in doc.get("buckets", {})} - hot
+        ))
+        if not hot:
+            return cold
+        return self._resolve(self._read(
+            spark,
+            self._files(doc, "buckets", hot) + self._files(doc, "delta_buckets"),
+        )).unionByName(cold)
 
     def snapshot_df(
         self,
@@ -401,9 +421,7 @@ class LakeTable:
                         "readable only until maintenance collects their "
                         "superseded files)"
                     )
-        df = self._scan(spark, doc) if doc is not None else None
-        if df is None:
-            return spark.createDataFrame([], self.ddl(with_lsn=with_lsn))
+        df = self._scan(spark, doc or {})
         df = df.filter(~F.col("_deleted")).drop("_deleted")
         return df if with_lsn else df.drop(*LSN_COLS)
 
@@ -439,18 +457,49 @@ class LakeTable:
         touched = {b for r in rows if with_buckets for b in r["buckets"]}
         return lineage, touched
 
+    def _rows(self, df: DataFrame) -> DataFrame:
+        """``df`` in the table's write layout: the table's columns, cast
+        (NULL where ``df`` lacks one), then the payload columns the table
+        does not have yet, the LSN columns, ``_deleted`` (from ``action``
+        on update rows) and ``bucket``."""
+        cols = self.columns()
+        have = {n for n, _ in cols}
+        deleted = F.col("_deleted") if "_deleted" in df.columns else (
+            F.col("action") == "delete")
+        return df.select(
+            *[
+                (F.col(n) if n in df.columns else F.lit(None)).cast(t).alias(n)
+                for n, t in cols
+            ],
+            *[c for c in df.columns if c not in have | _NOT_PAYLOAD],
+            *[F.col(n).cast(t).alias(n) for n, t in LSN_FIELDS],
+            deleted.alias("_deleted"),
+        ).withColumn("bucket", self._bucket_expr())
+
+    def stage(self, updates: DataFrame) -> StagedEpoch:
+        """The table-state-independent half of an epoch: ``updates`` (as
+        ``merge_into`` takes them) reduced to per-key winners, persisted,
+        with lineage and touched buckets from ONE collect.  Never writes
+        the schema, so it may run while another epoch merges.  Pass the
+        result to ``merge_into``, then unpersist it."""
+        rows = self._resolve(self._rows(updates)).persist()
+        lineage, touched = self._lineage(rows)
+        return StagedEpoch(rows, lineage, touched)
+
     def merge_into(
         self,
         spark: SparkSession,
-        updates: DataFrame,
+        updates: DataFrame | StagedEpoch,
         epoch_id: str,
         mode: str = "cow",
     ) -> dict:
-        """Apply one epoch of per-key winner rows (columns: key + payload +
-        ``action`` + LSN columns; ≤1 row per key — run ``last_writer``
-        upstream).  Returns commit stats; re-delivered epochs are no-ops.
-        Payload columns the table does not have yet are added first
-        (ADD COLUMN); table columns the updates lack are written NULL.
+        """Apply one epoch of change rows (columns: key + payload +
+        ``action`` + LSN columns), any number per key in any order, or a
+        ``StagedEpoch`` of them: per key, the row with the highest LSN
+        wins, against the table's rows too.  Returns commit stats;
+        re-delivered epochs are no-ops.  Payload columns the table does
+        not have yet are added first (ADD COLUMN); table columns the
+        updates lack are written NULL.
 
         ``mode='cow'`` (default): copy-on-write — rewrite every touched
         bucket to ≤1 row/key.  Reads stay merge-free; writes amplify by
@@ -466,56 +515,44 @@ class LakeTable:
         rewrites."""
         if epoch_id in self._healed_epochs():
             return {"epoch_id": epoch_id, "skipped": True}
+        self._schema = None  # read once per epoch, as of now
 
+        staged = updates if isinstance(updates, StagedEpoch) else None
         self.add_columns([
             (f.name, f.dataType.simpleString())
-            for f in updates.schema.fields
-            if f.name not in set(LSN_COLS) | {"action"}
+            for f in (staged.rows if staged else updates).schema.fields
+            if f.name not in _NOT_PAYLOAD
         ])
-        upd = updates.select(
-            *[
-                (F.col(n) if n in updates.columns else F.lit(None))
-                .cast(t).alias(n)
-                for n, t in self.columns()
-            ],
-            *[F.col(n).cast(t).alias(n) for n, t in LSN_FIELDS],
-            (F.col("action") == "delete").alias("_deleted"),
-        ).withColumn("bucket", self._bucket_expr())
-
-        if mode == "mor" or not (self.live_files() or self.delta_files()):
-            # FUSED single pass: MOR epochs and initial loads never read
-            # the base, so the epoch is ONE job — decode → winners →
-            # bucketed write — and lineage is aggregated from the WRITTEN
-            # leaf files afterwards (a 3-column scan of one epoch, ~10x
-            # cheaper than re-running or persisting the update plan)
+        fused = mode == "mor" or not (self.live_files() or self.delta_files())
+        own = staged is None and not fused
+        if own:  # copy-on-write must know `touched` before reading the base
+            staged = self.stage(updates)
+        rows = self._rows(staged.rows if staged else updates)
+        if fused:
+            # MOR epochs and initial loads never read the base: lazy rows
+            # are ONE job (decode → reduce → bucketed write), and their
+            # lineage is a 3-column scan of the files written
             written = self._write_epoch(
-                upd, epoch_id, self.schema_doc()["n_buckets"]
+                rows, epoch_id, self.schema_doc()["n_buckets"]
             )
             touched = set(written)
-            files = [
-                os.path.join(self.path, f) for fs in written.values() for f in fs
-            ]
-            lineage = {}
-            if files:  # an empty epoch writes no files
-                lineage, _ = self._lineage(
-                    spark.read.schema(
-                        "log_file string, log_pos bigint, _deleted boolean"
-                    ).parquet(*files)
-                )
+            files = self._files({"buckets": written}, "buckets")
+            lineage = (
+                staged.lineage if staged
+                else self._lineage(self._read(spark, files))[0]
+            )
         else:
-            # copy-on-write over a base: `touched` must be known before
-            # the rewrite can be planned, so the updates plan (decode →
-            # winners) is persisted — it feeds the lineage collect and
-            # the merge write
-            upd = upd.persist()
-            lineage, touched = self._lineage(upd)
-            # the touched buckets' outstanding deltas fold into the base
-            base = self.live_files(touched) + self.delta_files(touched)
-            merged = self._resolve(
-                self._read(spark, base).unionByName(upd.drop("bucket"))
-            ).withColumn("bucket", self._bucket_expr())
-            written = self._write_epoch(merged, epoch_id, len(touched))
-            upd.unpersist(blocking=False)
+            # one write, one exchange: base(touched) — the touched
+            # buckets' outstanding deltas fold into it — ∪ winners
+            touched, lineage = staged.touched, staged.lineage
+            base = self._read(
+                spark, self.live_files(touched) + self.delta_files(touched)
+            )
+            written = self._write_epoch(
+                self._rows(base).unionByName(rows), epoch_id, len(touched)
+            )
+        if own:
+            staged.unpersist()
         self._publish(epoch_id, mode, written, touched, lineage)
         return {
             "epoch_id": epoch_id,
@@ -525,21 +562,21 @@ class LakeTable:
         }
 
     def _write_epoch(
-        self, df: DataFrame, epoch_id: str, n_parts: int
+        self, df: DataFrame, epoch_id: str, n_parts: int, purge: bool = False
     ) -> dict[int, list[str]]:
-        """Write one epoch's rows bucket-partitioned under
-        ``data/ep=<epoch_id>``; returns ``{bucket: [files]}``, the files
-        relative to the table root (manifest entries)."""
+        """Reduce rows in the write layout (``_rows``) to one winner per
+        key — in the bucket exchange, the plan's only one — and write them
+        bucket-partitioned under ``data/ep=<epoch_id>``; returns
+        ``{bucket: [files]}``, the files relative to the table root
+        (manifest entries).  ``purge`` drops tombstone winners."""
         safe_epoch = "".join(
             ch if ch.isalnum() or ch in "-_." else "_" for ch in epoch_id
         )
         epoch_dir = os.path.join(self.path, "data", f"ep={safe_epoch}")
-        (
-            df.repartition(max(1, min(n_parts, 200)), "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(epoch_dir)
-        )
+        out = self._resolve(df.repartition(max(1, min(n_parts, 200)), "bucket"))
+        if purge:
+            out = out.filter(~F.col("_deleted"))
+        out.write.mode("overwrite").partitionBy("bucket").parquet(epoch_dir)
         written: dict[int, list[str]] = {}
         files = globmod.glob(os.path.join(epoch_dir, "bucket=*", "*.parquet"))
         for f in sorted(files):
@@ -606,12 +643,13 @@ class LakeTable:
         caller asserts that, typically after a full replay has drained
         its source.
         """
+        self._schema = None  # read once per compaction, as of now
         last = self.last_commit()
-        df = self._scan(spark, last, buckets) if last is not None else None
-        if df is None:
+        files = self._files(last, "buckets", buckets) + self._files(
+            last, "delta_buckets", buckets
+        )
+        if not files:
             return {"skipped": True}
-        if purge_tombstones:
-            df = df.filter(~F.col("_deleted"))
         sel = (
             set(range(self.schema_doc()["n_buckets"]))
             if buckets is None
@@ -619,7 +657,8 @@ class LakeTable:
         )
         epoch_id = f"compact-{self._next_seq:07d}"
         written = self._write_epoch(
-            df.withColumn("bucket", self._bucket_expr()), epoch_id, len(sel)
+            self._rows(self._read(spark, files)), epoch_id, len(sel),
+            purge=purge_tombstones,
         )
         self._publish(
             epoch_id, "cow", written, sel, last.get("lineage", {}),

@@ -69,30 +69,51 @@ df2 = image_view(dedup_lsn(df2), [n for n, _ in IMAGE_COLS])
 save("dedup_last_writer",
      last_writer(df2, ["conv_id", "turn_idx"], PAYLOAD).groupBy().count())
 
-# q3 apply_e2e: the two heavy jobs of replay_batch's single epoch —
-# (a) winners materialization, (b) the merged write input
+# q3 apply_e2e: the two heavy jobs of replay_batch's epochs, captured
+# from the table code itself and not run — (a) the prefetch staging job
+# (decode → per-key winners, persisted), (b) the write input of a fused
+# epoch (decode → winners reduced in the bucket exchange → partitionBy)
+import tempfile  # noqa: E402
+
+from pyspark.sql import DataFrameWriter  # noqa: E402
+
 from mysql_binlog_spark.streaming.replay import _epoch_winners  # noqa: E402
 from mysql_binlog_spark.table import LakeTable  # noqa: E402
-import tempfile  # noqa: E402
+
+
+class Captured(Exception):
+    """Raised in place of a job, carrying the DataFrame it would run."""
+
+
+def captured(owner, attr: str, call, pick=lambda df, *a: df):
+    """The DataFrame (``pick`` of the arguments) that ``call()`` hands to
+    ``owner.attr``, a job entry point."""
+    real = getattr(owner, attr)
+
+    def stop(*args, **kw):
+        raise Captured(pick(*args))
+
+    setattr(owner, attr, stop)
+    try:
+        call()
+    except Captured as e:
+        return e.args[0]
+    finally:
+        setattr(owner, attr, real)
+    raise RuntimeError(f"{attr} was never called")
+
 
 lake = tempfile.mkdtemp(prefix="mbs_plan_lake_")
 t = LakeTable.create(lake, IMAGE_COLS[:6], ["conv_id", "turn_idx"], n_buckets=64)
-w = _epoch_winners(spark, t, glob, IMAGE_COLS, [("app", "transcripts")],
-                   None)  # replay prepare()'s decode → winners
-save("apply_winners", w)
-
-# the fused single-pass epoch write input (round 7): winners normalized to
-# the table schema + tombstone flag + bucket — the exact DataFrame
-# merge_into's fused path writes (partitionBy bucket) in ONE job
-from mysql_binlog_spark.table import LSN_FIELDS  # noqa: E402
-
-merged = w.select(
-    *[(F.col(nm) if nm in w.columns else F.lit(None)).cast(ty).alias(nm)
-      for nm, ty in t.columns()],
-    *[F.col(nm).cast(ty).alias(nm) for nm, ty in LSN_FIELDS],
-    (F.col("action") == "delete").alias("_deleted"),
-).withColumn("bucket", t._bucket_expr())
-save("apply_fused_write", merged.repartition(64, "bucket"))
+rows = _epoch_winners(spark, glob, IMAGE_COLS, [("app", "transcripts")],
+                      None)  # replay prepare()'s decode → image
+staged = captured(t, "_lineage", lambda: t.stage(rows))
+staged.unpersist()  # explain the staging reduce, not a cache scan
+save("apply_winners", staged)
+save("apply_fused_write", captured(
+    DataFrameWriter, "parquet", lambda: t.merge_into(spark, rows, "plans"),
+    pick=lambda writer, *a: writer._df,
+))
 
 # q4 salted_last_writer
 spark.read.parquet(os.path.join(SF_DIR, "events.parquet")) \

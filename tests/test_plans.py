@@ -403,3 +403,74 @@ def test_mor_snapshot_resolves_with_one_key_shuffle(spark):
     assert re.search(r"hashpartitioning\(k", p_mor), p_mor
     assert "partial_max_by" in p_mor, p_mor
     assert "Window" not in p_mor and "SinglePartition" not in p_mor
+
+
+def test_epoch_write_reduces_in_its_one_bucket_exchange(spark, monkeypatch):
+    """The DataFrame an epoch writes — fused (initial load), copy-on-write
+    over a base, and merge-on-read — plans exactly one Exchange, the
+    write's hash partitioning on ``bucket``: the per-key winner reduce
+    runs after it, and the rows arrive with several per key.  A
+    copy-on-write epoch's staged winners are a cached scan; the staging
+    job's own exchange is not part of the write."""
+    import re
+    import tempfile
+
+    from pyspark.sql import DataFrameWriter
+
+    from mysql_binlog_spark.table import LakeTable
+
+    def _upd(epoch, keys):
+        rows = [
+            (k, epoch * 10 + i, "insert", "binlog.000001", 1000 * epoch + i,
+             0, 1)
+            for i, k in enumerate(keys)
+        ]
+        return spark.createDataFrame(
+            rows,
+            "k string, v int, action string, log_file string,"
+            " log_pos bigint, batch_seq int, server_id bigint",
+        )
+
+    def exchanges(df):
+        """Exchange partitionings of the physical plan, cached relations
+        excluded (their plans are inner children, not children)."""
+        node = df._jdf.queryExecution().executedPlan()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.inputPlan()
+        found, todo = [], [node]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "Exchange":
+                found.append(node.outputPartitioning().toString())
+            kids = node.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+        return found
+
+    written = []
+    real = DataFrameWriter.parquet
+
+    def capture(self, path, *a, **k):
+        written.append((plan(self._df), exchanges(self._df)))
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    t = LakeTable.create(
+        tempfile.mkdtemp(prefix="mbs_writeplan_"),
+        columns=[("k", "string"), ("v", "int")],
+        key_cols=["k"],
+        n_buckets=4,
+    )
+    t.merge_into(spark, _upd(1, ["a", "b", "a", "c"]), "fused")
+    t.merge_into(spark, _upd(2, ["b", "d", "b"]), "cow")
+    t.merge_into(spark, _upd(3, ["c", "c"]), "mor", mode="mor")
+    monkeypatch.undo()
+    assert len(written) == 3
+    for text, found in written:
+        assert len(found) == 1, found
+        assert re.fullmatch(r"hashpartitioning\(bucket#\d+, \d+\)", found[0])
+        assert "max_by" in text
+    fused_text = written[0][0]
+    assert fused_text.count("Arguments: hashpartitioning(bucket") == 1
+    assert len(re.findall(r"^\(\d+\) Exchange", fused_text, re.M)) == 1
+    snap = sorted(map(tuple, t.snapshot_df(spark).collect()))
+    assert snap == [("a", 12), ("b", 22), ("c", 31), ("d", 21)]

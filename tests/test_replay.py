@@ -175,6 +175,59 @@ def test_cross_epoch_lsn_monotonicity(spark, chunks, golden):
     assert_matches_golden(spark, table, golden)
 
 
+def test_replay_never_decodes_a_healed_epoch(
+    spark, chunks, golden, monkeypatch
+):
+    """A crash between an epoch's manifest publish and its epochs.log
+    append: the resumed replay plans its skips from the healed log, so
+    that epoch is skipped without being decoded again."""
+    import builtins
+    import inspect
+
+    import mysql_binlog_spark.streaming.replay as rmod
+    import mysql_binlog_spark.table as tmod
+
+    files = sorted(
+        f for f in os.listdir(chunks)
+        if f.startswith("binlog.") and not f.endswith(".json")
+    )
+    healed = files[2:4]  # the second epoch at files_per_epoch=2
+    kw = dict(include=[("app", "transcripts")], files_per_epoch=2,
+              pipeline=False)
+    table = new_table()
+    replay_batch(spark, chunks, table, stop_after_epochs=1, **kw)
+
+    def crashing_open(path, mode="r", *a, **k):
+        if str(path).endswith("epochs.log") and "a" in mode:
+            raise OSError("simulated crash before the epoch-log append")
+        return builtins.open(path, mode, *a, **k)
+
+    monkeypatch.setattr(tmod, "open", crashing_open, raising=False)
+    with pytest.raises(OSError, match="simulated crash"):
+        replay_batch(spark, chunks, table, **kw)
+    monkeypatch.undo()
+    reopened = LakeTable(table.path)
+    epoch_id = f"batch-{healed[0]}-{healed[-1]}"
+    assert reopened.last_commit()["epoch_id"] == epoch_id
+    assert epoch_id not in reopened.committed_epochs()
+
+    decoded = []
+    real = rmod._epoch_winners
+
+    def counting(*a, **k):
+        paths = inspect.signature(real).bind(*a, **k).arguments["paths"]
+        decoded.append(sorted(os.path.basename(p) for p in paths))
+        return real(*a, **k)
+
+    monkeypatch.setattr(rmod, "_epoch_winners", counting)
+    stats = replay_batch(spark, chunks, reopened, **kw)
+    monkeypatch.undo()
+    assert healed not in decoded, decoded
+    assert len(decoded) == stats.applied
+    assert [e["skipped"] for e in stats.epochs[:2]] == [True, True]
+    assert_matches_golden(spark, reopened, golden)
+
+
 def test_salted_equals_plain(spark, sf_dir):
     spark.read.parquet(os.path.join(sf_dir, "events.parquet")).createOrReplaceTempView(
         "events"

@@ -109,12 +109,12 @@ def test_compact_preserves_snapshot_and_purges_tombstones(spark, table):
     stats = table.compact(spark)  # keep tombstones
     assert not stats["skipped"] and stats["vacuum"]["files_removed"] > 0
     assert {(r["k"], r["v"]) for r in table.snapshot_df(spark).collect()} == before
-    raw = spark.read.schema(table.ddl(True, True)).parquet(*table.live_files())
+    raw = spark.read.schema(table.ddl()).parquet(*table.live_files())
     assert raw.filter(F.col("_deleted")).count() == 4  # tombstones retained
 
     stats = table.compact(spark, purge_tombstones=True)
     assert {(r["k"], r["v"]) for r in table.snapshot_df(spark).collect()} == before
-    raw = spark.read.schema(table.ddl(True, True)).parquet(*table.live_files())
+    raw = spark.read.schema(table.ddl()).parquet(*table.live_files())
     assert raw.filter(F.col("_deleted")).count() == 0
 
     # post-compaction merges still work and win by LSN
@@ -442,6 +442,77 @@ def test_two_writers_conflict_instead_of_losing_a_commit(spark, table):
     assert _snap(spark, fresh) == [("a", 1), ("b", 2)]
 
 
+def test_schema_is_read_once_per_epoch(spark, table, monkeypatch):
+    """A warm handle reads the schema from disk (one ``_schema/`` glob)
+    at most once per copy-on-write or merge-on-read epoch, and still sees
+    a second handle's ADD COLUMN in its next epoch."""
+    table.merge_into(spark, _updates(spark, 1, ["a", "b"]), "e1")
+    globs = []
+    real = LakeTable.schema_versions
+
+    def counting(self):
+        globs.append(self)
+        return real(self)
+
+    monkeypatch.setattr(LakeTable, "schema_versions", counting)
+    for epoch, mode in ((2, "cow"), (3, "mor")):
+        globs.clear()
+        table.merge_into(
+            spark, _updates(spark, epoch, ["b", "c"]), f"e{epoch}", mode=mode
+        )
+        assert len(globs) <= 1, (mode, len(globs))
+    monkeypatch.undo()
+
+    LakeTable(table.path).add_columns([("note", "string")])
+    table.merge_into(spark, _updates(spark, 4, ["a"]), "e4")
+    assert ("note", "string") in table.columns()
+    assert table.last_commit()["schema_version"] == 2
+    assert sorted(map(tuple, table.snapshot_df(spark).collect())) == [
+        ("a", 4, None), ("b", 3, None), ("c", 3, None)
+    ]
+
+
+def test_schema_cache_never_goes_stale_under_concurrent_loads(table):
+    """A prefetched epoch's ``stage`` may load the schema while the
+    merging thread drops the cache and adds columns: once all threads
+    stop, the handle's schema is the newest version on disk, with every
+    column added."""
+    import sys
+    import threading
+
+    stop = threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            table.schema_doc()
+
+    def writer():
+        for i in range(40):
+            table._schema = None  # what merge_into does first
+            table.add_columns([(f"c{i}", "int")])
+
+    readers = [threading.Thread(target=reader) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in readers:
+            t.start()
+        w = threading.Thread(target=writer)
+        w.start()
+        w.join(timeout=60)
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=10)
+        sys.setswitchinterval(interval)
+    assert not w.is_alive() and not any(t.is_alive() for t in readers)
+    doc = table.schema_doc()
+    assert doc["version"] == 41
+    assert [c[0] for c in doc["columns"]] == ["k", "v"] + [
+        f"c{i}" for i in range(40)
+    ]
+
+
 @pytest.mark.parametrize("first_after_crash", ["redeliver", "compact"])
 def test_crash_between_publish_and_epoch_log_is_healed(
     spark, table, monkeypatch, first_after_crash
@@ -484,13 +555,20 @@ def test_crash_between_publish_and_epoch_log_is_healed(
     assert "ep-2" in LakeTable(table.path).committed_epochs()
 
 
-@pytest.mark.parametrize("seed", [11, 12, 13])
-def test_mixed_mode_sequences_match_last_writer_oracle(spark, seed):
+@pytest.mark.parametrize(
+    "seed, raw",
+    [(11, False), (12, False), (13, False), (21, True), (22, True),
+     (23, True)],
+    ids=["11", "12", "13", "raw-21", "raw-22", "raw-23"],
+)
+def test_mixed_mode_sequences_match_last_writer_oracle(spark, seed, raw):
     """Seeded sequences of copy-on-write and merge-on-read epochs with
     out-of-order LSNs, deletes and re-inserts, interleaved with
     ``maintain(max_files_per_bucket=2)`` and (selective) ``compact``:
     after every step the snapshot equals a pandas last-writer-by-LSN
-    oracle over every event applied so far."""
+    oracle over every event applied so far.  ``raw`` epochs carry several
+    rows per key in shuffled LSN order — among them a delete followed by
+    a re-insert — so the per-key reduce inside ``merge_into`` decides."""
     import random
 
     import pandas as pd
@@ -502,19 +580,35 @@ def test_mixed_mode_sequences_match_last_writer_oracle(spark, seed):
         key_cols=["k"],
         n_buckets=4,
     )
-    positions = rng.sample(range(1, 10_000), 64)  # unique, out of order
+    # unique, out of order
+    positions = rng.sample(range(1, 10_000), 256 if raw else 64)
     events = []
     ops = ["cow", "mor", "mor"] + rng.sample(
         ["cow", "mor", "mor", "maintain", "compact"], 5
     )
     for step, op in enumerate(ops):
-        if op in ("cow", "mor"):
+        if op in ("cow", "mor") and raw:
+            rows = []
+            keys = rng.sample("abcdefgh", rng.randint(1, 5))
+            for i, k in enumerate(keys):
+                acts = ["delete", "insert"] if i == 0 else rng.choice([
+                    ["insert"], ["insert", "insert"], ["insert", "delete"],
+                    ["delete", "insert", "insert"],
+                ])
+                lsns = sorted(positions.pop() for _ in acts)
+                rows += [
+                    (k, rng.randrange(100), a, "binlog.000001", p, 0, 1)
+                    for a, p in zip(acts, lsns)
+                ]
+            rng.shuffle(rows)
+        elif op in ("cow", "mor"):
             rows = [
                 (k, rng.randrange(100),
                  "delete" if rng.random() < 0.3 else "insert",
                  "binlog.000001", positions.pop(), 0, 1)
                 for k in rng.sample("abcdefgh", rng.randint(1, 5))
             ]
+        if op in ("cow", "mor"):
             events += rows
             t.merge_into(
                 spark,
