@@ -4,9 +4,10 @@ A from-scratch re-expression of the capabilities of ``userqq/mysql-binlog``
 (a single-process PHP binlog replication client; see /root/reference) as a
 partition-parallel Spark dataflow:
 
-    binlog chunks ──decode (Arrow-vectorized)──► change rows
-        ──filter (include/exclude, start-LSN)──► deduped per-key winners
-        ──salted repartition──► MERGE upsert into a lake table
+    binlog chunks ──decode (Arrow-vectorized; include/exclude and
+        start-LSN applied in the kernel)──► change rows
+        ──bucket exchange──► per-key LSN winners, reduced in each bucket
+        ──► bucketed MERGE into a lake table
         (schema evolution, exactly-once epoch commits, lineage metrics)
 
 plus the training-data pipeline operators a 100 TB transcript lake needs

@@ -33,7 +33,7 @@ from .operators.apply import (
     last_writer,
     salted_last_writer,
 )
-from .sources.binlog import image_view, read_binlog
+from .sources.binlog import CHUNK_GLOB, image_view, read_binlog
 from .streaming.replay import replay_batch
 from .table import LakeTable
 
@@ -430,7 +430,7 @@ def decoded_binary_df(
     chunks = binlog_fixture_dir(spark, sf_dir)
     return read_binlog(
         spark,
-        os.path.join(chunks, "binlog.*[0-9]"),
+        os.path.join(chunks, CHUNK_GLOB),
         image_cols=[
             ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
             ("text", "string"), ("tool", "string"), ("ts", "timestamp"),

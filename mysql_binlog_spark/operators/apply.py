@@ -22,11 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# total order of the change stream: natural sort of chunk names then byte
-# offset then row index inside the event, then origin server — the Spark
-# re-expression of BinlogPosition ordering (src/BinlogPosition.php:9-14,
-# ksort natural at src/Connection/Connection.php:120).
-LSN_COLS = ["log_file", "log_pos", "batch_seq", "server_id"]
+from ..table import LSN_COLS
 
 
 def filter_tables(

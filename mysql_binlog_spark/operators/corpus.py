@@ -161,8 +161,7 @@ def corpus_top_ngrams_sql(
 def kmv_hashes(df: DataFrame, col: str = "text", k: int = 256) -> DataFrame:
     """The sketch itself: the ``k`` smallest distinct md5 hashes of
     ``col`` (one column ``h``).  Mergeable: the sketch of A ∪ B equals
-    distinct-sort-truncate over the UNION of A's and B's sketches — the
-    identity the mergeability test asserts."""
+    distinct-sort-truncate over the UNION of A's and B's sketches."""
     from ..functions.hashing import md5_bigint
 
     return (
@@ -171,15 +170,6 @@ def kmv_hashes(df: DataFrame, col: str = "text", k: int = 256) -> DataFrame:
         .orderBy("h")
         .limit(k)
     )
-
-
-def kmv_merge(sketches: list[DataFrame], k: int = 256) -> DataFrame:
-    """Combine independently-built sketches (shards, days, partitions)
-    without touching the raw data."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.distinct().orderBy("h").limit(k)
 
 
 def distinct_kmv(

@@ -173,10 +173,22 @@ def _local_path(path: str) -> str:
     return path
 
 
+# The names of binlog chunk files in a chunk directory: MySQL's
+# ``binlog.NNNNNN``.  Excludes the server's ``binlog.index`` and the
+# generator's ``.idx.json`` frame-index sidecars.
+CHUNK_GLOB = "binlog.*[0-9]"
+
+
 def _chunk_paths(chunk_glob: str | list[str]) -> list[str]:
     if isinstance(chunk_glob, list):
         return sorted(chunk_glob)
     return sorted(glob.glob(_local_path(chunk_glob)))
+
+
+# Above this many paths _paths_df stops inlining them as one plan literal:
+# the literal is carried in every plan string and serialized plan of the
+# decode query (~6 MB at 10^5 paths of ~60 characters).
+_LITERAL_PATHS_MAX = 4096
 
 
 def _paths_df(spark: SparkSession, paths: list[str], n_slices: int) -> DataFrame:
@@ -192,15 +204,18 @@ def _paths_df(spark: SparkSession, paths: list[str], n_slices: int) -> DataFrame
     inside the SAME stage as the decode, so the whole decode job is one
     fused stage + the final agg.  Paths are interleaved so task t gets
     paths[t::n] — the same even spread the old RoundRobin exchange
-    produced."""
+    produced.  Path lists longer than ``_LITERAL_PATHS_MAX`` take the
+    local-relation construction instead, so the plan stays small."""
     if not paths:
         return spark.createDataFrame([], "path string")
     n_slices = max(1, min(n_slices, len(paths)))
     # round-robin interleave, then contiguous range blocks ≈ paths[t::n]
     order = [p for i in range(n_slices) for p in paths[i::n_slices]]
     sep = "\x1f"
-    if any(sep in p for p in order):  # pathological path names: the slow
-        return spark.createDataFrame(  # but general construction
+    if len(order) > _LITERAL_PATHS_MAX or any(sep in p for p in order):
+        # long lists and pathological path names: the slower but general
+        # construction
+        return spark.createDataFrame(
             pd.DataFrame({"path": pd.Series(order, dtype="object")})
         ).repartition(n_slices)
     # ONE py4j literal (per-element F.lit costs ~0.4ms × |paths| of
@@ -331,7 +346,6 @@ def read_binlog(
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
     verify_crc: bool = False,
     before_mode: str = "full",
-    tolerate_truncation: bool = False,
     on_error: str = "raise",
     null_cols: frozenset[str] | set[str] | None = None,
 ) -> DataFrame:
@@ -447,7 +461,6 @@ def read_binlog(
                         start_pos=sp,
                         verify_crc=verify_crc,
                         before_mode=before_mode,
-                        tolerate_truncation=tolerate_truncation,
                         start_after_gtid=start_after_gtid,
                     )
                 except Exception:

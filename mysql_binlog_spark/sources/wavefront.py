@@ -139,7 +139,6 @@ def _compile_wavefront(t: TableSchema, columns: list[str], mode: str):
     mode: 'single'    — one stored image          (S1 = stores, S2 = None)
           'pair'      — two stored images         (S1 = image1, S2 = image2)
           'skip_then' — advance one, store second (S1 = None, S2 = stores)
-          'skip'      — advance only              (both None)
     counts: rows per event; hist: per-iteration active-event index
     vectors; S*: per-union-slot lists of per-iteration descriptor vectors
     (None for slots the table does not cover)."""
@@ -172,7 +171,7 @@ def _compile_wavefront(t: TableSchema, columns: list[str], mode: str):
     elif mode == "pair":
         declare("x")
         declare("y")
-    elif mode == "skip_then":
+    else:
         declare("y")
     L.append("    active = cur < ends")
     L.append("    while active.any():")
@@ -183,11 +182,9 @@ def _compile_wavefront(t: TableSchema, columns: list[str], mode: str):
     elif mode == "pair":
         L += _wf_image_lines(t, slot, "x", "        ")
         L += _wf_image_lines(t, slot, "y", "        ")
-    elif mode == "skip_then":
-        L += _wf_image_lines(t, slot, None, "        ")
-        L += _wf_image_lines(t, slot, "y", "        ")
     else:
         L += _wf_image_lines(t, slot, None, "        ")
+        L += _wf_image_lines(t, slot, "y", "        ")
     L.append("        counts[ai] += 1")
     L.append("        hist.append(ai)")
     L.append("        cur[active] = c")
@@ -210,10 +207,8 @@ def _compile_wavefront(t: TableSchema, columns: list[str], mode: str):
             f"    return counts, hist, {pack('x', n_slots)}, "
             f"{pack('y', n_slots)}"
         )
-    elif mode == "skip_then":
-        L.append(f"    return counts, hist, None, {pack('y', n_slots)}")
     else:
-        L.append("    return counts, hist, None, None")
+        L.append(f"    return counts, hist, None, {pack('y', n_slots)}")
     exec("\n".join(L), ns)  # noqa: S102 - codegen from trusted schema
     fn = ns["_wf"]
     _DECODER_CACHE[sig] = fn
@@ -238,8 +233,6 @@ def _finish_wavefront(
     for t, etype, ev_idx, starts, ends in groups.values():
         if etype == UPDATE_ROWS_V2:
             mode = "pair" if before_mode == "full" else "skip_then"
-        elif etype == DELETE_ROWS_V2:
-            mode = "skip" if before_mode == "none" else "single"
         else:
             mode = "single"
         fn = _compile_wavefront(t, out.columns, mode)
@@ -328,7 +321,6 @@ def _fast_scan(
     exclude,
     start_pos: int,
     verify_crc: bool,
-    tolerate_truncation: bool,
     resume: dict[str, int] | None,
 ):
     """The wavefront's one frame walk.  The sequential part is the
@@ -362,13 +354,9 @@ def _fast_scan(
                 f"bytes (minimum is {_MIN_FRAME})"
             )
         if pos + size > total:
-            if tolerate_truncation:
-                break
             raise TruncatedFrameError(
                 f"truncated frame at offset {pos}: header claims {size} "
-                f"bytes, {total - pos} remain "
-                "(pass tolerate_truncation=True to stop at the last "
-                "complete frame)"
+                f"bytes, {total - pos} remain"
             )
         if verify_crc:
             body_end = pos + size - CRC_LEN
@@ -531,7 +519,6 @@ def decode_chunk_vectorized(
     start_pos: int = 0,
     verify_crc: bool = False,
     before_mode: str = "full",
-    tolerate_truncation: bool = False,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
 ) -> tuple[DecodedBatch, dict | None]:
     """Decode one chunk on whichever of the two row-decode paths suits
@@ -543,21 +530,20 @@ def decode_chunk_vectorized(
     None): the batch is ``wire.decode_chunk(text_as_bytes=True)``'s,
     value lists for the Arrow converters (``binlog.image_arrays``
     handles both).  Same rows and metadata either way."""
-    assert before_mode in ("full", "delete_only", "none")
+    assert before_mode in ("full", "delete_only")
     assert data[:4] == MAGIC, "bad binlog magic"
     np_buf = np.frombuffer(data, dtype=np.uint8)
     out = DecodedBatch(image_cols)
     scan = _fast_scan(
         data, np_buf, out, include, exclude, start_pos, verify_crc,
-        tolerate_truncation, normalize_gtid_resume(start_after_gtid),
+        normalize_gtid_resume(start_after_gtid),
     )
     if scan is None:
         return decode_chunk(
             data, include=include, exclude=exclude, start_pos=start_pos,
             # the walk above already checked every complete frame's CRC
             verify_crc=False, image_cols=image_cols,
-            before_mode=before_mode,
-            tolerate_truncation=tolerate_truncation, text_as_bytes=True,
+            before_mode=before_mode, text_as_bytes=True,
             start_after_gtid=start_after_gtid,
         ), None
     groups, n_included, kinds = scan

@@ -19,13 +19,13 @@ epoch, in its write's bucket exchange (or in ``stage`` when prefetched).
 
 from __future__ import annotations
 
+import fnmatch
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from ..sources.binlog import NULLABLE_META, image_view, read_binlog
+from ..sources.binlog import CHUNK_GLOB, NULLABLE_META, image_view, read_binlog
 from ..table import LSN_COLS, LakeTable
 
 # The apply path never reads these meta columns (it keeps only key +
@@ -133,10 +133,7 @@ def replay_batch(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    chunks = sorted(
-        f for f in os.listdir(chunk_dir)
-        if f.startswith("binlog.") and not f.endswith(".json")
-    )
+    chunks = sorted(fnmatch.filter(os.listdir(chunk_dir), CHUNK_GLOB))
     if start_lsn is not None:
         chunks = [f for f in chunks if f >= start_lsn[0]]
     stats = ReplayStats()
@@ -255,7 +252,7 @@ def replay_stream(
             "path string, modificationTime timestamp, length long, content binary"
         )
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "binlog.*[0-9]")
+        .option("pathGlobFilter", CHUNK_GLOB)
         .load(chunk_dir)
         .select("path")
     )

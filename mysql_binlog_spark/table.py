@@ -71,6 +71,10 @@ from pyspark.sql import functions as F
 
 _UNSET = object()  # last_commit cache sentinel ("no commits yet" is cachable)
 
+# total order of the change stream: natural sort of chunk names then byte
+# offset then row index inside the event, then origin server — the Spark
+# re-expression of BinlogPosition ordering (src/BinlogPosition.php:9-14,
+# ksort natural at src/Connection/Connection.php:120).
 LSN_FIELDS = [
     ("log_file", "string"),
     ("log_pos", "bigint"),

@@ -1042,7 +1042,6 @@ def _compile_event_loop(
           'pair'      → f(buf, off, end, bouts, aouts)  update before+after
           'skip_then' → f(buf, off, end, aouts)         parse-skip before,
                                                         decode after
-          'skip'      → f(buf, off, end)                parse-skip rows
     All return (off, row_count).  Output appends are pre-bound locals and
     union slots the table lacks are NULL-backfilled with one ``extend``
     per event — the per-row call/indexing overhead of a per-image decoder
@@ -1069,10 +1068,8 @@ def _compile_event_loop(
 
     args = {
         "single": "outs", "pair": "bouts, aouts", "skip_then": "aouts",
-        "skip": "",
     }[kind]
-    L = [f"def _loop(buf, off, end, {args + ', ' if args else ''}"
-         "u=_unpack_from):"]
+    L = [f"def _loop(buf, off, end, {args}, u=_unpack_from):"]
 
     def bind(prefix: str, src: str) -> None:
         for name in columns:
@@ -1084,7 +1081,7 @@ def _compile_event_loop(
     elif kind == "pair":
         bind("b", "bouts")
         bind("a", "aouts")
-    elif kind == "skip_then":
+    else:
         bind("a", "aouts")
     L.append("    cnt = 0")
     L.append("    while off < end:")
@@ -1093,13 +1090,11 @@ def _compile_event_loop(
     elif kind == "pair":
         L += _image_lines(t, slot, ns, "b", True, "        ", text_as_bytes)
         L += _image_lines(t, slot, ns, "a", True, "        ", text_as_bytes)
-    elif kind == "skip_then":
+    else:
         L += _image_lines(t, slot, ns, "s", False, "        ", text_as_bytes)
         L += _image_lines(t, slot, ns, "a", True, "        ", text_as_bytes)
-    else:
-        L += _image_lines(t, slot, ns, "s", False, "        ")
     L.append("        cnt += 1")
-    if kind != "skip" and missing:
+    if missing:
         L.append("    _none = [None] * cnt")
         for name in missing:
             if kind == "pair":
@@ -1414,7 +1409,6 @@ def decode_chunk(
     verify_crc: bool = False,
     image_cols: list[str] | None = None,
     before_mode: str = "full",
-    tolerate_truncation: bool = False,
     text_as_bytes: bool = False,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
 ) -> DecodedBatch:
@@ -1446,11 +1440,11 @@ def decode_chunk(
 
     ``before_mode``: 'full' materializes update/delete before-images;
     'delete_only' parse-skips update before-images (the apply path never
-    reads them — delete rows keep theirs, it IS the row image); 'none'
-    parse-skips all before-images.  Skipping avoids the list appends and
-    Arrow conversion for half the output columns.
+    reads them — delete rows keep theirs, it IS the row image).  Skipping
+    avoids the list appends and Arrow conversion for half the output
+    columns.
     """
-    assert before_mode in ("full", "delete_only", "none")
+    assert before_mode in ("full", "delete_only")
     inc_parts = _filter_parts(include)
     exc_parts = _filter_parts(exclude)
     mk_null = [None].__mul__
@@ -1488,16 +1482,12 @@ def decode_chunk(
             )
         if off + size > total:
             # partial trailing frame: a chunk cut mid-write (the recorded
-            # analog of the reference's dropped connection).  Complete
-            # frames already decoded stay valid; the caller resumes from
-            # this offset after the writer finishes / reconnects.
-            if tolerate_truncation:
-                break
+            # analog of the reference's dropped connection).  Each chunk
+            # is consumed once, so stopping here would drop its tail
+            # silently: fail, and let on_error='skip' quarantine it.
             raise TruncatedFrameError(
                 f"truncated frame at offset {off}: header claims {size} "
-                f"bytes, {total - off} remain "
-                "(pass tolerate_truncation=True to stop at the last "
-                "complete frame)"
+                f"bytes, {total - off} remain"
             )
         body_end = off + size - CRC_LEN
         if verify_crc:
@@ -1553,11 +1543,10 @@ def decode_chunk(
                         _compile_event_loop(
                             t, cols, "skip_then", text_as_bytes
                         ),
-                        _compile_event_loop(t, cols, "skip"),
                         n_, nbb_, full,
                     )
             if decs is not False:
-                t, single, pair, skip_then, skip_all, n, nbb_, full = decs
+                t, single, pair, skip_then, n, nbb_, full = decs
                 ts = unpack("<I", mv, off)[0]
                 server_id = unpack("<I", mv, off + 5)[0]
                 # bytes slice (one memcpy per included event), NOT a
@@ -1601,13 +1590,7 @@ def decode_chunk(
                         for lst in bouts:
                             lst.extend(nulls_)
                 elif etype == DELETE_ROWS_V2:
-                    if before_mode == "none":
-                        p, cnt = skip_all(payload, p, plen)
-                        nulls_ = mk_null(cnt)
-                        for lst in bouts:
-                            lst.extend(nulls_)
-                    else:
-                        p, cnt = single(payload, p, plen, bouts)
+                    p, cnt = single(payload, p, plen, bouts)
                     nulls_ = mk_null(cnt)
                     for lst in aouts:
                         lst.extend(nulls_)

@@ -3,7 +3,7 @@
 The driver oracle rows (`corpus_distinct_kmv`, `doc_resample_sources`)
 hash-gate cross-engine equality; these tests pin the statistical and
 structural properties the hash gate can't express: estimator accuracy,
-sketch mergeability, flattening on skew, and the broadcast plan."""
+flattening on skew, and the broadcast plan."""
 
 from __future__ import annotations
 
@@ -11,11 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from mysql_binlog_spark.operators.corpus import (
-    distinct_kmv,
-    kmv_hashes,
-    kmv_merge,
-)
+from mysql_binlog_spark.operators.corpus import distinct_kmv, kmv_hashes
 from mysql_binlog_spark.operators.sampling import temperature_resample
 
 
@@ -33,19 +29,6 @@ def test_kmv_estimate_within_bound(spark, sf_dir):
     else:
         # KMV relative error ~ 1/sqrt(k) ≈ 6% at k=256; allow 4 sigma
         assert abs(row["est_distinct"] - exact) / exact < 0.25
-
-
-def test_kmv_is_mergeable(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    a = docs.where(F.col("doc_id") % 2 == 0)
-    b = docs.where(F.col("doc_id") % 2 == 1)
-    merged = kmv_merge(
-        [kmv_hashes(a, "text", 64), kmv_hashes(b, "text", 64)], k=64
-    )
-    whole = kmv_hashes(docs, "text", 64)
-    assert [r["h"] for r in merged.collect()] == [
-        r["h"] for r in whole.collect()
-    ]
 
 
 def test_kmv_plan_takes_ordered_not_global_sort(spark, sf_dir):

@@ -474,3 +474,19 @@ def test_epoch_write_reduces_in_its_one_bucket_exchange(spark, monkeypatch):
     assert len(re.findall(r"^\(\d+\) Exchange", fused_text, re.M)) == 1
     snap = sorted(map(tuple, t.snapshot_df(spark).collect()))
     assert snap == [("a", 12), ("b", 22), ("c", 31), ("d", 21)]
+
+
+def test_paths_df_plan_stays_small_for_long_path_lists(spark):
+    """The decode's path list rides in its plan as one literal only up to
+    a bound: 10^5 paths of ~60 characters would be a ~6 MB plan string.
+    Bench-scale lists (1,200 chunks) keep the exchange-free range plan."""
+    from mysql_binlog_spark.sources.binlog import _paths_df
+
+    paths = [f"/data/cdc/primary-01/binlogs/2026/10/binlog.{i:06d}"
+             for i in range(100_000)]
+    small = _paths_df(spark, paths[:1200], 8)
+    assert "Range" in small._jdf.queryExecution().optimizedPlan().toString()
+    big = _paths_df(spark, paths, 8)
+    assert len(big._jdf.queryExecution().optimizedPlan().toString()) < 10_000
+    assert big.rdd.getNumPartitions() == 8
+    assert sorted(r["path"] for r in big.collect()) == paths

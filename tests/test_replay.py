@@ -103,6 +103,27 @@ def test_batch_replay_matches_pandas_oracle(spark, chunks, golden):
     assert table.schema_doc()["version"] >= 2
 
 
+def test_batch_replay_ignores_binlog_index(spark, chunks, golden):
+    """A MySQL binlog directory always holds ``binlog.index`` (the
+    server's list of its binlog files).  It is not a chunk: the replay
+    reaches the golden state under on_error='raise', and no epoch is
+    named after it."""
+    import shutil as _sh
+
+    d = os.path.join(tempfile.mkdtemp(prefix="mbs_replay_idx_"), "log")
+    _sh.copytree(chunks, d)
+    names = sorted(f for f in os.listdir(d) if not f.endswith(".json"))
+    with open(os.path.join(d, "binlog.index"), "w") as f:
+        f.writelines(f"./{n}\n" for n in names)
+    table = new_table()
+    stats = replay_batch(
+        spark, d, table, include=[("app", "transcripts")], files_per_epoch=3
+    )
+    assert stats.applied >= 2
+    assert not any("index" in e["epoch_id"] for e in stats.epochs)
+    assert_matches_golden(spark, table, golden)
+
+
 def test_resume_and_exactly_once(spark, chunks, golden):
     table = new_table()
     s1 = replay_batch(

@@ -238,8 +238,9 @@ def test_replay_batch_start_lsn(spark):
 
 def test_truncated_chunk_fails_loudly_or_stops_cleanly():
     """A chunk cut mid-frame (crash during write / dropped connection)
-    raises by default; with tolerate_truncation=True decode stops at the
-    last complete frame and keeps everything before it."""
+    raises: each chunk is consumed once, so stopping at the last
+    complete frame would drop the rest of it silently.  The intact chunk
+    decodes every frame."""
     t = TableSchema(
         "app", "t",
         [WireColumn("a", TYPE_LONG, nullable=False),
@@ -255,9 +256,4 @@ def test_truncated_chunk_fails_loudly_or_stops_cleanly():
 
     with pytest.raises(ValueError, match="truncated frame"):
         decode_chunk(cut)
-
-    b = decode_chunk(cut, tolerate_truncation=True)
-    assert [r["a"] for r in b.after] == [1]
-    # intact input is unaffected by the flag
-    b2 = decode_chunk(data, tolerate_truncation=True)
-    assert [r["a"] for r in b2.after] == [1, 2]
+    assert [r["a"] for r in decode_chunk(data).after] == [1, 2]
