@@ -44,7 +44,7 @@ from mysql_binlog_spark.operators.apply import (  # noqa: E402
 from mysql_binlog_spark.operators.dedup import minhash_dedup_pairs  # noqa: E402
 from mysql_binlog_spark.operators.similarity import cosine_knn  # noqa: E402
 from mysql_binlog_spark.session import get_spark  # noqa: E402
-from mysql_binlog_spark.sources.binlog import read_binlog  # noqa: E402
+from mysql_binlog_spark.sources.binlog import CHUNK_GLOB, read_binlog  # noqa: E402
 from mysql_binlog_spark.streaming.replay import replay_batch  # noqa: E402
 from mysql_binlog_spark.table import LakeTable  # noqa: E402
 
@@ -200,7 +200,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     chunks = bench_dir(spark)
-    glob = os.path.join(chunks, "binlog.*")
+    glob = os.path.join(chunks, CHUNK_GLOB)
     n_events = read_binlog(
         spark, glob, image_cols=IMAGE_COLS, include={("app", "transcripts")}
     ).count()  # warms page cache too

@@ -28,7 +28,8 @@ resolves, because ``os.path.join(root, entry)`` keeps it as it is.
 
 Data files are hash-bucketed on the leading key column, so one merge epoch
 rewrites only buckets containing touched keys (bucket pruning at the FILE
-level — the manifest maps buckets to files, no directory listing on read).
+level — the manifest maps buckets to files, and a read stats the files it
+names on the driver: no directory listing, no listing job).
 Every row stores its applied LSN and a ``_deleted`` tombstone flag; the
 winner per key is ``max_by(row, lsn)`` over base ∪ deltas ∪ updates
 (``_resolve``), so a late epoch replaying *older* events can never regress
@@ -37,7 +38,9 @@ per-batch).  ``merge_into`` takes any number of rows per key: every write
 (``_write_epoch``) resolves the winners in the bucket exchange the
 partitioned write needs anyway — hash partitioning on ``bucket``
 satisfies the (bucket, key) grouping — so an epoch's reduce and its
-bucketed write are one shuffle.
+bucketed write are one shuffle.  That shuffle is sized by the epoch's
+data (``spark.sql.shuffle.partitions``, coalesced by AQE), not by the
+bucket count; each bucket still lands in one task and one file.
 
 Commits: an epoch writes its data files, then publishes manifest
 ``c{seq}.json`` with a fail-if-exists hard link — a second writer that
@@ -351,6 +354,8 @@ class LakeTable:
     # ---------------------------------------------------------------- reads
 
     def _read(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        """Scan of manifest-named ``files``; ``session.get_spark`` lets
+        the driver stat them (up to 4,096) instead of a listing job."""
         return spark.read.schema(self.ddl()).parquet(*files)
 
     def _resolve(self, df: DataFrame) -> DataFrame:
@@ -536,9 +541,7 @@ class LakeTable:
             # MOR epochs and initial loads never read the base: lazy rows
             # are ONE job (decode → reduce → bucketed write), and their
             # lineage is a 3-column scan of the files written
-            written = self._write_epoch(
-                rows, epoch_id, self.schema_doc()["n_buckets"]
-            )
+            written = self._write_epoch(rows, epoch_id)
             touched = set(written)
             files = self._files({"buckets": written}, "buckets")
             lineage = (
@@ -553,7 +556,7 @@ class LakeTable:
                 spark, self.live_files(touched) + self.delta_files(touched)
             )
             written = self._write_epoch(
-                self._rows(base).unionByName(rows), epoch_id, len(touched)
+                self._rows(base).unionByName(rows), epoch_id
             )
         if own:
             staged.unpersist()
@@ -566,18 +569,24 @@ class LakeTable:
         }
 
     def _write_epoch(
-        self, df: DataFrame, epoch_id: str, n_parts: int, purge: bool = False
+        self, df: DataFrame, epoch_id: str, purge: bool = False
     ) -> dict[int, list[str]]:
         """Reduce rows in the write layout (``_rows``) to one winner per
         key — in the bucket exchange, the plan's only one — and write them
         bucket-partitioned under ``data/ep=<epoch_id>``; returns
         ``{bucket: [files]}``, the files relative to the table root
-        (manifest entries).  ``purge`` drops tombstone winners."""
+        (manifest entries).  ``purge`` drops tombstone winners.
+
+        The exchange takes no partition count: it is sized by
+        ``spark.sql.shuffle.partitions`` and coalesced by AQE to the
+        epoch's bytes, not one task per bucket (a task's fixed cost, not
+        its rows, dominated a 64-bucket write).  Hash partitioning still
+        puts each bucket in one task, so each bucket gets one file."""
         safe_epoch = "".join(
             ch if ch.isalnum() or ch in "-_." else "_" for ch in epoch_id
         )
         epoch_dir = os.path.join(self.path, "data", f"ep={safe_epoch}")
-        out = self._resolve(df.repartition(max(1, min(n_parts, 200)), "bucket"))
+        out = self._resolve(df.repartition("bucket"))
         if purge:
             out = out.filter(~F.col("_deleted"))
         out.write.mode("overwrite").partitionBy("bucket").parquet(epoch_dir)
@@ -661,7 +670,7 @@ class LakeTable:
         )
         epoch_id = f"compact-{self._next_seq:07d}"
         written = self._write_epoch(
-            self._rows(self._read(spark, files)), epoch_id, len(sel),
+            self._rows(self._read(spark, files)), epoch_id,
             purge=purge_tombstones,
         )
         self._publish(

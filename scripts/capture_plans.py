@@ -23,7 +23,9 @@ from mysql_binlog_spark.operators.apply import (  # noqa: E402
 from mysql_binlog_spark.operators.dedup import minhash_dedup_pairs  # noqa: E402
 from mysql_binlog_spark.operators.similarity import cosine_knn  # noqa: E402
 from mysql_binlog_spark.session import get_spark  # noqa: E402
-from mysql_binlog_spark.sources.binlog import image_view, read_binlog  # noqa: E402
+from mysql_binlog_spark.sources.binlog import (  # noqa: E402
+    CHUNK_GLOB, image_view, read_binlog,
+)
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
@@ -42,7 +44,7 @@ spark = get_spark(app_name="mbs-plans", master="local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 
 chunks = "/tmp/mbs_bench/sf=sf0.1-amp=60-epf=5000-v3"
-glob = os.path.join(chunks, "binlog.*")
+glob = os.path.join(chunks, CHUNK_GLOB)
 
 
 def save(name: str, df) -> None:

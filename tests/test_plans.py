@@ -476,6 +476,87 @@ def test_epoch_write_reduces_in_its_one_bucket_exchange(spark, monkeypatch):
     assert snap == [("a", 12), ("b", 22), ("c", 31), ("d", 21)]
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of the group-less jobs started so far, once the status store
+    has seen every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _wide_table(spark):
+    """A 64-bucket table after one fused epoch of 400 keys, two rows per
+    key, so nearly every bucket gets a file.  Returns the table and the
+    expected snapshot."""
+    import tempfile
+
+    from mysql_binlog_spark.table import LakeTable
+
+    rows = [
+        (f"k{i:03d}", 10 * i + r, "insert", "binlog.000001", 2 * i + r, 0, 1)
+        for i in range(400) for r in (1, 0)
+    ]
+    t = LakeTable.create(
+        tempfile.mkdtemp(prefix="mbs_wide_"),
+        columns=[("k", "string"), ("v", "int")],
+        key_cols=["k"],
+        n_buckets=64,
+    )
+    t.merge_into(spark, spark.createDataFrame(
+        rows,
+        "k string, v int, action string, log_file string,"
+        " log_pos bigint, batch_seq int, server_id bigint",
+    ), "wide")
+    return t, sorted((f"k{i:03d}", 10 * i + 1) for i in range(400))
+
+
+def test_epoch_write_is_sized_by_shuffle_partitions_not_buckets(
+    spark, monkeypatch
+):
+    """A fused epoch over 64 buckets writes in at most
+    ``spark.sql.shuffle.partitions`` tasks (AQE coalesces them further),
+    not one task per bucket, and still one file per bucket: hash
+    partitioning on ``bucket`` keeps each bucket in one task."""
+    import glob
+
+    from pyspark.sql import DataFrameWriter
+
+    tracker = spark.sparkContext.statusTracker()
+    write_jobs = []
+    real = DataFrameWriter.parquet
+
+    def capture(self, *a, **k):
+        before = _job_ids(spark)
+        real(self, *a, **k)
+        write_jobs.extend(_job_ids(spark) - before)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    t, expected = _wide_table(spark)
+    monkeypatch.undo()
+    assert write_jobs
+    result_stage = max(
+        s for j in write_jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    n_tasks = tracker.getStageInfo(result_stage).numTasks
+    assert n_tasks <= int(spark.conf.get("spark.sql.shuffle.partitions")), (
+        n_tasks)
+    dirs = glob.glob(os.path.join(t.path, "data", "ep=*", "bucket=*"))
+    assert len(dirs) >= 32, len(dirs)
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert sorted(map(tuple, t.snapshot_df(spark).collect())) == expected
+
+
+def test_lake_read_starts_no_listing_job(spark):
+    """A read of more than 32 manifest-named files is planned without a
+    Spark job: the driver stats the files instead of a listing job with
+    one task per file."""
+    t, _ = _wide_table(spark)
+    assert len(t.live_files()) > 32, len(t.live_files())
+    before = _job_ids(spark)
+    t.snapshot_df(spark)
+    assert _job_ids(spark) - before == set()
+
+
 def test_paths_df_plan_stays_small_for_long_path_lists(spark):
     """The decode's path list rides in its plan as one literal only up to
     a bound: 10^5 paths of ~60 characters would be a ~6 MB plan string.
