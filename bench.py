@@ -110,9 +110,7 @@ def bench_dir(spark) -> str:
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     t0 = time.time()
-    stats = generate_binlog_chunks(
-        amplified_changelog(spark), out, write_index=False
-    )
+    stats = generate_binlog_chunks(amplified_changelog(spark), out)
     gen_s = time.time() - t0
     with open(marker, "w") as f:
         json.dump(

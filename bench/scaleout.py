@@ -20,6 +20,7 @@ bench.py/scaling.py), SCALE_OUT_WORKERS (default 4), CORES_PER (default 8).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -28,6 +29,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 AMP = int(os.environ.get("BENCH_AMP", "180"))
 EPF = int(os.environ.get("BENCH_EPF", "20000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -179,17 +181,15 @@ def _wait_for_quiet() -> None:
 
 
 def main() -> None:
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB
+
     tag = FIXTURE_TAG or (
         f"sf={os.path.basename(SF_DIR.rstrip('/'))}-amp={AMP}-epf={EPF}-v3"  # v3: 2-SID GTID fixtures (bench.py's tag)
     )
     chunk_dir = os.path.join(tempfile.gettempdir(), "mbs_bench", tag)
     if not os.path.exists(os.path.join(chunk_dir, "_COMPLETE")):
         raise SystemExit(f"fixture missing: run bench.py with AMP={AMP} first")
-    chunks = sorted(
-        os.path.join(chunk_dir, f)
-        for f in os.listdir(chunk_dir)
-        if f.startswith("binlog.")
-    )
+    chunks = sorted(glob.glob(os.path.join(chunk_dir, CHUNK_GLOB)))
     meta = json.load(open(os.path.join(chunk_dir, "_COMPLETE")))
     n_events = meta["rows"]
 

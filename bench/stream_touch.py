@@ -130,7 +130,7 @@ def main() -> None:
     changelog = parts[0]
     for p in parts[1:]:
         changelog = changelog.unionByName(p)
-    stats = generate_binlog_chunks(changelog, chunk_dir, write_index=False)
+    stats = generate_binlog_chunks(changelog, chunk_dir)
     rows_per_epoch = CPE * TURNS
     print(f"# {len(epochs)} epochs × {rows_per_epoch:,} rows encoded, "
           f"{stats['n_bytes'].sum() / 1e6:.0f} MB", file=sys.stderr)

@@ -19,6 +19,7 @@ default "1200,300,75,20,5"), SWEEP_WAIT_LOAD (quiet gate, default 4).
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import shutil
@@ -61,6 +62,7 @@ def _gate() -> None:
 
 def main() -> None:
     from mysql_binlog_spark.session import get_spark
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB
     from mysql_binlog_spark.streaming.replay import replay_batch, replay_stream
     from mysql_binlog_spark.table import LakeTable
 
@@ -69,10 +71,7 @@ def main() -> None:
     marker = os.path.join(chunks, "_COMPLETE")
     if not os.path.exists(marker):
         raise SystemExit(f"fixture missing ({chunks}): run bench.py first")
-    n_files = len(
-        [f for f in os.listdir(chunks)
-         if f.startswith("binlog.") and not f.endswith(".json")]
-    )
+    n_files = len(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
 
     spark = get_spark(
         app_name="trigger-sweep", master=f"local[{CPUS}]",

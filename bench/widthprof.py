@@ -30,6 +30,7 @@ scaleout.py); WIDTHS (default "8,32").
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -39,6 +40,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 AMP = int(os.environ.get("BENCH_AMP", "720"))
 EPF = int(os.environ.get("BENCH_EPF", "20000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -220,17 +222,15 @@ def run_width(chunks: list[str], cores: int, n_events: int) -> dict:
 
 
 def main() -> None:
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB
+
     tag = FIXTURE_TAG or (
         f"sf={os.path.basename(SF_DIR.rstrip('/'))}-amp={AMP}-epf={EPF}-v3"  # v3: 2-SID GTID fixtures
     )
     chunk_dir = os.path.join(tempfile.gettempdir(), "mbs_bench", tag)
     if not os.path.exists(os.path.join(chunk_dir, "_COMPLETE")):
         raise SystemExit(f"fixture missing: {chunk_dir}")
-    chunks = sorted(
-        os.path.join(chunk_dir, f)
-        for f in os.listdir(chunk_dir)
-        if f.startswith("binlog.")
-    )
+    chunks = sorted(glob.glob(os.path.join(chunk_dir, CHUNK_GLOB)))
     n_events = json.load(open(os.path.join(chunk_dir, "_COMPLETE")))["rows"]
     rows = [run_width(chunks, w, n_events) for w in WIDTHS]
     lo, hi = rows[0], rows[-1]

@@ -11,6 +11,7 @@ Env: BENCH_EXTRA_RUNS (default 3, median reported).
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import shutil
@@ -35,7 +36,11 @@ from mysql_binlog_spark.operators.dedup import (  # noqa: E402
 )
 from mysql_binlog_spark.operators.similarity import cosine_knn  # noqa: E402
 from mysql_binlog_spark.session import get_spark  # noqa: E402
-from mysql_binlog_spark.sources.binlog import image_view, read_binlog  # noqa: E402
+from mysql_binlog_spark.sources.binlog import (  # noqa: E402
+    CHUNK_GLOB,
+    image_view,
+    read_binlog,
+)
 from mysql_binlog_spark.table import LakeTable  # noqa: E402
 from mysql_binlog_spark.streaming.replay import replay_batch  # noqa: E402
 
@@ -71,8 +76,8 @@ def main() -> None:
                           "run bench.py once to generate"}))
         return
     paths = [
-        os.path.join(CHUNKS, f) for f in sorted(os.listdir(CHUNKS))
-        if f.startswith("binlog.") and not f.endswith(".json")
+        os.path.join(CHUNKS, f)
+        for f in sorted(fnmatch.filter(os.listdir(CHUNKS), CHUNK_GLOB))
     ]
     inc = {("app", "transcripts")}
     img = [n for n, _ in IMAGE_COLS]

@@ -14,7 +14,7 @@ the implementation, not a tautology.
 
 from __future__ import annotations
 
-import glob as globmod
+import fnmatch
 import hashlib
 import os
 import shutil
@@ -3499,14 +3499,9 @@ def q_cdc_write_amplification(spark, sf_dir):
         changed = sum(v["rows"] for v in ep["lineage"].values())
         if changed == 0:
             continue
-        safe = "".join(
-            ch if ch.isalnum() or ch in "-_." else "_"
-            for ch in ep["epoch_id"]
+        written = sum(
+            pq.ParquetFile(f).metadata.num_rows for f in ep["files"]
         )
-        files = sorted(globmod.glob(os.path.join(
-            lake_dir, "data", f"ep={safe}", "bucket=*", "*.parquet"
-        )))
-        written = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
         rows.append((
             idx, changed, ep["touched_buckets"], written,
             round(written / changed, 4),
@@ -3580,10 +3575,7 @@ def q_cdc_quarantine(spark, sf_dir):
 
     chunks = binlog_fixture_dir(spark, sf_dir)
     qdir = tempfile.mkdtemp(prefix="mbs_quarantine_")
-    names = sorted(
-        f for f in os.listdir(chunks)
-        if f.startswith("binlog.") and not f.endswith(".json")
-    )
+    names = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     for n in names:
         shutil.copy(os.path.join(chunks, n), qdir)
     data = bytearray(open(os.path.join(chunks, names[0]), "rb").read())
@@ -3638,10 +3630,7 @@ def q_cdc_mor_replay(spark, sf_dir):
         key_cols=KEY_COLS,
         n_buckets=16,
     )
-    n_chunks = sum(
-        1 for f in os.listdir(chunks)
-        if f.startswith("binlog.") and not f.endswith(".json")
-    )
+    n_chunks = len(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     if n_chunks > 2:  # small fixtures (1 chunk) go all-MOR
         replay_batch(
             spark, chunks, table, include=[("app", "transcripts")],
@@ -3657,14 +3646,9 @@ def q_cdc_mor_replay(spark, sf_dir):
             continue
         applied_mor += 1
         changed = sum(v["rows"] for v in ep["lineage"].values())
-        safe = "".join(
-            ch if ch.isalnum() or ch in "-_." else "_"
-            for ch in ep["epoch_id"]
+        written = sum(
+            pq.ParquetFile(f).metadata.num_rows for f in ep["files"]
         )
-        files = globmod.glob(os.path.join(
-            lake_dir, "data", f"ep={safe}", "bucket=*", "*.parquet"
-        ))
-        written = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
         assert written == changed, (
             f"MOR epoch {ep['epoch_id']} amplified: {written} != {changed}"
         )

@@ -19,7 +19,6 @@ semantics, RowFactory.php:52-54).
 
 from __future__ import annotations
 
-import json
 import os
 
 import pandas as pd
@@ -153,9 +152,10 @@ def generate_binlog_chunks(
     out_dir: str,
     rows_per_event: int = 64,
     heartbeat_every: int = 50,
-    write_index: bool = True,
 ) -> pd.DataFrame:
-    """Encode ``changelog`` into ``out_dir/binlog.NNNNNN`` chunk files.
+    """Encode ``changelog`` into ``out_dir/binlog.NNNNNN`` chunk files,
+    plain binlog files and nothing beside them: a reader learns each
+    chunk's tables from its TABLE_MAP frames, as it would on a real log.
 
     Returns a pandas frame of per-chunk stats
     (log_file, n_frames, n_rows, n_bytes).
@@ -259,15 +259,6 @@ def generate_binlog_chunks(
         with open(tmp, "wb") as f:
             f.write(data)
         os.rename(tmp, path)
-        if write_index:
-            with open(path + ".idx.json", "w") as f:
-                json.dump(
-                    [
-                        {"offset": o, "type": t, "size": s}
-                        for (o, t, s) in writer.frames
-                    ],
-                    f,
-                )
         return pd.DataFrame(
             [
                 {
@@ -385,11 +376,6 @@ def generate_typed_chunks(
         with open(tmp, "wb") as f:
             f.write(data)
         os.rename(tmp, path)
-        with open(path + ".idx.json", "w") as f:
-            json.dump(
-                [{"offset": o, "type": ty, "size": s}
-                 for (o, ty, s) in writer.frames], f,
-            )
         return pd.DataFrame(
             [{"log_file": log_file, "n_frames": len(writer.frames),
               "n_rows": len(pdf), "n_bytes": len(data)}]

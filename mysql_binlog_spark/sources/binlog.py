@@ -174,8 +174,9 @@ def _local_path(path: str) -> str:
 
 
 # The names of binlog chunk files in a chunk directory: MySQL's
-# ``binlog.NNNNNN``.  Excludes the server's ``binlog.index`` and the
-# generator's ``.idx.json`` frame-index sidecars.
+# ``binlog.NNNNNN``.  Excludes the server's ``binlog.index`` and any
+# other file kept beside the chunks.  Every chunk listing selects
+# through this one rule.
 CHUNK_GLOB = "binlog.*[0-9]"
 
 
@@ -232,19 +233,12 @@ def discover_tables(
     spark: SparkSession, chunk_glob: str | list[str],
     on_error: str = "raise",
 ) -> dict[tuple[str, str], list[tuple[str, str]]]:
-    """Cheap first pass: read only TABLE_MAP frames of every chunk and merge
-    each table's column sets across schema versions (first-seen order) —
-    the distributed analog of the reference's TableMap registry (M5) plus
-    evolution detection (A4).
-
-    When a chunk has a ``.idx.json`` frame index (the generator writes
-    one), only the TABLE_MAP byte ranges are read — discovery costs
-    O(table maps), not O(corpus bytes).  Chunks without an index fall
-    back to a row-skipping full scan."""
-    import json as _json
-
-    from ..wire import CRC_LEN, HEADER_LEN, TABLE_MAP_EVENT, _parse_table_map
-
+    """Cheap first pass: walk every chunk's frames, decoding no rows
+    (``include=frozenset()``), and merge each table's column sets from
+    its TABLE_MAP frames across schema versions (first-seen order) — the
+    distributed analog of the reference's TableMap registry (M5) plus
+    evolution detection (A4).  The chunk itself is the only source of
+    its schema; nothing kept beside it is read."""
     paths = _chunk_paths(chunk_glob)
     n_slices = max(1, min(len(paths),
                           spark.sparkContext.defaultParallelism))
@@ -254,38 +248,11 @@ def discover_tables(
         rows = []
         for pdf in it:
             for path in pdf["path"]:
-                local = _local_path(path)
-                idx = local + ".idx.json"
-                seen: dict = {}
                 try:
-                    seen = None
-                    if os.path.exists(idx):
-                        # a corrupt SIDECAR must not silently drop the
-                        # chunk's schema contribution while its body
-                        # still decodes (ADVICE r6): fall back to the
-                        # full-decode discovery below on any index error
-                        try:
-                            with open(idx) as f:
-                                frames = _json.load(f)
-                            seen = {}
-                            with open(local, "rb") as fh:
-                                for fr in frames:
-                                    if fr["type"] != TABLE_MAP_EVENT:
-                                        continue
-                                    fh.seek(fr["offset"] + HEADER_LEN)
-                                    payload = fh.read(
-                                        fr["size"] - HEADER_LEN - CRC_LEN
-                                    )
-                                    t = _parse_table_map(memoryview(payload))
-                                    seen[(t.schema, t.table)] = t
-                        except Exception:
-                            seen = None
-                    if seen is None:
-                        with open(local, "rb") as fh:
-                            batch = decode_chunk(
-                                fh.read(), include=frozenset()
-                            )
-                        seen = batch.tables_seen
+                    with open(_local_path(path), "rb") as fh:
+                        seen = decode_chunk(
+                            fh.read(), include=frozenset()
+                        ).tables_seen
                 except Exception:
                     # quarantine semantics: an unreadable chunk adds no
                     # schema; the decode pass will skip (or raise on) it
@@ -407,6 +374,14 @@ def read_binlog(
     # would only contribute its (expensive) Hadoop file listing — ~40% of
     # decode wall time at bench scale; a driver-side glob replaces it.
     paths = _chunk_paths(chunk_glob)
+    if start_lsn is not None:
+        # whole files before the start file are pruned before sizing and
+        # decode (reference's start-pos skip, EventsIterator.php:207-215,
+        # lifted to scan pruning)
+        start_file, start_pos = start_lsn
+        paths = [p for p in paths if os.path.basename(p) >= start_file]
+    else:
+        start_file, start_pos = "", 0
     # slice policy: every Python-runner task costs ~15-30ms of dispatch,
     # so aim for ≥64MB of chunk bytes per task, floored at one wave
     # (defaultParallelism) and capped at one file per task — at cluster
@@ -428,15 +403,6 @@ def read_binlog(
         max(cores, -(-total_bytes // (64 * 1024 * 1024))),
     ))
     files = _paths_df(spark, paths, n_slices)
-    if start_lsn is not None:
-        # file-level pruning before any decode (reference's start-pos skip,
-        # EventsIterator.php:207-215, lifted to scan pruning)
-        start_file, start_pos = start_lsn
-        files = files.filter(
-            F.element_at(F.split(F.col("path"), "/"), -1) >= start_file
-        )
-    else:
-        start_file, start_pos = "", 0
 
     col_names = [n for n, _ in image_cols]
     type_names = [t for _, t in image_cols]

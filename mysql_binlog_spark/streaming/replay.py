@@ -118,7 +118,8 @@ def replay_batch(
     serial epochs — deterministic job ordering for debugging and the
     A/B control in BENCH/ANALYSIS.md).
 
-    ``stop_after_epochs`` simulates a mid-replay crash for resume tests.
+    ``stop_after_epochs`` simulates a mid-replay crash for resume tests;
+    such a call decodes exactly that many epochs.
     ``start_after_gtid`` = (sid uuid, gno): resume-by-GTID — skip every
     transaction of that SID with GNO ≤ gno (pushed into the decode
     kernels; file-level pruning still needs ``start_lsn``).
@@ -150,7 +151,10 @@ def replay_batch(
     for group in groups:
         epoch_id = f"batch-{group[0]}-{group[-1]}"
         plan.append((epoch_id, group, epoch_id in done))
+    # the epochs this call applies: a stop never prefetches past itself
     todo = [(eid, g) for eid, g, skipped in plan if not skipped]
+    if stop_after_epochs is not None:
+        todo = todo[:stop_after_epochs]
 
     def prepare(group, materialize: bool = True):
         """The epoch's rows.  ``materialize=True`` (the PREFETCHED epoch)
@@ -208,7 +212,7 @@ def replay_batch(
                 ):
                     break
         finally:
-            if fut is not None:  # stop/crash: drop the prefetched epoch
+            if fut is not None:  # a crash: drop the prefetched epoch
                 try:
                     fut.result().unpersist(blocking=False)
                 except Exception:

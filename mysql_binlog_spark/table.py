@@ -505,7 +505,8 @@ class LakeTable:
         """Apply one epoch of change rows (columns: key + payload +
         ``action`` + LSN columns), any number per key in any order, or a
         ``StagedEpoch`` of them: per key, the row with the highest LSN
-        wins, against the table's rows too.  Returns commit stats;
+        wins, against the table's rows too.  Returns commit stats, with
+        ``files`` the data files the epoch wrote (absolute paths);
         re-delivered epochs are no-ops.  Payload columns the table does
         not have yet are added first (ADD COLUMN); table columns the
         updates lack are written NULL.
@@ -539,25 +540,25 @@ class LakeTable:
         rows = self._rows(staged.rows if staged else updates)
         if fused:
             # MOR epochs and initial loads never read the base: lazy rows
-            # are ONE job (decode → reduce → bucketed write), and their
-            # lineage is a 3-column scan of the files written
+            # are ONE job (decode → reduce → bucketed write)
             written = self._write_epoch(rows, epoch_id)
             touched = set(written)
-            files = self._files({"buckets": written}, "buckets")
-            lineage = (
-                staged.lineage if staged
-                else self._lineage(self._read(spark, files))[0]
-            )
         else:
             # one write, one exchange: base(touched) — the touched
             # buckets' outstanding deltas fold into it — ∪ winners
-            touched, lineage = staged.touched, staged.lineage
+            touched = staged.touched
             base = self._read(
                 spark, self.live_files(touched) + self.delta_files(touched)
             )
             written = self._write_epoch(
                 self._rows(base).unionByName(rows), epoch_id
             )
+        files = self._files({"buckets": written}, "buckets")
+        # a lazy epoch's lineage is a 3-column scan of the files written
+        lineage = (
+            staged.lineage if staged
+            else self._lineage(self._read(spark, files))[0]
+        )
         if own:
             staged.unpersist()
         self._publish(epoch_id, mode, written, touched, lineage)
@@ -566,6 +567,7 @@ class LakeTable:
             "skipped": False,
             "touched_buckets": len(touched),
             "lineage": lineage,
+            "files": files,
         }
 
     def _write_epoch(

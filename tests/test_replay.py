@@ -4,6 +4,7 @@ evolution, streaming replay."""
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import tempfile
 
@@ -19,7 +20,7 @@ from mysql_binlog_spark.operators.apply import (
     salted_last_writer,
 )
 from mysql_binlog_spark.oracle import apply_changelog
-from mysql_binlog_spark.sources.binlog import image_view, read_binlog
+from mysql_binlog_spark.sources.binlog import CHUNK_GLOB, image_view, read_binlog
 from mysql_binlog_spark.streaming.replay import replay_batch, replay_stream
 from mysql_binlog_spark.table import LakeTable
 
@@ -112,7 +113,7 @@ def test_batch_replay_ignores_binlog_index(spark, chunks, golden):
 
     d = os.path.join(tempfile.mkdtemp(prefix="mbs_replay_idx_"), "log")
     _sh.copytree(chunks, d)
-    names = sorted(f for f in os.listdir(d) if not f.endswith(".json"))
+    names = sorted(fnmatch.filter(os.listdir(d), CHUNK_GLOB))
     with open(os.path.join(d, "binlog.index"), "w") as f:
         f.writelines(f"./{n}\n" for n in names)
     table = new_table()
@@ -180,10 +181,7 @@ def test_cross_epoch_lsn_monotonicity(spark, chunks, golden):
     table = new_table()
     replay_batch(spark, chunks, table, include=[("app", "transcripts")],
                  files_per_epoch=2)
-    files = sorted(
-        f for f in os.listdir(chunks)
-        if f.startswith("binlog.") and not f.endswith(".json")
-    )
+    files = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     old = [os.path.join(chunks, f) for f in files[:2]]
     decoded = read_binlog(spark, old, include={("app", "transcripts")})
     cols = [f.name[len("after_"):] for f in decoded.schema.fields
@@ -208,10 +206,7 @@ def test_replay_never_decodes_a_healed_epoch(
     import mysql_binlog_spark.streaming.replay as rmod
     import mysql_binlog_spark.table as tmod
 
-    files = sorted(
-        f for f in os.listdir(chunks)
-        if f.startswith("binlog.") and not f.endswith(".json")
-    )
+    files = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     healed = files[2:4]  # the second epoch at files_per_epoch=2
     kw = dict(include=[("app", "transcripts")], files_per_epoch=2,
               pipeline=False)
@@ -247,6 +242,33 @@ def test_replay_never_decodes_a_healed_epoch(
     assert len(decoded) == stats.applied
     assert [e["skipped"] for e in stats.epochs[:2]] == [True, True]
     assert_matches_golden(spark, reopened, golden)
+
+
+def test_stopped_replay_decodes_only_the_epochs_it_applies(
+    spark, chunks, monkeypatch
+):
+    """``stop_after_epochs=k`` with the one-deep prefetch on decodes
+    exactly k epochs: the prefetch never stages epoch k+1 only to drop
+    it, and the call leaves no cached blocks behind."""
+    import mysql_binlog_spark.streaming.replay as rmod
+
+    calls = []
+    real = rmod._epoch_winners
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(rmod, "_epoch_winners", counting)
+    before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    stats = replay_batch(
+        spark, chunks, new_table(), include=[("app", "transcripts")],
+        files_per_epoch=1, stop_after_epochs=2, pipeline=True,
+    )
+    after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    assert stats.applied == 2
+    assert len(calls) == 2, calls
+    assert after - before == set(), f"leaked cached RDD ids: {after - before}"
 
 
 def test_salted_equals_plain(spark, sf_dir):
@@ -321,8 +343,7 @@ def test_batch_replay_quarantines_corrupt_chunk(spark, chunks, golden):
     import shutil as _sh
 
     qdir = tempfile.mkdtemp(prefix="mbs_replay_q_")
-    names = sorted(f for f in os.listdir(chunks)
-                   if f.startswith("binlog.") and not f.endswith(".json"))
+    names = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     for n in names:
         _sh.copy(os.path.join(chunks, n), qdir)
     # corrupt the MIDDLE chunk's final CRC byte
@@ -364,8 +385,7 @@ def test_backfill_repaired_chunk_after_quarantine(spark, chunks, golden):
     import shutil as _sh
 
     qdir = tempfile.mkdtemp(prefix="mbs_bf_q_")
-    names = sorted(f for f in os.listdir(chunks)
-                   if f.startswith("binlog.") and not f.endswith(".json"))
+    names = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     for n in names:
         _sh.copy(os.path.join(chunks, n), qdir)
     victim = names[len(names) // 2]

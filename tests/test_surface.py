@@ -85,3 +85,23 @@ def test_every_package_definition_has_a_caller_outside_tests():
     )
     stale = sorted(set(TEST_ONLY) - flagged)
     assert not stale, f"TEST_ONLY entries now have callers or are gone: {stale}"
+
+
+def test_chunks_are_selected_by_one_rule():
+    """Chunk listings select through ``sources/binlog.CHUNK_GLOB``, not a
+    hand-typed prefix test, and the package reads no file kept beside a
+    chunk.  ``perfbench/`` is left out: its files change only with the
+    benchmark."""
+    hand_rolled = re.compile(r"""startswith\(\s*["']binlog\.""")
+    offenders = []
+    for c in ["mysql_binlog_spark", "bench.py", "bench_extra.py", "bench",
+              "scripts"]:
+        for path in _py_files(os.path.join(ROOT, c)):
+            with open(path) as f:
+                text = f.read()
+            rel = os.path.relpath(path, ROOT)
+            if hand_rolled.search(text):
+                offenders.append(f"{rel}: hand-rolled chunk filter")
+            if c == "mysql_binlog_spark" and "idx.json" in text:
+                offenders.append(f"{rel}: names a chunk sidecar")
+    assert not offenders, offenders

@@ -4,6 +4,7 @@ hash-parity with the DuckDB oracle at test scale."""
 
 from __future__ import annotations
 
+import fnmatch
 import os
 
 import pytest
@@ -95,6 +96,39 @@ def test_discover_tables_full_types(spark, typed_chunks):
     assert cols["c_float"] == "float"
 
 
+def test_discovery_ignores_a_stale_sidecar(spark, sf_dir, tmp_path):
+    """A chunk's schema comes from its own TABLE_MAP frames.  A stale
+    frame-index file beside it — here one listing only the chunk's first
+    TABLE_MAP, as a chunk repaired in place could leave behind — changes
+    nothing: discovery equals the bare chunk's."""
+    import json
+    import shutil
+
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB, discover_tables
+    from mysql_binlog_spark.wire import HEADER_LEN, TABLE_MAP_EVENT
+
+    src = os.path.join(dq.binlog_fixture_dir(spark, sf_dir), "binlog.000001")
+    data = open(src, "rb").read()
+    # walk the frames after the 4-byte magic; a frame header is
+    # ts u32, type u8, server_id u32, event size u32, ...
+    off = 4
+    while data[off + 4] != TABLE_MAP_EVENT:
+        off += int.from_bytes(data[off + 9:off + 13], "little")
+    size = int.from_bytes(data[off + 9:off + 13], "little")
+    assert size > HEADER_LEN
+
+    bare, stale = tmp_path / "bare", tmp_path / "stale"
+    for d in (bare, stale):
+        d.mkdir()
+        shutil.copy(src, d)
+    with open(stale / "binlog.000001.idx.json", "w") as f:
+        json.dump([{"offset": off, "type": TABLE_MAP_EVENT, "size": size}], f)
+
+    want = discover_tables(spark, str(bare / CHUNK_GLOB))
+    assert len(want) > 1  # the first TABLE_MAP alone names one table
+    assert discover_tables(spark, str(stale / CHUNK_GLOB)) == want
+
+
 def test_validate_chunks_reason_taxonomy(spark, tmp_path):
     """The quarantine report's coarse reasons are deterministic classes:
     flipped CRC byte → 'crc', mid-frame cut → 'truncated', garbage →
@@ -102,7 +136,11 @@ def test_validate_chunks_reason_taxonomy(spark, tmp_path):
     read_binlog(on_error='skip') decodes exactly the healthy chunks."""
     from mysql_binlog_spark import spec
     from mysql_binlog_spark.fixtures.generator import generate_binlog_chunks
-    from mysql_binlog_spark.sources.binlog import read_binlog, validate_chunks
+    from mysql_binlog_spark.sources.binlog import (
+        CHUNK_GLOB,
+        read_binlog,
+        validate_chunks,
+    )
 
     sf = os.environ.get("MBS_TEST_SF", "/root/testdata/sf0.001")
     spark.read.parquet(os.path.join(sf, "events.parquet")) \
@@ -114,8 +152,7 @@ def test_validate_chunks_reason_taxonomy(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
     generate_binlog_chunks(changelog, src)
-    names = sorted(f for f in os.listdir(src)
-                   if f.startswith("binlog.") and not f.endswith(".json"))
+    names = sorted(fnmatch.filter(os.listdir(src), CHUNK_GLOB))
     good = os.path.join(src, names[0])
     data = open(good, "rb").read()
     crc_bad = str(tmp_path / "binlog.000090")
