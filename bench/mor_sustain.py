@@ -67,7 +67,7 @@ def run_config(spark, maintain_every):
             spark, CHUNKS, t, include=[("app", "transcripts")],
             image_cols=IMAGE_COLS, files_per_epoch=FPE,
             merge_mode="mor", maintain_every=None,
-            stop_after_epochs=1, pipeline=False,
+            stop_after_epochs=1,
         )
         applied = [e for e in stats.epochs if not e.get("skipped")]
         if not applied:

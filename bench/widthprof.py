@@ -101,8 +101,7 @@ lake = tempfile.mkdtemp(prefix="mbs_wp_lake_")
 t = LakeTable.create(lake, IMAGE_COLS[:6], ["conv_id","turn_idx"], n_buckets=64)
 replay_batch(spark, chunk_dir, t, include=[("app","transcripts")],
              image_cols=IMAGE_COLS, files_per_epoch=fpe,
-             maintain_every=None,
-             pipeline=os.environ.get("WP_PIPELINE", "1") == "1")
+             maintain_every=None)
 dt = time.time() - t0
 # JVM CPU is NOT visible in this process's rusage (it's a live child) —
 # the parent samples the /proc descendant tree instead; we record the

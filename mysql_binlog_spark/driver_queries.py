@@ -43,6 +43,22 @@ KEY_COLS = ["conv_id", "turn_idx"]
 FINAL_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "tool_version", "ts"]
 
 
+def _transcripts_lake(
+    prefix: str, n_buckets: int = 16, bucket_hash: str = "xxhash64"
+) -> LakeTable:
+    """An empty lake for the replayed transcripts (key + payload, without
+    ``tool_version``, which schema evolution adds) in a fresh temporary
+    directory."""
+    return LakeTable.create(
+        tempfile.mkdtemp(prefix=prefix),
+        columns=[
+            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
+            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
+        ],
+        key_cols=KEY_COLS, n_buckets=n_buckets, bucket_hash=bucket_hash,
+    )
+
+
 def _events(spark: SparkSession, sf_dir: str) -> None:
     spark.read.parquet(os.path.join(sf_dir, "events.parquet")).createOrReplaceTempView(
         "events"
@@ -662,16 +678,7 @@ def q_cdc_apply_e2e(spark, sf_dir):
     last-writer → mini-lake MERGE epochs (schema evolution + exactly-once
     commits) → final snapshot."""
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=16,
-    )
+    table = _transcripts_lake("mbs_lake_")
     replay_batch(
         spark, chunks, table, include=[("app", "transcripts")], files_per_epoch=2
     )
@@ -687,16 +694,7 @@ def q_cdc_schema_evolution(spark, sf_dir):
     (key, tool_version) plus the table's schema version; the oracle
     applies the same ADD COLUMN + backfill-NULL semantics in SQL."""
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_evo_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=16,
-    )
+    table = _transcripts_lake("mbs_lake_evo_")
     replay_batch(
         spark, chunks, table, include=[("app", "transcripts")],
         files_per_epoch=2,
@@ -3351,16 +3349,7 @@ def q_cdc_compaction(spark, sf_dir):
     bucket post-compact, tombstones gone) before returning the snapshot
     (table.LakeTable.compact/vacuum)."""
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_cmp_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=16,
-    )
+    table = _transcripts_lake("mbs_lake_cmp_")
     replay_batch(
         spark, chunks, table, include=[("app", "transcripts")],
         files_per_epoch=2,
@@ -3479,17 +3468,8 @@ def q_cdc_write_amplification(spark, sf_dir):
     import pyarrow.parquet as pq
 
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_wamp_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=WAMP_BUCKETS,
-        bucket_hash="md5",
-    )
+    table = _transcripts_lake("mbs_lake_wamp_", n_buckets=WAMP_BUCKETS,
+                              bucket_hash="md5")
     stats = replay_batch(
         spark, chunks, table, include=[("app", "transcripts")],
         files_per_epoch=1, maintain_every=None,
@@ -3524,16 +3504,7 @@ def q_cdc_lake_time_travel(spark, sf_dir):
     historical manifests replay bit-exact (table.LakeTable.commit_at /
     snapshot_df)."""
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_tt_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=16,
-    )
+    table = _transcripts_lake("mbs_lake_tt_")
     replay_batch(
         spark, chunks, table, include=[("app", "transcripts")],
         files_per_epoch=1, maintain_every=None,
@@ -3620,16 +3591,7 @@ def q_cdc_mor_replay(spark, sf_dir):
     import pyarrow.parquet as pq
 
     chunks = binlog_fixture_dir(spark, sf_dir)
-    lake_dir = tempfile.mkdtemp(prefix="mbs_lake_mor_")
-    table = LakeTable.create(
-        lake_dir,
-        columns=[
-            ("conv_id", "string"), ("turn_idx", "int"), ("role", "string"),
-            ("text", "string"), ("tool", "string"), ("ts", "timestamp"),
-        ],
-        key_cols=KEY_COLS,
-        n_buckets=16,
-    )
+    table = _transcripts_lake("mbs_lake_mor_")
     n_chunks = len(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     if n_chunks > 2:  # small fixtures (1 chunk) go all-MOR
         replay_batch(

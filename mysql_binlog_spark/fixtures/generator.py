@@ -168,7 +168,7 @@ def generate_binlog_chunks(
 
     prepped = with_before_images(with_schema_version(changelog))
 
-    def encode_file(pdf: pd.DataFrame):
+    def encode_file(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["log_pos", "server_id"]).reset_index(drop=True)
         pdf["_ts"] = _ts_tuples(pdf["ts"])
         if "prev_ts" in pdf.columns:
@@ -343,7 +343,7 @@ def generate_typed_chunks(
     os.makedirs(out_dir, exist_ok=True)
     cols = [c.name for c in typed_schema().columns]
 
-    def encode_file(pdf: pd.DataFrame):
+    def encode_file(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("row_id").reset_index(drop=True)
         log_file = pdf["log_file"].iloc[0]
         writer = BinlogWriter(server_id=1, base_ts=TYPED_TS_BASE)

@@ -48,11 +48,14 @@ from ..wire import (
     TYPE_TIMESTAMP2,
     TYPE_TINY,
     TYPE_VARCHAR,
+    CrcMismatchError,
+    TruncatedFrameError,
     WireColumn,
     decode_chunk,
     table_admitted,
 )
 from .vector import materialize_column
+from .wavefront import decode_chunk_vectorized
 
 ZERO_DATE = "0000-00-00"  # decoded sentinel → NULL at the DataFrame layer
 
@@ -180,10 +183,25 @@ def _local_path(path: str) -> str:
 CHUNK_GLOB = "binlog.*[0-9]"
 
 
-def _chunk_paths(chunk_glob: str | list[str]) -> list[str]:
+def _chunk_paths(
+    chunk_glob: str | list[str], start_lsn: tuple[str, int] | None = None
+) -> list[str]:
+    """The chunk listing, sorted, from a glob or a path list.  With
+    ``start_lsn`` = (binlog_file, position), files before the start file
+    are pruned (the reference's start-pos skip, EventsIterator.php:
+    207-215, lifted to scan pruning)."""
     if isinstance(chunk_glob, list):
-        return sorted(chunk_glob)
-    return sorted(glob.glob(_local_path(chunk_glob)))
+        paths = sorted(chunk_glob)
+    else:
+        paths = sorted(glob.glob(_local_path(chunk_glob)))
+    if start_lsn is not None:
+        paths = [p for p in paths if os.path.basename(p) >= start_lsn[0]]
+    return paths
+
+
+def _read_chunk(path: str) -> bytes:
+    with open(_local_path(path), "rb") as fh:
+        return fh.read()
 
 
 # Above this many paths _paths_df stops inlining them as one plan literal:
@@ -229,6 +247,31 @@ def _paths_df(spark: SparkSession, paths: list[str], n_slices: int) -> DataFrame
     )
 
 
+def _chunk_tasks(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The chunk listing as the task DataFrame every chunk job maps over.
+    Slice rule: every Python-runner task costs ~15-30ms of dispatch, so
+    aim for ≥64MB of chunk bytes per task, floored at one wave
+    (defaultParallelism) and capped at one file per task — at cluster
+    scale (GB-sized chunks) this degenerates to one-task-per-file, at
+    bench scale it avoids paying the task floor 3x over.  (Round 7
+    note: a 2-wave floor was measured and REJECTED — interleaved
+    quiet-box A/B put one wave at 1.98s vs 2.32s for two waves on the
+    1200-chunk decode; extra waves only helped under external load,
+    where the freed cores mask noise.)"""
+    total_bytes = 0
+    for p in paths:
+        try:
+            total_bytes += os.path.getsize(_local_path(p))
+        except OSError:
+            pass
+    cores = spark.sparkContext.defaultParallelism
+    n_slices = max(1, min(
+        len(paths),
+        max(cores, -(-total_bytes // (64 * 1024 * 1024))),
+    ))
+    return _paths_df(spark, paths, n_slices)
+
+
 def discover_tables(
     spark: SparkSession, chunk_glob: str | list[str],
     on_error: str = "raise",
@@ -238,21 +281,20 @@ def discover_tables(
     its TABLE_MAP frames across schema versions (first-seen order) — the
     distributed analog of the reference's TableMap registry (M5) plus
     evolution detection (A4).  The chunk itself is the only source of
-    its schema; nothing kept beside it is read."""
+    its schema; nothing kept beside it is read.  ``read_binlog`` and
+    ``validate_chunks`` run it over the chunk listing they decode, so a
+    ``start_lsn`` prune also prunes discovery; chunks are sliced into
+    tasks by the decode's rule (``_chunk_tasks``)."""
     paths = _chunk_paths(chunk_glob)
-    n_slices = max(1, min(len(paths),
-                          spark.sparkContext.defaultParallelism))
-    files = _paths_df(spark, paths, n_slices)
 
     def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
         for pdf in it:
             for path in pdf["path"]:
                 try:
-                    with open(_local_path(path), "rb") as fh:
-                        seen = decode_chunk(
-                            fh.read(), include=frozenset()
-                        ).tables_seen
+                    seen = decode_chunk(
+                        _read_chunk(path), include=frozenset()
+                    ).tables_seen
                 except Exception:
                     # quarantine semantics: an unreadable chunk adds no
                     # schema; the decode pass will skip (or raise on) it
@@ -276,7 +318,8 @@ def discover_tables(
         )
 
     collected = (
-        files.mapInPandas(
+        _chunk_tasks(spark, paths)
+        .mapInPandas(
             scan,
             schema="log_file string, schema_name string, table_name string, "
             "columns array<string>",
@@ -296,11 +339,105 @@ def discover_tables(
     return merged
 
 
+def _image_cols(
+    spark: SparkSession, paths: list[str], include, exclude, on_error: str
+) -> list[tuple[str, str]]:
+    """The union of the admitted tables' discovered columns, tables in
+    sorted order, each column's first-seen type."""
+    discovered = discover_tables(spark, paths, on_error=on_error)
+    image_cols: list[tuple[str, str]] = []
+    seen: set[str] = set()
+    for k in sorted(discovered):
+        if not table_admitted(k[0], k[1], include, exclude):
+            continue
+        for name, typ in discovered[k]:
+            if name not in seen:
+                image_cols.append((name, typ))
+                seen.add(name)
+    return image_cols
+
+
 def decoded_schema_ddl(image_cols: list[tuple[str, str]]) -> str:
     parts = [f"{n} {t}" for n, t in META_COLS]
     parts += [f"before_{n} {t}" for n, t in image_cols]
     parts += [f"after_{n} {t}" for n, t in image_cols]
     return ", ".join(parts)
+
+
+def _chunk_decoder(
+    image_cols: list[tuple[str, str]],
+    include=None,
+    exclude=None,
+    start_lsn: tuple[str, int] | None = None,
+    start_after_gtid=None,
+    verify_crc: bool = False,
+    before_mode: str = "full",
+    null_cols: frozenset[str] = frozenset(),
+):
+    """The one per-chunk decode: ``path`` → the chunk's whole Arrow
+    batch in ``decoded_schema_ddl(image_cols)`` layout, or an exception.
+    Reading, ``decode_chunk_vectorized`` (which picks the wavefront or
+    the value loops) and Arrow emission all run inside it, so a chunk
+    either yields every row or raises — the verdict ``read_binlog``'s
+    ``on_error`` guard and ``validate_chunks``' report both take."""
+    start_file, start_pos = start_lsn or ("", 0)
+    col_names = [n for n, _ in image_cols]
+    type_names = [t for _, t in image_cols]
+    out_names = [n for n, _ in META_COLS]
+    out_names += [f"{side}_{c}" for side in ("before", "after")
+                  for c in col_names]
+
+    def decode(path: str) -> pa.RecordBatch:
+        name = os.path.basename(path)
+        data = _read_chunk(path)
+        batch, kinds = decode_chunk_vectorized(
+            data,
+            image_cols=col_names,
+            include=include,
+            exclude=exclude,
+            start_pos=start_pos if name == start_file else 0,
+            verify_crc=verify_crc,
+            before_mode=before_mode,
+            start_after_gtid=start_after_gtid,
+        )
+        # Arrow-native emission: decoded columns go straight into Arrow
+        # arrays — no pandas object Series in between.
+        n = len(batch)
+        m = batch.meta_numpy()  # np.repeat expansion, not per-row
+        # String meta columns: encode once per EVENT, then a C-side
+        # Arrow take gathers per row — no per-row Python objects, no
+        # per-row UTF-8 encode (a GTID repeats across every row of its
+        # transaction; round-6 fix for the r5 decode_binary regression).
+        codes = pa.array(m["codes"], pa.int64())
+        take = lambda vals: pa.array(vals, pa.string()).take(codes)  # noqa: E731
+        # null_cols meta columns skip the build AND the Arrow IPC + JVM
+        # row-conversion downstream (validity bitmap only) — the apply
+        # path nulls event_ts/schema_name/table_name/gtid it never reads
+        # (guide §4)
+        nstr = lambda name_, mk: (  # noqa: E731
+            pa.nulls(n, pa.string()) if name_ in null_cols else mk()
+        )
+        arrays = [
+            # constant column via C-side take (a [name]*n python list
+            # costs ~1.4ms/chunk; this is ~0.04ms)
+            pa.array([name], pa.string()).take(
+                pa.array(np.zeros(n, np.int64))
+            ),
+            pa.array(m["log_pos"], pa.int64()),
+            pa.array(m["server_id"], pa.int64()),
+            (pa.nulls(n, pa.timestamp("us"))
+             if "event_ts" in null_cols
+             else pa.array(m["ts_us"], pa.timestamp("us"))),
+            nstr("schema_name", lambda: take(m["ev_schema"])),
+            nstr("table_name", lambda: take(m["ev_table"])),
+            take(m["ev_action"]),
+            pa.array(m["batch_seq"], pa.int32()),
+            nstr("gtid", lambda: take(m["ev_gtid"])),
+        ]
+        arrays += image_arrays(data, batch, kinds, type_names)
+        return pa.RecordBatch.from_arrays(arrays, names=out_names)
+
+    return decode
 
 
 def read_binlog(
@@ -319,22 +456,28 @@ def read_binlog(
     """Decode binlog chunks into a flat change-row DataFrame.
 
     ``on_error``: 'raise' (default — a corrupt chunk fails the job) or
-    'skip' — quarantine semantics: a chunk whose decode raises is
-    dropped WHOLE (chunks are the atomicity unit; partial rows from a
-    corrupt chunk are worse than none) and the rest of the log decodes
-    normally.  Pair with ``validate_chunks`` for the per-chunk report
-    of what was skipped and why.
+    'skip' — quarantine semantics: a chunk whose decode or Arrow
+    emission raises is dropped WHOLE (chunks are the atomicity unit;
+    partial rows from a corrupt chunk are worse than none) and the rest
+    of the log decodes normally.  An unreadable chunk (``OSError``)
+    fails the job in both modes: it says nothing about the chunk's
+    bytes.  ``validate_chunks`` maps the same per-chunk decode
+    (``_chunk_decoder``), so its report names exactly the chunks this
+    drops, and why.
 
     Output schema: LSN + routing metadata columns (META_COLS) plus
     ``before_*`` / ``after_*`` image columns.  ``image_cols`` defaults to
-    the union discovered from TABLE_MAP frames of the included tables.
+    the union discovered from TABLE_MAP frames of the included tables,
+    over the same chunks the decode reads.
+
+    ``start_lsn`` = (binlog_file, position): chunks before the file are
+    pruned from the listing (``_chunk_paths``) before discovery and
+    decode; events before the position in the start file are skipped.
 
     Each task opens its chunks itself (the JVM scan would add its file
     listing and ship the whole data volume through Arrow IPC), so chunks
     must be readable from every worker: local FS here, NFS/fuse mounts
-    on a cluster.  Each chunk is decoded by
-    ``wavefront.decode_chunk_vectorized``, which picks the wavefront or
-    the compiled value loops for it.
+    on a cluster.  Chunks are sliced into tasks by ``_chunk_tasks``.
 
     ``null_cols``: emit these metadata columns as all-NULL instead of
     their decoded values — the output SCHEMA is unchanged, only the
@@ -353,128 +496,33 @@ def read_binlog(
                 f"null_cols must be a subset of {sorted(NULLABLE_META)}; "
                 f"got extra {sorted(bad)}"
             )
-    nulled = frozenset(null_cols or ())
-    if image_cols is None:
-        discovered = discover_tables(spark, chunk_glob, on_error=on_error)
-        keys = [
-            k
-            for k in discovered
-            if table_admitted(k[0], k[1], include, exclude)
-        ]
-        image_cols = []
-        seen: set[str] = set()
-        for k in sorted(keys):
-            for name, typ in discovered[k]:
-                if name not in seen:
-                    image_cols.append((name, typ))
-                    seen.add(name)
-    ddl = decoded_schema_ddl(image_cols)
-
     # tasks read chunk bytes themselves, so the JVM binaryFile source
     # would only contribute its (expensive) Hadoop file listing — ~40% of
     # decode wall time at bench scale; a driver-side glob replaces it.
-    paths = _chunk_paths(chunk_glob)
-    if start_lsn is not None:
-        # whole files before the start file are pruned before sizing and
-        # decode (reference's start-pos skip, EventsIterator.php:207-215,
-        # lifted to scan pruning)
-        start_file, start_pos = start_lsn
-        paths = [p for p in paths if os.path.basename(p) >= start_file]
-    else:
-        start_file, start_pos = "", 0
-    # slice policy: every Python-runner task costs ~15-30ms of dispatch,
-    # so aim for ≥64MB of chunk bytes per task, floored at one wave
-    # (defaultParallelism) and capped at one file per task — at cluster
-    # scale (GB-sized chunks) this degenerates to one-task-per-file, at
-    # bench scale it avoids paying the task floor 3x over.  (Round 7
-    # note: a 2-wave floor was measured and REJECTED — interleaved
-    # quiet-box A/B put one wave at 1.98s vs 2.32s for two waves on the
-    # 1200-chunk decode; extra waves only helped under external load,
-    # where the freed cores mask noise.)
-    total_bytes = 0
-    for p in paths:
-        try:
-            total_bytes += os.path.getsize(p)
-        except OSError:
-            pass
-    cores = spark.sparkContext.defaultParallelism
-    n_slices = max(1, min(
-        len(paths),
-        max(cores, -(-total_bytes // (64 * 1024 * 1024))),
-    ))
-    files = _paths_df(spark, paths, n_slices)
-
-    col_names = [n for n, _ in image_cols]
-    type_names = [t for _, t in image_cols]
+    paths = _chunk_paths(chunk_glob, start_lsn)
+    if image_cols is None:
+        image_cols = _image_cols(spark, paths, include, exclude, on_error)
+    chunk = _chunk_decoder(
+        image_cols, include, exclude, start_lsn, start_after_gtid,
+        verify_crc, before_mode, frozenset(null_cols or ()),
+    )
 
     def decode(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Arrow-native emission: decoded columns go straight into Arrow
-        # arrays — no pandas object Series in between.
-        from .wavefront import decode_chunk_vectorized
-
         for rb in it:
             for path in rb.column(0).to_pylist():
-                name = os.path.basename(path)
-                sp = start_pos if name == start_file else 0
-                with open(_local_path(path), "rb") as fh:
-                    data = fh.read()
                 try:
-                    batch, kinds = decode_chunk_vectorized(
-                        data,
-                        image_cols=col_names,
-                        include=include,
-                        exclude=exclude,
-                        start_pos=sp,
-                        verify_crc=verify_crc,
-                        before_mode=before_mode,
-                        start_after_gtid=start_after_gtid,
-                    )
-                except Exception:
-                    if on_error == "skip":
-                        # quarantine: the chunk is the atomicity unit —
-                        # drop it whole, decode the rest of the log
+                    out = chunk(path)
+                except Exception as e:
+                    # quarantine: the chunk is the atomicity unit — drop
+                    # it whole, decode the rest of the log
+                    if on_error == "skip" and not isinstance(e, OSError):
                         continue
                     raise
-                n = len(batch)
-                m = batch.meta_numpy()  # np.repeat expansion, not per-row
-                # String meta columns: encode once per EVENT, then a
-                # C-side Arrow take gathers per row — no per-row Python
-                # objects, no per-row UTF-8 encode (a GTID repeats across
-                # every row of its transaction; round-6 fix for the
-                # r5 decode_binary regression).
-                codes = pa.array(m["codes"], pa.int64())
-                take = lambda vals: pa.array(vals, pa.string()).take(codes)  # noqa: E731
-                # null_cols meta columns skip the build AND the Arrow
-                # IPC + JVM row-conversion downstream (validity bitmap
-                # only) — the apply path nulls event_ts/schema_name/
-                # table_name/gtid it never reads (guide §4)
-                nstr = lambda name_, mk: (  # noqa: E731
-                    pa.nulls(n, pa.string()) if name_ in nulled else mk()
-                )
-                arrays = [
-                    # constant column via C-side take (a [name]*n python
-                    # list costs ~1.4ms/chunk; this is ~0.04ms)
-                    pa.array([name], pa.string()).take(
-                        pa.array(np.zeros(n, np.int64))
-                    ),
-                    pa.array(m["log_pos"], pa.int64()),
-                    pa.array(m["server_id"], pa.int64()),
-                    (pa.nulls(n, pa.timestamp("us"))
-                     if "event_ts" in nulled
-                     else pa.array(m["ts_us"], pa.timestamp("us"))),
-                    nstr("schema_name", lambda: take(m["ev_schema"])),
-                    nstr("table_name", lambda: take(m["ev_table"])),
-                    take(m["ev_action"]),
-                    pa.array(m["batch_seq"], pa.int32()),
-                    nstr("gtid", lambda: take(m["ev_gtid"])),
-                ]
-                arrays += image_arrays(data, batch, kinds, type_names)
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+                yield out
 
-    out_names = [n for n, _ in META_COLS]
-    out_names += [f"{side}_{c}" for side in ("before", "after")
-                  for c in col_names]
-    return files.select("path").mapInArrow(decode, schema=ddl)
+    return _chunk_tasks(spark, paths).mapInArrow(
+        decode, schema=decoded_schema_ddl(image_cols)
+    )
 
 
 def image_arrays(
@@ -530,66 +578,47 @@ def validate_chunks(
     exclude: set | None = None,
     verify_crc: bool = True,
 ) -> DataFrame:
-    """Operational pre-flight / quarantine report: attempt a full decode
-    of every chunk (CRC on) and report per chunk ``(chunk, ok, n_rows,
-    reason)`` — the triage a replay operator runs before (or after)
-    ``read_binlog(on_error='skip')`` to know exactly what was dropped
-    and why.  Reasons are coarse deterministic classes, not message
-    text: 'crc' (checksum mismatch), 'truncated' (frame extends past
-    the file), 'malformed' (anything else the decoder rejects).
+    """Operational pre-flight / quarantine report: per chunk ``(chunk,
+    ok, n_rows, reason)`` — the triage a replay operator runs before (or
+    after) ``read_binlog(on_error='skip')`` to know exactly what was
+    dropped and why.  It maps ``read_binlog``'s own per-chunk decode
+    (``_chunk_decoder``: read, decode, Arrow emission) over image
+    columns resolved the way ``read_binlog`` resolves them, so a chunk
+    is ``ok`` with ``n_rows`` rows exactly when ``on_error='skip'``
+    emits those rows for it.  Reasons are coarse deterministic classes
+    by exception type, not message text: 'unreadable' (``OSError``
+    opening or reading the file), 'crc' (checksum mismatch),
+    'truncated' (frame extends past the file), 'malformed' (anything
+    else the decode or emission rejects).
 
-    One task per chunk slice; each failure is contained to its row —
-    the report never throws."""
-    import pandas as pd_mod
-
-    paths = sorted(chunk_paths)
-    files = _paths_df(
-        spark, paths,
-        max(1, min(len(paths), spark.sparkContext.defaultParallelism)),
+    Chunks are sliced into tasks like the decode (``_chunk_tasks``);
+    each failure is contained to its row and discovery skips what it
+    cannot read — the report never throws."""
+    paths = _chunk_paths(chunk_paths)
+    chunk = _chunk_decoder(
+        _image_cols(spark, paths, include, exclude, on_error="skip"),
+        include, exclude, verify_crc=verify_crc,
     )
 
-    def check(batches):
-        from ..wire import decode_chunk as _dc
-
-        from ..wire import CrcMismatchError, TruncatedFrameError
-
+    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for path in pdf["path"]:
-                # classification by EXCEPTION TYPE (ADVICE r6): an
-                # unrelated error whose message merely contains 'crc'
-                # can no longer masquerade as corruption, and I/O
-                # failures get their own 'unreadable' class
+                name = os.path.basename(path)
                 try:
-                    with open(_local_path(path), "rb") as fh:
-                        data = fh.read()
+                    rows.append((name, True, chunk(path).num_rows, None))
                 except OSError:
-                    rows.append(
-                        (os.path.basename(path), False, 0, "unreadable")
-                    )
-                    continue
-                try:
-                    batch = _dc(
-                        data, include=include, exclude=exclude,
-                        verify_crc=verify_crc, text_as_bytes=True,
-                    )
-                    rows.append(
-                        (os.path.basename(path), True, len(batch), None)
-                    )
+                    rows.append((name, False, 0, "unreadable"))
                 except CrcMismatchError:
-                    rows.append((os.path.basename(path), False, 0, "crc"))
+                    rows.append((name, False, 0, "crc"))
                 except TruncatedFrameError:
-                    rows.append(
-                        (os.path.basename(path), False, 0, "truncated")
-                    )
+                    rows.append((name, False, 0, "truncated"))
                 except Exception:  # contained: one row per failure
-                    rows.append(
-                        (os.path.basename(path), False, 0, "malformed")
-                    )
-            yield pd_mod.DataFrame(
+                    rows.append((name, False, 0, "malformed"))
+            yield pd.DataFrame(
                 rows, columns=["chunk", "ok", "n_rows", "reason"]
             )
 
-    return files.mapInPandas(
+    return _chunk_tasks(spark, paths).mapInPandas(
         check, "chunk string, ok boolean, n_rows bigint, reason string"
     )

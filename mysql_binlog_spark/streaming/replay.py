@@ -19,13 +19,15 @@ epoch, in its write's bucket exchange (or in ``stage`` when prefetched).
 
 from __future__ import annotations
 
-import fnmatch
+import glob
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from ..sources.binlog import CHUNK_GLOB, NULLABLE_META, image_view, read_binlog
+from ..sources.binlog import (
+    CHUNK_GLOB, NULLABLE_META, _chunk_paths, image_view, read_binlog,
+)
 from ..table import LSN_COLS, LakeTable
 
 # The apply path never reads these meta columns (it keeps only key +
@@ -91,7 +93,6 @@ def replay_batch(
     start_lsn: tuple[str, int] | None = None,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
     maintain_every: int | None = 16,
-    pipeline: bool = True,
     merge_mode: str = "cow",
     on_error: str = "raise",
     verify_crc: bool = False,
@@ -107,16 +108,12 @@ def replay_batch(
     replay; pair with ``verify_crc=True`` (corruption that doesn't
     break framing is only detectable by checksum) and run
     ``sources.binlog.validate_chunks`` for the report of what was
-    dropped and why.  Backfill after repair: the quarantined chunk's
+    dropped and why (it maps the decode's own per-chunk verdict).  Backfill after repair: the quarantined chunk's
     epoch is already committed, so re-running skips it — replay the
     repaired chunk from its own directory instead (fresh epoch id;
     last-writer-wins by LSN makes the late merge order-independent, so
     the table converges to the full-replay state —
     test_backfill_repaired_chunk_after_quarantine).
-
-    ``pipeline=False`` disables the one-deep epoch prefetch (strictly
-    serial epochs — deterministic job ordering for debugging and the
-    A/B control in BENCH/ANALYSIS.md).
 
     ``stop_after_epochs`` simulates a mid-replay crash for resume tests;
     such a call decodes exactly that many epochs.
@@ -124,7 +121,8 @@ def replay_batch(
     transaction of that SID with GNO ≤ gno (pushed into the decode
     kernels; file-level pruning still needs ``start_lsn``).
     ``start_lsn`` = (binlog_file, position): chunks before the file are
-    pruned from the epoch plan entirely; events before the position inside
+    pruned from the epoch plan entirely (the source's chunk listing,
+    ``sources.binlog._chunk_paths``); events before the position inside
     the start file are skipped by the decode source (reference's
     start-position semantics, EventsIterator.php:207-215).
     ``maintain_every``: run ``table.maintain()`` (vacuum superseded epoch
@@ -134,9 +132,9 @@ def replay_batch(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    chunks = sorted(fnmatch.filter(os.listdir(chunk_dir), CHUNK_GLOB))
-    if start_lsn is not None:
-        chunks = [f for f in chunks if f >= start_lsn[0]]
+    chunks = _chunk_paths(
+        os.path.join(glob.escape(chunk_dir), CHUNK_GLOB), start_lsn
+    )
     stats = ReplayStats()
     done = table._healed_epochs()  # a crash may have skipped a log append
     groups = [
@@ -149,7 +147,8 @@ def replay_batch(
     # applied ones, changing the epoch-log contract).
     plan = []
     for group in groups:
-        epoch_id = f"batch-{group[0]}-{group[-1]}"
+        epoch_id = (f"batch-{os.path.basename(group[0])}-"
+                    f"{os.path.basename(group[-1])}")
         plan.append((epoch_id, group, epoch_id in done))
     # the epochs this call applies: a stop never prefetches past itself
     todo = [(eid, g) for eid, g, skipped in plan if not skipped]
@@ -164,8 +163,7 @@ def replay_batch(
         path (MOR / initial load) then runs decode → reduce → write as
         ONE job instead of paying a full cache materialization first."""
         rows = _epoch_winners(
-            spark, [os.path.join(chunk_dir, f) for f in group],
-            image_cols, include, exclude, start_lsn=start_lsn,
+            spark, group, image_cols, include, exclude, start_lsn=start_lsn,
             start_after_gtid=start_after_gtid, on_error=on_error,
             verify_crc=verify_crc,
         )
@@ -197,7 +195,7 @@ def replay_batch(
                 ti += 1
                 fut = (
                     pool.submit(prepare, todo[ti][1])
-                    if pipeline and ti < len(todo)
+                    if ti < len(todo)
                     else None
                 )
                 stats.epochs.append(
@@ -262,12 +260,12 @@ def replay_stream(
     )
 
     def apply_batch(batch_df, batch_id: int):
-        paths = [r["path"] for r in batch_df.collect()]
-        if start_lsn is not None:
-            paths = [p for p in paths if os.path.basename(p) >= start_lsn[0]]
+        paths = _chunk_paths(
+            [r["path"] for r in batch_df.collect()], start_lsn
+        )
         if not paths:
             return
-        epoch_id = f"stream-{batch_id}-{os.path.basename(sorted(paths)[0])}"
+        epoch_id = f"stream-{batch_id}-{os.path.basename(paths[0])}"
         rows = _epoch_winners(
             spark, paths, image_cols, include, exclude,
             start_lsn=start_lsn, start_after_gtid=start_after_gtid,

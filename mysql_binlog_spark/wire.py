@@ -1599,6 +1599,13 @@ def decode_chunk(
                     nulls_ = mk_null(cnt)
                     for lst in bouts:
                         lst.extend(nulls_)
+                if p != plen:
+                    # a value cut short by its event's end still slices
+                    # (bytes slicing clamps): only the row cursor shows it
+                    raise ValueError(
+                        f"row decode desync at offset {off}: rows end at "
+                        f"{p}, event payload at {plen}"
+                    )
                 ev_pos_a(off)
                 ev_server_a(server_id)
                 ev_ts_a(ts)

@@ -80,3 +80,42 @@ def wavefront(data: bytes, image_cols: list[str], **kw):
         batch, kinds = wf.decode_chunk_vectorized(data, image_cols, **kw)
     assert kinds is not None, "chunk left the wavefront"
     return batch, kinds
+
+
+def kv_chunk(n_events: int, corrupt: str | None = None) -> bytes:
+    """A chunk of ``n_events`` one-row inserts into ``t.kv (k int,
+    s varchar)``, every ``s`` = 'hello'.  ``corrupt`` damages the last
+    row, then recomputes that frame's CRC so only the row decode can
+    tell: 'overrun' makes its VARCHAR length byte claim 7 bytes where 5
+    remain; 'utf8' makes its last VARCHAR byte 0xFF."""
+    import struct
+    import zlib
+
+    from mysql_binlog_spark.wire import (
+        TYPE_LONG,
+        TYPE_VARCHAR,
+        BinlogWriter,
+        TableSchema,
+        WireColumn,
+    )
+
+    t = TableSchema(
+        "t", "kv",
+        [WireColumn("k", TYPE_LONG, nullable=False),
+         WireColumn("s", TYPE_VARCHAR, nullable=False, meta=64)],
+        (0,), 7,
+    )
+    w = BinlogWriter(base_ts=1704067200)
+    w.write_table_map(1704067200, t)
+    for i in range(n_events):
+        w.write_rows(1704067200 + i, t, "insert", [{"k": i, "s": "hello"}])
+    start, _, size = w.frames[-1]
+    body_end = start + size - 4  # the CRC trailer follows the body
+    if corrupt == "overrun":
+        w.buf[body_end - 6] = 7  # 'hello' is the last 5 bytes
+    elif corrupt == "utf8":
+        w.buf[body_end - 1] = 0xFF
+    w.buf[body_end:body_end + 4] = struct.pack(
+        "<I", zlib.crc32(w.buf[start:body_end]) & 0xFFFFFFFF
+    )
+    return w.getvalue()

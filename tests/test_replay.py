@@ -208,8 +208,7 @@ def test_replay_never_decodes_a_healed_epoch(
 
     files = sorted(fnmatch.filter(os.listdir(chunks), CHUNK_GLOB))
     healed = files[2:4]  # the second epoch at files_per_epoch=2
-    kw = dict(include=[("app", "transcripts")], files_per_epoch=2,
-              pipeline=False)
+    kw = dict(include=[("app", "transcripts")], files_per_epoch=2)
     table = new_table()
     replay_batch(spark, chunks, table, stop_after_epochs=1, **kw)
 
@@ -263,7 +262,7 @@ def test_stopped_replay_decodes_only_the_epochs_it_applies(
     before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
     stats = replay_batch(
         spark, chunks, new_table(), include=[("app", "transcripts")],
-        files_per_epoch=1, stop_after_epochs=2, pipeline=True,
+        files_per_epoch=1, stop_after_epochs=2,
     )
     after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
     assert stats.applied == 2

@@ -129,44 +129,98 @@ def test_discovery_ignores_a_stale_sidecar(spark, sf_dir, tmp_path):
     assert discover_tables(spark, str(stale / CHUNK_GLOB)) == want
 
 
-def test_validate_chunks_reason_taxonomy(spark, tmp_path):
-    """The quarantine report's coarse reasons are deterministic classes:
-    flipped CRC byte → 'crc', mid-frame cut → 'truncated', garbage →
-    'malformed'; a healthy chunk reports ok with its row count — and
-    read_binlog(on_error='skip') decodes exactly the healthy chunks."""
+def _changelog_chunks(spark, out_dir, events_per_file=2000):
     from mysql_binlog_spark import spec
     from mysql_binlog_spark.fixtures.generator import generate_binlog_chunks
-    from mysql_binlog_spark.sources.binlog import (
-        CHUNK_GLOB,
-        read_binlog,
-        validate_chunks,
-    )
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB
 
     sf = os.environ.get("MBS_TEST_SF", "/root/testdata/sf0.001")
     spark.read.parquet(os.path.join(sf, "events.parquet")) \
         .createOrReplaceTempView("events")
     changelog = spark.sql(
         spec.changelog_sql("spark", with_duplicates=False,
-                           events_per_file=2000)
+                           events_per_file=events_per_file)
     )
+    os.makedirs(out_dir)
+    generate_binlog_chunks(changelog, out_dir)
+    return sorted(fnmatch.filter(os.listdir(out_dir), CHUNK_GLOB))
+
+
+def test_validate_chunks_reason_taxonomy(spark, tmp_path):
+    """The quarantine report's coarse reasons are deterministic classes:
+    flipped CRC byte → 'crc', mid-frame cut → 'truncated', garbage or a
+    CRC-valid chunk whose rows or values are bad → 'malformed', a
+    directory → 'unreadable'; a healthy chunk reports ok with its row
+    count.  The report is read_binlog(on_error='skip')'s own verdict:
+    per chunk, its (ok, n_rows) is the rows skip emits for that
+    log_file.  An unreadable chunk fails read_binlog in both modes."""
+    from conftest import kv_chunk
+
+    from mysql_binlog_spark.sources.binlog import validate_chunks
+
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    generate_binlog_chunks(changelog, src)
-    names = sorted(fnmatch.filter(os.listdir(src), CHUNK_GLOB))
+    names = _changelog_chunks(spark, src)
     good = os.path.join(src, names[0])
     data = open(good, "rb").read()
-    crc_bad = str(tmp_path / "binlog.000090")
-    open(crc_bad, "wb").write(data[:-1] + bytes([data[-1] ^ 0xFF]))
-    trunc = str(tmp_path / "binlog.000091")
-    open(trunc, "wb").write(data[: len(data) - 7])  # cut inside last frame
-    garbage = str(tmp_path / "binlog.000092")
-    open(garbage, "wb").write(b"\x00" * 64)
-    paths = [good, crc_bad, trunc, garbage]
+    bad = {
+        "binlog.000090": data[:-1] + bytes([data[-1] ^ 0xFF]),
+        "binlog.000091": data[: len(data) - 7],  # cut inside last frame
+        "binlog.000092": b"\x00" * 64,
+        "binlog.000094": kv_chunk(10, "overrun"),  # value-loop path
+        "binlog.000095": kv_chunk(300, "overrun"),  # wavefront path
+        "binlog.000096": kv_chunk(10, "utf8"),
+        "binlog.000097": kv_chunk(300, "utf8"),
+    }
+    paths = [good]
+    for name, body in bad.items():
+        paths.append(str(tmp_path / name))
+        open(paths[-1], "wb").write(body)
     rep = {r.chunk: (r.ok, r.n_rows, r.reason)
            for r in validate_chunks(spark, paths).collect()}
     assert rep[names[0]][0] and rep[names[0]][1] > 0
     assert rep["binlog.000090"] == (False, 0, "crc")
     assert rep["binlog.000091"] == (False, 0, "truncated")
     assert rep["binlog.000092"][0] is False  # any coarse class is fine
-    n = read_binlog(spark, paths, verify_crc=True, on_error="skip").count()
-    assert n == rep[names[0]][1]
+    for name in ("binlog.000094", "binlog.000095", "binlog.000096",
+                 "binlog.000097"):
+        assert rep[name] == (False, 0, "malformed"), (name, rep[name])
+    skipped = read_binlog(spark, paths, verify_crc=True, on_error="skip")
+    emitted = {r.log_file: r["count"]
+               for r in skipped.groupBy("log_file").count().collect()}
+    assert {c: n for c, (ok, n, _) in rep.items() if ok} == emitted
+
+    unreadable = tmp_path / "binlog.000093"
+    unreadable.mkdir()  # open() fails with an OSError, even as root
+    rep = {r.chunk: (r.ok, r.n_rows, r.reason)
+           for r in validate_chunks(spark, paths + [str(unreadable)])
+           .collect()}
+    assert rep["binlog.000093"] == (False, 0, "unreadable")
+    for mode in ("raise", "skip"):
+        with pytest.raises(Exception):
+            read_binlog(spark, paths + [str(unreadable)], verify_crc=True,
+                        on_error=mode).count()
+
+
+def test_start_lsn_prunes_discovery(spark, tmp_path, monkeypatch):
+    """read_binlog(image_cols=None, start_lsn=(last chunk, 4)) discovers
+    tables over the chunks it decodes: exactly the last one."""
+    from mysql_binlog_spark.sources import binlog
+    from mysql_binlog_spark.sources.binlog import CHUNK_GLOB
+
+    chunks = str(tmp_path / "src")
+    names = _changelog_chunks(spark, chunks, events_per_file=300)
+    assert len(names) > 1
+    seen = []
+    real = binlog.discover_tables
+
+    def recording(spark_, chunk_glob, *a, **k):
+        seen.append(sorted(os.path.basename(p)
+                           for p in binlog._chunk_paths(chunk_glob)))
+        return real(spark_, chunk_glob, *a, **k)
+
+    monkeypatch.setattr(binlog, "discover_tables", recording)
+    df = read_binlog(spark, os.path.join(chunks, CHUNK_GLOB),
+                     start_lsn=(names[-1], 4))
+    assert seen == [[names[-1]]]
+    assert {r.log_file for r in df.select("log_file").distinct().collect()} \
+        == {names[-1]}

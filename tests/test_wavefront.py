@@ -8,7 +8,7 @@ hand small chunks to the value loops without changing the output."""
 from __future__ import annotations
 
 import pytest
-from conftest import wavefront
+from conftest import kv_chunk, wavefront
 
 from mysql_binlog_spark.sources import wavefront as wf
 from mysql_binlog_spark.sources.binlog import image_arrays, spark_type_of
@@ -212,6 +212,19 @@ def test_wavefront_desync_raises():
     data[first + 30 : first + 40] = bytes([250] * 10)
     with pytest.raises((ValueError, IndexError, AssertionError)):
         wavefront(bytes(data), UNION, before_mode="full")
+
+
+@pytest.mark.parametrize("n_events", [10, 300])
+def test_row_section_overrunning_its_event_raises(n_events):
+    """The last row's VARCHAR length claims 7 bytes where 5 remain, CRC
+    recomputed: both paths reject the chunk — the value loops by their
+    row cursor, not by a value sliced short to 'hello'."""
+    data = kv_chunk(n_events, "overrun")
+    with pytest.raises(ValueError):
+        decode_chunk(data, verify_crc=True)
+    with pytest.raises(ValueError):
+        decode_chunk_vectorized(data, ["k", "s"], verify_crc=True)
+    assert len(decode_chunk(kv_chunk(n_events), verify_crc=True)) == n_events
 
 
 # ------------------------------------------------- property-based parity
